@@ -69,8 +69,7 @@ object DurableBench {
         "local" -> List.empty[Double], "durable" -> List.empty[Double])
       var leftFiles = 0; var leftBytes = 0L
       for (rep <- 1 to reps; mode <- Seq("local", "durable")) {
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft_dur_$name").toString
+        val dir = graft.streaming.StreamHarness.tempDir(s"dur_$name")
         val cp = if (mode == "durable") Some(dir) else None
         val t0 = System.nanoTime()
         build(cp).write.format("noop").mode("overwrite").save()

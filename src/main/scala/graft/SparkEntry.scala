@@ -5,7 +5,7 @@ import graft.functions.GraftFunctions
 import graft.model._
 import graft.operators.{Cdc, CorpusStats, Dedup, Events, Governance, Graph, Layout, Multimodal, Similarity, TextAnalysis}
 import graft.pipeline.MigrationPlanner
-import graft.streaming.{StreamingCdcMerge, StreamingClassifierEval, StreamingCuration, StreamingDpNbRelease, StreamingDrift, StreamingEntityResolution, StreamingFrontier, StreamingHeavyHitters, StreamingLrTrain, StreamingMigration, StreamingNbTrain, StreamingNearDup, StreamingRedirects, StreamingRetrievalEval, StreamingSceneSegments, StreamingSemanticScreen, StreamingSiteTemplate, StreamingTokenBudget, StreamingWarcDedup, StreamingWebGraph, StreamingWinnow}
+import graft.streaming.{StreamingCdcMerge, StreamingClassifierEval, StreamingCuration, StreamingDpNbRelease, StreamingDrift, StreamingEntityResolution, StreamingFrontier, StreamingHeavyHitters, StreamingLrTrain, StreamingMigration, StreamingNbTrain, StreamingNearDup, StreamingRedirects, StreamingRetrievalEval, StreamingSceneSegments, StreamingSemanticScreen, StreamingSiteTemplate, StreamHarness, StreamingTokenBudget, StreamingWarcDedup, StreamingWebGraph, StreamingWinnow}
 import graft.schema.Reconciler
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -260,18 +260,15 @@ object SparkEntry {
     // limiter), result read back from the streamed target — so the driver's
     // oracle checks batch/stream parity
     "q17_streaming_migration" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q17").toString
+      val tmp = StreamHarness.tempDir("q17")
       val scfg = MigrationConfig(TableRef(path = dir), TableRef(path = s"$tmp/tgt"), Nil)
       val t = TableMigrationDef("events",
         filters = Seq(FieldValueFilter("row.event_type != 'click'")),
         calculatedColumns = Seq(CalculatedColumn("vx2", "row.value * 2.0")),
         simulateOnly = false)
       val q = StreamingMigration.start(s, scfg, t, s"$tmp/cp",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow(), maxFilesPerTrigger = 1)
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException("q17 stream did not drain in 180s")
-      }
+        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      StreamHarness.drain("q17", q)
       Tables.load(s, TableRef(path = s"$tmp/tgt"), "events")
         .select("event_id", "event_type", "value", "vx2")
     }),
@@ -279,7 +276,7 @@ object SparkEntry {
     // O18 parallel execution: two table migrations run as concurrent Spark
     // jobs; result = per-table row accounting from the written targets
     "q18_parallel_exec" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q18").toString
+      val tmp = StreamHarness.tempDir("q18")
       val tgt = TableRef(path = s"$tmp/tgt")
       val pcfg = MigrationConfig(TableRef(path = dir), tgt, Seq(
         TableMigrationDef("region", simulateOnly = false),
@@ -914,22 +911,16 @@ object SparkEntry {
     // publishes the accumulated top-20 — drained, the monitor must equal
     // the batch t16 report over everything streamed (shared ranking code)
     "e08_streaming_heavy_hitters" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e08").toString
+      val tmp = StreamHarness.tempDir("e08")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       docs.filter(col("doc_id") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       docs.filter(col("doc_id") % 2 === 1)
         .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
       val q = StreamingHeavyHitters.start(s, src, "text",
         s"$tmp/counts", s"$tmp/top", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e08 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e08", q)
       s.read.parquet(s"$tmp/top").select("rank", "token", "n")
     }),
 
@@ -940,22 +931,16 @@ object SparkEntry {
     // range-partitioned parallel prefix sum, never a single-task window
     "e09_streaming_token_budget" -> ((s, dir) => {
       val budget = 15000L
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e09").toString
+      val tmp = StreamHarness.tempDir("e09")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       (0 until 3).foreach { b =>
         docs.filter(pmod(col("doc_id"), lit(3)) === b)
           .coalesce(1).write.parquet(s"$tmp/stream/b$b")
       }
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
       val q = StreamingTokenBudget.start(s, src, "doc_id", "text", budget,
         s"$tmp/state", s"$tmp/out", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e09 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e09", q)
       s.read.parquet(s"$tmp/out/batch=*")
         .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))
     }),
@@ -967,7 +952,7 @@ object SparkEntry {
     // list and re-ranks at cosine 1.0, so ANN recall is structural, not
     // probabilistic); novel vectors sit far below the 0.999 bar
     "e10_streaming_semantic_screen" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e10").toString
+      val tmp = StreamHarness.tempDir("e10")
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val corpus = emb.filter(col("vec_id") >= 100)
       StreamingSemanticScreen.seed(corpus, "vec_id", "embedding",
@@ -989,17 +974,12 @@ object SparkEntry {
           emb.filter(col("vec_id") >= 100 && col("vec_id") % 40 === 20)
             .select((col("vec_id") + 2000000).as("vec_id"), col("embedding")))
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "vec_id BIGINT, embedding ARRAY<FLOAT>")
       val q = StreamingSemanticScreen.start(s, src, "vec_id", "embedding",
         s"$tmp/index", s"$tmp/vecs", s"$tmp/pairs", s"$tmp/cp",
         threshold = 0.999)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e10 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e10", q)
       s.read.parquet(s"$tmp/pairs")
         .select(col("idA"), col("idB"), round(col("cosine"), 6).as("cosine"))
     }),
@@ -1009,7 +989,7 @@ object SparkEntry {
     // each batch counts its never-seen tokens against the pre-batch
     // state and appends them batch-keyed (exactly-once)
     "e13_streaming_vocab_novelty" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e13").toString
+      val tmp = StreamHarness.tempDir("e13")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       graft.streaming.StreamingVocabNovelty.seedTokens(
         docs.filter(col("doc_id") % 3 === 0), "text", s"$tmp/tokens",
@@ -1018,16 +998,10 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       docs.filter(col("doc_id") % 3 === 2)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
       val q = graft.streaming.StreamingVocabNovelty.start(s, src, "text",
         s"$tmp/tokens", s"$tmp/report", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e13 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e13", q)
       graft.streaming.StreamingVocabNovelty.report(s, s"$tmp/report")
     }),
 
@@ -1039,18 +1013,16 @@ object SparkEntry {
     // count(*) − count(distinct key))
     "e12_streaming_dq" -> ((s, dir) => {
       import graft.operators.DqAudit.{ForeignKey, NotNull, RangeRule, UniqueKey}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e12").toString
+      val tmp = StreamHarness.tempDir("e12")
       val li = t(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
       li.filter(col("l_orderkey") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       li.filter(col("l_orderkey") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("l_orderkey BIGINT, l_linenumber BIGINT, " +
+      val src = StreamHarness.fileStream(s, tmp,
+        "l_orderkey BIGINT, l_linenumber BIGINT, " +
           "l_partkey BIGINT, l_quantity DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
       val q = graft.streaming.StreamingDqMonitor.start(s, src, "lineitem",
         Map("part" -> t(s, dir, "part")),
         Seq(
@@ -1061,10 +1033,7 @@ object SparkEntry {
             "part", "p_partkey"),
           UniqueKey("partkey_unique", "lineitem", Seq("l_partkey"))),
         s"$tmp/counts", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e12 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e12", q)
       graft.streaming.StreamingDqMonitor.report(s, s"$tmp/counts")
     }),
 
@@ -1073,7 +1042,7 @@ object SparkEntry {
     // per-user chains in the LSM state store (delta-only writes).
     // Drained report == the batch funnel over everything streamed
     "e14_streaming_funnel" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e14").toString
+      val tmp = StreamHarness.tempDir("e14")
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           expr("ts div 1000").as("ts"))
@@ -1085,17 +1054,12 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("ts") >= mid)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("user_id BIGINT, event_type STRING, ts BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "user_id BIGINT, event_type STRING, ts BIGINT")
       val q = graft.streaming.StreamingFunnel.start(s, src, "user_id",
         "event_type", "ts", Seq("view", "click", "purchase"),
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e14 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e14", q)
       graft.streaming.StreamingFunnel.report(s, s"$tmp/state", "user_id",
         Seq("view", "click", "purchase"))
     }),
@@ -1106,22 +1070,16 @@ object SparkEntry {
     // candidate-pruned verify) and equals the full-scan contains truth
     "e15_streaming_substring_index" -> ((s, dir) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e15").toString
+      val tmp = StreamHarness.tempDir("e15")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       docs.filter(col("doc_id") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       docs.filter(col("doc_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
       val q = graft.streaming.StreamingSubstringIndex.start(s, src,
         "doc_id", "text", s"$tmp/index", s"$tmp/docs", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e15 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e15", q)
       val p1 = docs.filter(col("doc_id") === 1)
         .select(expr("substring(text, 6, 10)")).head().getString(0)
       val pats = Seq(p1, "zzqqxxneverthere", "ab").toDF("pattern")
@@ -1135,23 +1093,17 @@ object SparkEntry {
     // and folds the edges into the persisted cluster map with the c13
     // contracted-graph machinery. Drained map == the batch ER closure
     "e11_streaming_entity_resolution" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e11").toString
+      val tmp = StreamHarness.tempDir("e11")
       val parts = t(s, dir, "part").select("p_partkey", "p_name")
       val mid = 1000L
       parts.filter(col("p_partkey") < mid)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       parts.filter(col("p_partkey") >= mid)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("p_partkey BIGINT, p_name STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "p_partkey BIGINT, p_name STRING")
       val q = StreamingEntityResolution.start(s, src, "p_partkey", "p_name",
         s"$tmp/names", s"$tmp/map", s"$tmp/cp", maxDist = 1)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e11 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e11", q)
       parts
         .join(StreamingEntityResolution.resolvedMap(s, s"$tmp/names",
           s"$tmp/map").withColumnRenamed("name", "p_name"), "p_name")
@@ -1485,7 +1437,7 @@ object SparkEntry {
     // the query exercises the streaming posture for real: the broadcast
     // touched-bucket restriction keeps the corpus index un-shuffled
     "d09_streaming_neardup" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_d09").toString
+      val tmp = StreamHarness.tempDir("d09")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       StreamingNearDup.seedIndex(docs, "doc_id", "text",
         s"$tmp/index", s"$tmp/docs")
@@ -1496,19 +1448,11 @@ object SparkEntry {
       docs.filter(col("doc_id") % 10 === 5)
         .select((col("doc_id") + 2000000).as("doc_id"), stripped)
         .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
       val q = StreamingNearDup.start(s, src, "doc_id", "text",
         s"$tmp/index", s"$tmp/docs", s"$tmp/pairs", s"$tmp/cp",
         threshold = 0.7)
-      // a timed-out stream must FAIL here, not fall through to read a
-      // half-written pair set (and keep appending during later queries)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("d09 stream did not drain in 300s")
-      }
+StreamHarness.drain("d09", q)
       s.read.parquet(s"$tmp/pairs")
         .select(col("idA"), col("idB"), round(col("jaccard"), 4).as("jaccard"))
     }),
@@ -1521,7 +1465,7 @@ object SparkEntry {
     // survives is decided by batch order (earliest batch, then min id) —
     // the oracle replays that order relationally
     "e05_streaming_curation" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e05").toString
+      val tmp = StreamHarness.tempDir("e05")
       val docs = t(s, dir, "documents").select(
         col("doc_id"), col("text"), col("lang"))
       val evalDocs = docs.filter(col("doc_id") % 10 === 3)
@@ -1533,18 +1477,11 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       docs.filter(col("doc_id") % 3 === 2)
         .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING, lang STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, text STRING, lang STRING")
       val q = StreamingCuration.start(s, src, evalDocs, "doc_id", "text",
         "lang", s"$tmp/fp", s"$tmp/kept", s"$tmp/cp")
-      // a timed-out stream must FAIL here, not fall through to read a
-      // half-written survivor set (the d09 rule)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e05 stream did not drain in 300s")
-      }
+StreamHarness.drain("e05", q)
       s.read.parquet(s"$tmp/kept").select("doc_id", "lang", "quality")
     }),
 
@@ -1556,7 +1493,7 @@ object SparkEntry {
     // family. Gated VERBATIM by e05's oracle: the declared pipeline and
     // the code-built screen provably cannot drift
     "e35_streaming_config_curation" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e35").toString
+      val tmp = StreamHarness.tempDir("e35")
       val docs = t(s, dir, "documents").select(
         col("doc_id"), col("text"), col("lang"))
       val evalDocs = docs.filter(col("doc_id") % 10 === 3)
@@ -1568,10 +1505,8 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       docs.filter(col("doc_id") % 3 === 2)
         .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING, lang STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, text STRING, lang STRING")
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-curation
@@ -1590,10 +1525,7 @@ object SparkEntry {
       val q = StreamingCuration.startFromConfig(s, src, cfg,
         Map("benchmark" -> evalDocs), "doc_id", "text", "lang",
         s"$tmp/fp", s"$tmp/kept", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e35 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e35", q)
       s.read.parquet(s"$tmp/kept").select("doc_id", "lang", "quality")
     }),
 
@@ -1603,7 +1535,7 @@ object SparkEntry {
     // equal the batch psiDrift of the full streamed set — same shared
     // arithmetic, same oracle shape as c09
     "e06_streaming_drift" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e06").toString
+      val tmp = StreamHarness.tempDir("e06")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       val ref = docs.filter(col("doc_id") % 3 === 0)
         .select(TextAnalysis.qualityScore(col("text")).as("quality"))
@@ -1614,17 +1546,11 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       streamed.filter(col("doc_id") % 3 === 2)
         .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
         .select(TextAnalysis.qualityScore(col("text")).as("quality"))
       val q = StreamingDrift.start(s, src, ref, "quality",
         s"$tmp/counts", s"$tmp/psi", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e06 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e06", q)
       s.read.parquet(s"$tmp/psi")
         .select("bucket", "n_a", "n_b", "frac_a", "frac_b", "psi_term")
     }),
@@ -2166,7 +2092,7 @@ object SparkEntry {
     // persist/load/append round trip exactly; in-query-vs-loaded result
     // equality is additionally spec-pinned
     "s22_ann_index_persist" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_s22").toString
+      val tmp = StreamHarness.tempDir("s22")
       val emb = t(s, dir, "embeddings")
       Similarity.buildIvfPqIndex(emb.filter(col("vec_id") < 400),
         "vec_id", "embedding", tmp, dim = 64,
@@ -2996,23 +2922,17 @@ object SparkEntry {
     // tail — drained == batch v12, same oracle verbatim. One release
     // per seed (the PRIVATE state/one-shot-release contract)
     "e42_streaming_dp_nb_release" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e42").toString
+      val tmp = StreamHarness.tempDir("e42")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         concat(col("text"), lit(" mk"), col("lang")).as("text"))
       for (r <- 0 until 3)
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
           .select("lang", "text")
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "lang STRING, text STRING")
       val q = StreamingDpNbRelease.start(s, src, "text", "lang",
         maxTokensPerDoc = 30, s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e42 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e42", q)
       StreamingDpNbRelease.currentRelease(s, s"$tmp/state", "lang",
         maxTokensPerDoc = 30, epsilon = 5.0, threshold = 10.0,
         seed = "v12:")
@@ -3023,23 +2943,17 @@ object SparkEntry {
     // application IS the batch operator; drained scenes == batch m13
     // under any batching, same oracle verbatim; batch-keyed exactly-once
     "e43_streaming_scene_segments" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e43").toString
+      val tmp = StreamHarness.tempDir("e43")
       val media = t(s, dir, "documents").select(
         col("doc_id").as("media_id"),
         encode(col("text"), "UTF-8").as("content"))
       for (r <- 0 until 3)
         media.filter(pmod(col("media_id"), lit(3)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("media_id BIGINT, content BINARY")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "media_id BIGINT, content BINARY")
       val q = StreamingSceneSegments.start(s, src, "media_id", "content",
         s"$tmp/scenes", s"$tmp/cp", windowBytes = 16, cutThreshold = 120)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e43 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e43", q)
       StreamingSceneSegments.scenes(s, s"$tmp/scenes")
     }),
 
@@ -3316,21 +3230,15 @@ object SparkEntry {
     // union is order-free, drained == batch f14 under any sharding,
     // same oracle verbatim
     "e52_streaming_digest_dedup" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e52").toString
+      val tmp = StreamHarness.tempDir("e52")
       val blobs = f14Blobs(t(s, dir, "documents"))
       for (r <- 0 until 2)
         blobs.filter(pmod(col("warc_id"), lit(2)) === (1 - r))
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("warc_id BIGINT, warc STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "warc_id BIGINT, warc STRING")
       val q = StreamingWarcDedup.start(s, src, "warc_id", "warc",
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e52 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e52", q)
       StreamingWarcDedup.currentDedup(s, s"$tmp/state")
     }),
 
@@ -3366,22 +3274,16 @@ object SparkEntry {
     // a pure function of the edge SET, which unions order-free;
     // drained == batch t73, same oracle verbatim
     "e53_streaming_redirects" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e53").toString
+      val tmp = StreamHarness.tempDir("e53")
       val pieces = t73Pieces(t(s, dir, "documents"))
       t73Pack(pieces.filter(col("__seq") === 0))
         .coalesce(1).write.parquet(s"$tmp/stream/b0")
       t73Pack(pieces.filter(col("__seq") >= 1))
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      val src = s.readStream
-        .schema("warc_id BIGINT, warc STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "warc_id BIGINT, warc STRING")
       val q = StreamingRedirects.start(s, src, "warc_id", "warc",
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e53 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e53", q)
       StreamingRedirects.currentCollapse(s, s"$tmp/state", maxHops = 5)
     }),
 
@@ -3560,23 +3462,17 @@ object SparkEntry {
     // batch 1's links; drained == batch g23 under any batching, same
     // oracle verbatim
     "e50_streaming_frontier" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e50").toString
+      val tmp = StreamHarness.tempDir("e50")
       val docs = t(s, dir, "documents")
       val pages = docs.select(col("doc_id"),
         frontierPage(col("doc_id"), col("text")).as("html"))
       for (r <- 0 until 2)
         pages.filter(pmod(col("doc_id"), lit(2)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("doc_id BIGINT, html STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, html STRING")
       val q = StreamingFrontier.start(s, src, "doc_id", "html",
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e50 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e50", q)
       val cands = graft.operators.Html.outlinks(pages, "doc_id", "html")
         .select(TextAnalysis.canonicalUrl(col("url")).as("url"))
       StreamingFrontier.currentSchedule(s, s"$tmp/state",
@@ -3629,23 +3525,17 @@ object SparkEntry {
     // scheduleWithSitemaps — drained == batch g24 under any batching,
     // same oracle verbatim
     "e51_streaming_sitemap_frontier" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e51").toString
+      val tmp = StreamHarness.tempDir("e51")
       val docs = t(s, dir, "documents")
       val pages = docs.select(col("doc_id"),
         frontierPage(col("doc_id"), col("text")).as("html"))
       for (r <- 0 until 2)
         pages.filter(pmod(col("doc_id"), lit(2)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("doc_id BIGINT, html STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, html STRING")
       val q = StreamingFrontier.start(s, src, "doc_id", "html",
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e51 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e51", q)
       val cands = graft.operators.Html.outlinks(pages, "doc_id", "html")
         .select(TextAnalysis.canonicalUrl(col("url")).as("url"))
       StreamingFrontier.currentScheduleWithSitemaps(s, s"$tmp/state",
@@ -3843,7 +3733,7 @@ object SparkEntry {
     // pairs spanning batches survive — the oracle replays that scope
     // EXACTLY (pairs restricted to equal batch id)
     "e44_streaming_config_neardup" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e44").toString
+      val tmp = StreamHarness.tempDir("e44")
       val docs = t(s, dir, "documents").select("doc_id", "text", "lang")
       val corpus = docs.unionByName(docs.select(
         (col("doc_id") + 1000000).as("doc_id"),
@@ -3853,10 +3743,8 @@ object SparkEntry {
       for (r <- 0 until 2)
         corpus.filter(pmod(col("doc_id"), lit(2)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING, lang STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, text STRING, lang STRING")
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-neardup-screen
@@ -3872,10 +3760,7 @@ object SparkEntry {
           |""".stripMargin)
       val q = StreamingCuration.startFromConfig(s, src, cfg, Map.empty,
         "doc_id", "text", "lang", s"$tmp/fp", s"$tmp/kept", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e44 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e44", q)
       s.read.parquet(s"$tmp/kept").select("doc_id", "lang", "quality")
     }),
 
@@ -3886,23 +3771,18 @@ object SparkEntry {
     // on a late page still drops from the EARLY pages; drained == batch
     // t64 under any batching, same oracle verbatim
     "e47_streaming_site_template" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e47").toString
+      val tmp = StreamHarness.tempDir("e47")
       val pages = t(s, dir, "documents").select(col("doc_id"),
         htmlSitePage(col("doc_id"), col("text")).as("html"),
         col("source"))
       for (r <- 0 until 2)
         pages.filter(pmod(col("doc_id"), lit(2)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("doc_id BIGINT, html STRING, source STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, html STRING, source STRING")
       val q = StreamingSiteTemplate.start(s, src, "doc_id", "html",
         "source", s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e47 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e47", q)
       StreamingSiteTemplate.currentExtract(s, s"$tmp/state", "doc_id",
         minRepeats = 5)
     }),
@@ -3915,7 +3795,7 @@ object SparkEntry {
     // batch gains rank from links that arrive in the last; drained ==
     // batch g22 under any batching, same oracle verbatim
     "e49_streaming_web_graph" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e49").toString
+      val tmp = StreamHarness.tempDir("e49")
       val pages = t(s, dir, "documents").select(col("doc_id"),
         htmlLinkPage(col("doc_id"), col("text")).as("html"),
         concat(lit("http://example.com/doc/"),
@@ -3923,16 +3803,11 @@ object SparkEntry {
       for (r <- 0 until 2)
         pages.filter(pmod(col("doc_id"), lit(2)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("doc_id BIGINT, html STRING, base_uri STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, html STRING, base_uri STRING")
       val q = StreamingWebGraph.start(s, src, "doc_id", "html",
         "base_uri", s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e49 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e49", q)
       StreamingWebGraph.currentRank(s, s"$tmp/state", "doc_id",
           iters = 3, damping = 0.85)
         .select(col("doc_id"), (round(col("score"), 8) + lit(0.0)).as("score"))
@@ -3950,7 +3825,7 @@ object SparkEntry {
     // page body that would PASS the quality gate if mis-routed
     "e48_streaming_warc_ingest" -> ((s, dir) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e48").toString
+      val tmp = StreamHarness.tempDir("e48")
       val docs = t(s, dir, "documents")
       def http(status: String, ctype: String,
           body: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -4005,10 +3880,7 @@ object SparkEntry {
       for (r <- 0 until 2)
         blobs.filter(pmod(col("warc_id"), lit(2)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("warc_id BIGINT, warc BINARY")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "warc_id BIGINT, warc BINARY")
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-warc-ingest
@@ -4026,10 +3898,7 @@ object SparkEntry {
           |""".stripMargin)
       val q = StreamingCuration.startFromConfig(s, src, cfg, Map.empty,
         "doc_id", "text", "lang", s"$tmp/fp", s"$tmp/kept", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e48 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e48", q)
       s.read.parquet(s"$tmp/kept").select("doc_id", "lang", "quality")
     }),
 
@@ -4037,7 +3906,7 @@ object SparkEntry {
     // INGEST (decode-once posture) then gate — both stages per-document
     // map-only, so drained == batch under ANY batching
     "e46_streaming_config_extract" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e46").toString
+      val tmp = StreamHarness.tempDir("e46")
       val pages = t(s, dir, "documents").select(col("doc_id"),
         htmlWrap(col("doc_id"), col("text")).as("html"), col("lang"))
       StreamingCuration.seedFingerprints(
@@ -4046,10 +3915,8 @@ object SparkEntry {
       for (r <- 0 until 2)
         pages.filter(pmod(col("doc_id"), lit(2)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("doc_id BIGINT, html STRING, lang STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, html STRING, lang STRING")
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-extract-gate
@@ -4063,10 +3930,7 @@ object SparkEntry {
           |""".stripMargin)
       val q = StreamingCuration.startFromConfig(s, src, cfg, Map.empty,
         "doc_id", "text", "lang", s"$tmp/fp", s"$tmp/kept", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e46 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e46", q)
       s.read.parquet(s"$tmp/kept").select("doc_id", "lang", "quality")
     }),
 
@@ -4075,7 +3939,7 @@ object SparkEntry {
     // ANY batching (quality is computed over the REDACTED text, making
     // the stage's effect observable in the gate's membership)
     "e45_streaming_config_pii" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e45").toString
+      val tmp = StreamHarness.tempDir("e45")
       val docs = t(s, dir, "documents").select(col("doc_id"),
         concat(
           col("text"),
@@ -4089,10 +3953,8 @@ object SparkEntry {
       for (r <- 0 until 2)
         docs.filter(pmod(col("doc_id"), lit(2)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING, lang STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, text STRING, lang STRING")
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-pii-gate
@@ -4106,10 +3968,7 @@ object SparkEntry {
           |""".stripMargin)
       val q = StreamingCuration.startFromConfig(s, src, cfg, Map.empty,
         "doc_id", "text", "lang", s"$tmp/fp", s"$tmp/kept", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e45 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e45", q)
       s.read.parquet(s"$tmp/kept").select("doc_id", "lang", "quality")
     }),
 
@@ -4257,7 +4116,7 @@ object SparkEntry {
     // ingest — cumulative counts latest-wins + append-only membership
     // facts; a new re-identifiable class surfaces the batch it appears
     "e24_streaming_k_anonymity" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e24").toString
+      val tmp = StreamHarness.tempDir("e24")
       val ev = t(s, dir, "events").select(
         col("event_id"), col("event_type"),
         expr("((ts div 1000) div 3600000000) % 24").as("hour_of_day"),
@@ -4267,19 +4126,14 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("event_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
+      val src = StreamHarness.fileStream(s, tmp,
+        "event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
           "value_bucket BIGINT, user_id BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
       val q = graft.streaming.StreamingKAnonymity.start(s, src,
         Seq("event_type", "hour_of_day", "value_bucket"), "user_id",
         k = 5L, l = 3L, s"$tmp/pairs", s"$tmp/counts", s"$tmp/report",
         s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e24 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e24", q)
       graft.streaming.StreamingKAnonymity.report(s, s"$tmp/report",
         Seq("event_type", "hour_of_day", "value_bucket"))
     }),
@@ -4290,7 +4144,7 @@ object SparkEntry {
     // recomputes ALL classes from final state through the SHARED v04
     // arithmetic — drained report == v04 by construction
     "e31_streaming_t_closeness" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e31").toString
+      val tmp = StreamHarness.tempDir("e31")
       val ev = t(s, dir, "events").select(
         col("event_id"), col("event_type"),
         expr("((ts div 1000) div 3600000000) % 24").as("hour_of_day"),
@@ -4299,19 +4153,14 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("event_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
+      val src = StreamHarness.fileStream(s, tmp,
+        "event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
           "value_bucket BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
       val q = graft.streaming.StreamingTCloseness.start(s, src,
         Seq("hour_of_day", "value_bucket"), "event_type", t = 0.2,
         ordered = false, s"$tmp/vals", s"$tmp/global", s"$tmp/report",
         s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e31 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e31", q)
       graft.streaming.StreamingTCloseness.report(s, s"$tmp/vals",
         s"$tmp/global", Seq("hour_of_day", "value_bucket"), t = 0.2)
     }),
@@ -4320,7 +4169,7 @@ object SparkEntry {
     // with the v05 configuration — same stores, same shared arithmetic,
     // the cumulative-difference EMD over the value-bucket grid
     "e32_streaming_t_closeness_ordered" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e32").toString
+      val tmp = StreamHarness.tempDir("e32")
       val ev = t(s, dir, "events").select(
         col("event_id"), col("event_type"),
         expr("((ts div 1000) div 3600000000) % 24").as("hour_of_day"),
@@ -4329,19 +4178,14 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("event_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
+      val src = StreamHarness.fileStream(s, tmp,
+        "event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
           "value_bucket BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
       val q = graft.streaming.StreamingTCloseness.start(s, src,
         Seq("event_type", "hour_of_day"), "value_bucket", t = 0.15,
         ordered = true, s"$tmp/vals", s"$tmp/global", s"$tmp/report",
         s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e32 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e32", q)
       graft.streaming.StreamingTCloseness.report(s, s"$tmp/vals",
         s"$tmp/global", Seq("event_type", "hour_of_day"), t = 0.15,
         ordered = true)
@@ -4351,23 +4195,17 @@ object SparkEntry {
     // ingest — chunk-key state is append-only facts, emissions are
     // per-batch deltas (pure sums, replay-proof)
     "e23_streaming_chunk_dedup" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e23").toString
+      val tmp = StreamHarness.tempDir("e23")
       val media = Multimodal.fromText(t(s, dir, "documents"),
         "doc_id", "text", "txt").select("media_id", "content")
       media.filter(col("media_id") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       media.filter(col("media_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("media_id BIGINT, content BINARY")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "media_id BIGINT, content BINARY")
       val q = graft.streaming.StreamingChunkDedup.start(s, src,
         "media_id", "content", s"$tmp/chunks", s"$tmp/report", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e23 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e23", q)
       graft.streaming.StreamingChunkDedup.report(s, s"$tmp/report")
     }),
 
@@ -4379,7 +4217,7 @@ object SparkEntry {
     // cumulative counts through the SHARED batch-eval code, so the
     // drained emission equals t48 + t42 over everything streamed
     "e25_streaming_pr_drift" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e25").toString
+      val tmp = StreamHarness.tempDir("e25")
       val scored = t(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.qualityScore(col("text")).as("quality"),
         (col("lang") === "en").cast("int").as("y"))
@@ -4387,15 +4225,10 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       scored.filter(col("doc_id") % 2 === 1).select("quality", "y")
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream.schema("quality DOUBLE, y INT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "quality DOUBLE, y INT")
       val q = graft.streaming.StreamingPrDrift.start(s, src, "quality", "y",
         s"$tmp/state", s"$tmp/report", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e25 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e25", q)
       graft.streaming.StreamingPrDrift.calibrationReport(s, s"$tmp/report")
         .crossJoin(
           graft.streaming.StreamingPrDrift.prReport(s, s"$tmp/report")
@@ -4409,22 +4242,17 @@ object SparkEntry {
     // the full history — the batch split deliberately violates time
     // order to prove the merge needs no ordering contract
     "e26_streaming_survival" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e26").toString
+      val tmp = StreamHarness.tempDir("e26")
       val ev = t(s, dir, "events")
         .select(col("user_id"), expr("ts div 1000").as("ts_us"))
       ev.filter(col("ts_us") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("ts_us") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream.schema("user_id BIGINT, ts_us BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "user_id BIGINT, ts_us BIGINT")
       val q = graft.streaming.StreamingSurvival.start(s, src, "user_id",
         "ts_us", s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e26 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e26", q)
       graft.streaming.StreamingSurvival.report(s, s"$tmp/state",
         censorHorizon = 43200000000L)
     }),
@@ -4433,7 +4261,7 @@ object SparkEntry {
     // (a REAL cross-batch boundary — users straddle the cut and their
     // boundary pairs bridge through per-user state), drained == g18
     "e28_streaming_transition_entropy" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e28").toString
+      val tmp = StreamHarness.tempDir("e28")
       val ev = t(s, dir, "events").select(col("user_id"), col("event_type"),
         col("event_id"), expr("ts div 1000").as("ts_us"))
       val Array(lo, hi) = ev.agg(min(col("ts_us")), max(col("ts_us")))
@@ -4443,17 +4271,12 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("ts_us") > mid)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("user_id BIGINT, event_type STRING, event_id BIGINT, ts_us BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "user_id BIGINT, event_type STRING, event_id BIGINT, ts_us BIGINT")
       val q = graft.streaming.StreamingTransitionEntropy.start(s, src,
         "user_id", "event_type", "ts_us", "event_id", s"$tmp/state",
         s"$tmp/report", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e28 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e28", q)
       graft.streaming.StreamingTransitionEntropy.report(s, s"$tmp/report")
     }),
 
@@ -4462,7 +4285,7 @@ object SparkEntry {
     // the split is a ts cut, never an id parity) — journeys bridge the
     // boundary through the persisted user state; drained report == g20
     "e30_streaming_markov_attribution" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e30").toString
+      val tmp = StreamHarness.tempDir("e30")
       val ev = t(s, dir, "events").withColumn("ts_us", expr("ts div 1000"))
         .select("event_id", "user_id", "ts_us", "event_type")
       val mm = ev.agg(min("ts_us").as("lo"), max("ts_us").as("hi"))
@@ -4472,18 +4295,13 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("ts_us") >= cut)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("event_id BIGINT, user_id BIGINT, ts_us BIGINT, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "event_id BIGINT, user_id BIGINT, ts_us BIGINT, event_type STRING")
       val q = graft.streaming.StreamingMarkovAttribution.start(s, src,
         "user_id", "event_type", "ts_us", "event_id", "purchase",
         Seq("click", "view", "signup"), s"$tmp/state", s"$tmp/report",
         s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e30 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e30", q)
       graft.streaming.StreamingMarkovAttribution.report(s, s"$tmp/report")
     }),
 
@@ -4491,21 +4309,16 @@ object SparkEntry {
     // ingest-time shift detector — the drained LAST batch's report is
     // batch-2-vs-batch-1 keyness, gated by the same contingency in SQL
     "e29_streaming_distinctive_terms" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e29").toString
+      val tmp = StreamHarness.tempDir("e29")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       docs.filter(col("doc_id") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       docs.filter(col("doc_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
       val q = graft.streaming.StreamingDistinctiveTerms.start(s, src,
         "text", s"$tmp/state", s"$tmp/report", s"$tmp/cp", minCount = 5L)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e29 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e29", q)
       val rep = graft.streaming.StreamingDistinctiveTerms
         .report(s, s"$tmp/report")
       rep.join(rep.agg(max(col("batch")).as("batch")), "batch")
@@ -4517,7 +4330,7 @@ object SparkEntry {
     // each batch answers the fixed b02 query panel over the cumulative
     // index through the SAME scoring tail — drained report == b02
     "e27_streaming_bm25" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e27").toString
+      val tmp = StreamHarness.tempDir("e27")
       // the b02 planted-selective-term panel + df cap (see b02) — the
       // per-batch scoring join is postings-bounded, not corpus-wide
       val docs = t(s, dir, "documents").select(col("doc_id"),
@@ -4535,40 +4348,30 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       docs.filter(col("doc_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
       val q = graft.streaming.StreamingBm25.start(s, src, "doc_id", "text",
         queries, "query_id", "qtext", s"$tmp/state", s"$tmp/report",
         s"$tmp/cp", k = 5, maxDfFrac = 0.5)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e27 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e27", q)
       graft.streaming.StreamingBm25.report(s, s"$tmp/report")
         .select(col("query_id"), col("doc_id"), col("rank"),
           round(col("score"), 6).as("score"))
     }),
 
     "e22_streaming_burstiness" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e22").toString
+      val tmp = StreamHarness.tempDir("e22")
       val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("ts_us"))
       ev.filter(col("user_id") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("user_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("user_id BIGINT, event_id BIGINT, ts_us BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "user_id BIGINT, event_id BIGINT, ts_us BIGINT")
       val q = graft.streaming.StreamingBurstiness.start(s, src,
         "user_id", "ts_us", "event_id", s"$tmp/state", s"$tmp/report",
         s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e22 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e22", q)
       graft.streaming.StreamingBurstiness.report(s, s"$tmp/report")
         .withColumnRenamed("user", "user_id")
     }),
@@ -4577,7 +4380,7 @@ object SparkEntry {
     // latest-batch-wins tail overrides; the drained report equals the
     // batch g14 sweep over the full interval history
     "e21_streaming_interval_coverage" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e21").toString
+      val tmp = StreamHarness.tempDir("e21")
       val iv = t(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("start_us"),
         (expr("ts div 1000") +
@@ -4587,44 +4390,33 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       iv.filter(col("event_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("user_id BIGINT, event_id BIGINT, start_us BIGINT, end_us BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "user_id BIGINT, event_id BIGINT, start_us BIGINT, end_us BIGINT")
       val q = graft.streaming.StreamingIntervalCoverage.start(s, src,
         "user_id", "start_us", "end_us", s"$tmp/blocks", s"$tmp/report",
         s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e21 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e21", q)
       graft.streaming.StreamingIntervalCoverage.report(s, s"$tmp/report")
         .withColumnRenamed("user", "user_id")
     }),
 
     "e19_streaming_rolling_actives" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e19").toString
+      val tmp = StreamHarness.tempDir("e19")
       val ev = t(s, dir, "events").select(col("ts").as("ts_ns"),
         col("user_id"))
       ev.filter(col("user_id") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("user_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("ts_ns BIGINT, user_id BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "ts_ns BIGINT, user_id BIGINT")
       val q = graft.streaming.StreamingRollingActives.start(s, src,
         "user_id", "ts_ns", s"$tmp/pairs", s"$tmp/report", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e19 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e19", q)
       graft.streaming.StreamingRollingActives.report(s, s"$tmp/report")
     }),
 
     "e18_streaming_ks_drift" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e18").toString
+      val tmp = StreamHarness.tempDir("e18")
       val docs = t(s, dir, "documents").select("doc_id", "n_chars", "lang")
       val ref = docs.filter(col("lang") === "en").select("n_chars")
       val streamed = docs.filter(col("lang") =!= "en")
@@ -4632,16 +4424,11 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       streamed.filter(col("doc_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, n_chars BIGINT, lang STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, n_chars BIGINT, lang STRING")
       val q = graft.streaming.StreamingKsDrift.start(s, src, "n_chars",
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e18 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e18", q)
       graft.streaming.StreamingKsDrift.report(s, s"$tmp/state", ref, "n_chars")
     }),
 
@@ -4650,22 +4437,17 @@ object SparkEntry {
     // split deliberately violates time order and must not matter);
     // quartile scoring at drain == the batch g10 row-for-row
     "e17_streaming_rfm" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e17").toString
+      val tmp = StreamHarness.tempDir("e17")
       val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "value")
       ev.filter(col("event_id") % 2 === 0)
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       ev.filter(col("event_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("event_id BIGINT, user_id BIGINT, ts BIGINT, value DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "event_id BIGINT, user_id BIGINT, ts BIGINT, value DOUBLE")
       val q = graft.streaming.StreamingRfm.start(s, src, "user_id", "ts",
         "value", s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e17 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e17", q)
       graft.streaming.StreamingRfm.report(s, s"$tmp/state", "user_id")
     }),
 
@@ -4682,28 +4464,22 @@ object SparkEntry {
     // stay far under the 1000 cap on this corpus (measured), so the
     // oracle needs no per-batch cap replay
     "e20_streaming_winnow" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e20").toString
+      val tmp = StreamHarness.tempDir("e20")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       val mangled = docs.select((col("doc_id") + 1000000).as("doc_id"),
         regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
       docs.coalesce(1).write.parquet(s"$tmp/stream/b1")
       mangled.coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
       val q = StreamingWinnow.start(s, src, "doc_id", "text",
         s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         k = 16, window = 16, minShared = 14)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e20 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e20", q)
       StreamingWinnow.pairs(s, s"$tmp/pairs")
     }),
 
     "e16_streaming_fuzzy_decontaminate" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e16").toString
+      val tmp = StreamHarness.tempDir("e16")
       val docs = t(s, dir, "documents").select("doc_id", "text", "lang")
       val bench = docs.filter(col("doc_id") % 2 === 0)
         .select((col("doc_id") + 2000000).as("doc_id"),
@@ -4713,17 +4489,12 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       docs.filter(col("doc_id") > half)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, text STRING, lang STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, text STRING, lang STRING")
       val q = graft.streaming.StreamingFuzzyDecontaminate.start(
         s, src, bench, "doc_id", "text", s"$tmp/kept", s"$tmp/cp",
         threshold = 0.7)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e16 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e16", q)
       graft.streaming.StreamingFuzzyDecontaminate.kept(s, s"$tmp/kept")
         .select("doc_id", "lang")
     }),
@@ -5162,7 +4933,7 @@ object SparkEntry {
     // the batch operator itself — must equal batch c03 over everything
     // streamed; same oracle
     "e36_streaming_cdc_merge" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e36").toString
+      val tmp = StreamHarness.tempDir("e36")
       val snap = t(s, dir, "customer").select("c_custkey", "c_name", "c_acctbal")
       val changes = t(s, dir, "events").select(
         col("user_id").as("c_custkey"),
@@ -5176,16 +4947,10 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       changes.filter(pmod(col("event_id"), lit(2)) === 1)
         .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema(changes.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, changes.schema)
       val q = StreamingCdcMerge.start(s, src, Seq("c_custkey"), "ver", "op",
         s"$tmp/state", s"$tmp/cp", tieBreak = Seq("event_id"))
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e36 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e36", q)
       StreamingCdcMerge.currentSnapshot(s, s"$tmp/state", Seq("c_custkey"),
         "ver", "op", tieBreak = Seq("event_id"))
     }),
@@ -5197,23 +4962,17 @@ object SparkEntry {
     // shared smoothing arithmetic over summed deltas — must equal batch
     // t53 over everything streamed; same oracle verbatim
     "e38_streaming_nb_train" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e38").toString
+      val tmp = StreamHarness.tempDir("e38")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         concat(col("text"), lit(" mk"), col("lang")).as("text"))
       for (r <- 0 until 3)
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
           .select("lang", "text")
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "lang STRING, text STRING")
       val q = StreamingNbTrain.start(s, src, "text", "lang",
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e38 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e38", q)
       StreamingNbTrain.currentModel(s, s"$tmp/state", "lang")
         .select(col("lang"), col("token"), col("cnt"),
           round(col("logp"), 6).as("logp"))
@@ -5225,7 +4984,7 @@ object SparkEntry {
     // the drained MERGE-ON-READ report — the shared metric tail over
     // summed deltas — must equal batch t55; same oracle verbatim
     "e39_streaming_classifier_eval" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e39").toString
+      val tmp = StreamHarness.tempDir("e39")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
       val train = docs.filter(col("doc_id") % 7 =!= 3)
       val test = docs.filter(col("doc_id") % 7 === 3)
@@ -5237,16 +4996,10 @@ object SparkEntry {
         pairs.filter(pmod(col("doc_id"), lit(3)) === r)
           .select(col("lang"), col("predicted"))
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("lang STRING, predicted STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "lang STRING, predicted STRING")
       val q = StreamingClassifierEval.start(s, src, "lang", "predicted",
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e39 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e39", q)
       StreamingClassifierEval.currentEval(s, s"$tmp/state")
     }),
 
@@ -5257,24 +5010,19 @@ object SparkEntry {
     // the drained model runs the SHARED fixed-round descent over the
     // bank — drained == batch t56, same oracle verbatim
     "e40_streaming_lr_train" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e40").toString
+      val tmp = StreamHarness.tempDir("e40")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         concat(col("text"), lit(" mk"), col("lang")).as("text"))
       for (r <- 0 until 3)
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
           .select("doc_id", "lang", "text")
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("doc_id BIGINT, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "doc_id BIGINT, lang STRING, text STRING")
       val q = StreamingLrTrain.start(s, src, "doc_id", "text",
         (col("lang") === "en").cast("int"), dim = 64,
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e40 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e40", q)
       StreamingLrTrain.currentModel(s, s"$tmp/state", "doc_id", dim = 64,
           rounds = 10, eta = 10.0)
         .select(col("bucket"), round(col("w").cast("double"), 6).as("weight"))
@@ -5457,7 +5205,7 @@ object SparkEntry {
     // shared retrievalPerQuery arithmetic and the drained pooled report
     // equals batch b04; same oracle verbatim
     "e41_streaming_retrieval_eval" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e41").toString
+      val tmp = StreamHarness.tempDir("e41")
       val docs = t(s, dir, "documents").select(col("doc_id"),
         concat(col("text"), lit(" tok"),
           (col("doc_id") % 50).cast("string")).as("text"))
@@ -5479,16 +5227,11 @@ object SparkEntry {
       for (r <- 0 until 3)
         runs.filter(pmod(col("query_id"), lit(3)) === r)
           .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = s.readStream
-        .schema("query_id BIGINT, doc_id BIGINT, rank INT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp,
+        "query_id BIGINT, doc_id BIGINT, rank INT")
       val q = StreamingRetrievalEval.start(s, src, qrels, k = 10,
         s"$tmp/state", s"$tmp/cp")
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e41 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e41", q)
       StreamingRetrievalEval.currentEval(s, s"$tmp/state", qrels)
     }),
 
@@ -5637,7 +5380,7 @@ object SparkEntry {
     // pairs), half arrive a batch later (cross-batch pairs through the
     // persistent band index); drained pairs == the batch m10 pair set
     "e33_streaming_phash_dedup" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e33").toString
+      val tmp = StreamHarness.tempDir("e33")
       val base = Multimodal.pixelGridStub(
         t(s, dir, "documents"), "doc_id", "text")
       val variants = base.filter(col("doc_id") % 5 === 3)
@@ -5648,17 +5391,11 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       variants.filter(col("doc_id") % 10 === 8)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("doc_id BIGINT, pixels ARRAY<INT>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, pixels ARRAY<INT>")
       val q = graft.streaming.StreamingPHashDedup.start(s, src, "doc_id",
         "pixels", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         maxHamming = 12, maxBucketSize = 10000)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e33 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e33", q)
       graft.streaming.StreamingPHashDedup.pairs(s, s"$tmp/pairs")
     }),
 
@@ -5667,7 +5404,7 @@ object SparkEntry {
     // ids % 50 == 25 arrive a batch later (cross-batch through the
     // persistent landmark index); drained pairs == batch m11
     "e34_streaming_audio_fingerprint" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e34").toString
+      val tmp = StreamHarness.tempDir("e34")
       val docs = t(s, dir, "documents")
       val base = docs.select(col("doc_id").as("media_id"),
         encode(col("text"), "UTF-8").as("content"))
@@ -5679,18 +5416,12 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       variants.filter(col("media_id") % 50 === 25)
         .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("media_id BIGINT, content BINARY")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "media_id BIGINT, content BINARY")
       val q = graft.streaming.StreamingAudioFingerprint.start(s, src,
         "media_id", "content", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         windowBytes = 16, fanout = 3, zone = 16, minAligned = 3,
         maxHashGroup = 10000)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e34 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e34", q)
       graft.streaming.StreamingAudioFingerprint.pairs(s, s"$tmp/pairs")
     }),
 
@@ -5701,7 +5432,7 @@ object SparkEntry {
     // pair once in its later member's batch, through the SHARED
     // LandmarkAlign engine e34 runs
     "e37_streaming_clip_align" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e37").toString
+      val tmp = StreamHarness.tempDir("e37")
       val docs = t(s, dir, "documents")
       val base = docs.select(col("doc_id").as("media_id"),
         encode(col("text"), "UTF-8").as("content"))
@@ -5714,17 +5445,11 @@ object SparkEntry {
         .coalesce(1).write.parquet(s"$tmp/stream/b1")
       clips.filter(col("media_id") % 50 === 25)
         .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = s.readStream
-        .schema("media_id BIGINT, content BINARY")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/stream/*")
+      val src = StreamHarness.fileStream(s, tmp, "media_id BIGINT, content BINARY")
       val q = graft.streaming.StreamingClipAlign.start(s, src,
         "media_id", "content", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         frameBytes = 16, minAligned = 3, maxDigestGroup = 10000)
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("e37 stream did not drain in 300s")
-      }
+      StreamHarness.drain("e37", q)
       graft.streaming.StreamingClipAlign.pairs(s, s"$tmp/pairs")
     }),
 

@@ -200,25 +200,6 @@ object FuzzyJoin {
     verify(cands, l, r, maxDist)
   }
 
-  /** The `<= d`-deletion neighborhood of `s` (s itself included),
-    * distinct, as STRINGS. Superseded on the hot path by the
-    * [[graft.functions.HashKernels.deletionVariantHashes]] kernel (which
-    * never materializes these); retained as the spec's independent
-    * cross-check of the kernel's variant enumeration.
-    */
-  private[graft] def variantsOf(s: Column, d: Int): Column = {
-    def dels(v: Column): Column =
-      when(length(v) >= 1,
-        transform(sequence(lit(1), length(v)),
-          i => concat(v.substr(lit(1), i - 1),
-            v.substr(i + 1, length(v) - i))))
-        .otherwise(array().cast("array<string>"))
-    val one = dels(s)
-    if (d == 1) array_distinct(concat(array(s), one))
-    else array_distinct(concat(array(s), one,
-      flatten(transform(one, v => dels(v)))))
-  }
-
   /** The positional q-gram array of `s` (order = position); a string
     * shorter than `q` contributes itself as its only gram (it still
     * lands in the SHORT branch — the array only feeds the frequency

@@ -108,10 +108,6 @@ object StreamingCuration {
   def compactFingerprints(spark: SparkSession, fpDir: String): Unit =
     LsmParquetState.compact(spark, fpDir, layout)
 
-  /** Heal a fingerprint directory after a crash mid-compaction swap. */
-  def recoverFingerprints(spark: SparkSession, fpDir: String): Unit =
-    LsmParquetState.recover(spark, fpDir)
-
   /** Start the screen over a streaming frame of `(idCol, textCol,
     * langCol)` docs. Ids must be unique across the stream. Rate limiting
     * belongs on the caller's source (`maxFilesPerTrigger` /

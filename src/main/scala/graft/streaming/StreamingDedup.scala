@@ -6,14 +6,11 @@ import org.apache.spark.sql.functions._
 
 /**
  * Stateful streaming deduplication: exact dedup ACROSS micro-batches via
- * Structured Streaming's keyed state store (`dropDuplicates` /
- * `dropDuplicatesWithinWatermark` — the engine-managed form of
- * `mapGroupsWithState` custom state).
+ * Structured Streaming's keyed state store (`dropDuplicates` — the
+ * engine-managed form of `mapGroupsWithState` custom state).
  *
  * Scale posture: state holds one entry per distinct fingerprint, not per
- * row; with a watermark the store is pruned to the lateness window, so
- * state size is bounded by (distinct keys within window), not stream
- * length. Fingerprints (md5 of normalized text, 16 bytes) keep the state
+ * row. Fingerprints (md5 of normalized text, 16 bytes) keep the state
  * entries tiny — the streaming sibling of
  * [[graft.operators.Dedup.normalizedDedup]].
  */
@@ -27,18 +24,5 @@ object StreamingDedup {
     stream
       .withColumn("__fp", md5(Dedup.normalized(col(textCol))))
       .dropDuplicates("__fp")
-      .drop("__fp")
-
-  /** Watermarked variant: dedup within an event-time lateness window —
-    * state is pruned as the watermark advances (the 100 TB posture for
-    * endless streams).
-    */
-  def dedupByTextWithinWatermark(
-      stream: DataFrame, textCol: String,
-      eventTimeCol: String, delay: String): DataFrame =
-    stream
-      .withColumn("__fp", md5(Dedup.normalized(col(textCol))))
-      .withWatermark(eventTimeCol, delay)
-      .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
 }

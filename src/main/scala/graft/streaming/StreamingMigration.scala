@@ -58,7 +58,7 @@ object StreamingMigration {
   }
 
   /** Start the streaming migration for one table. Caller owns the returned
-    * query lifecycle (`awaitTermination` / `stop`).
+    * query lifecycle ([[StreamHarness.drain]] / `stop`).
     */
   def start(
       spark: SparkSession,

@@ -81,4 +81,11 @@ object Bridge {
         l.rdd.unpersist(blocking = false)
       case _ =>
     }
+
+  /** A fresh `<java.io.tmpdir>/<prefix>-<uuid>` directory that Spark's
+    * `ShutdownHookManager` deletes recursively at JVM exit.
+    * `Utils.createTempDir` is `private[spark]`, hence here.
+    */
+  def createTempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
 }

@@ -158,7 +158,7 @@ class PlanAuditSpec extends SparkTestBase {
       "(VERDICT r4 #7)") {
     // partitioned variant of the orders bench table (fixtures are read-only
     // single files, so the layout is derived here): 5 o_orderpriority dirs
-    val tmp = java.nio.file.Files.createTempDirectory("graft_partprune").toString
+    val tmp = tempDir("partprune")
     spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .write.partitionBy("o_orderpriority").parquet(s"$tmp/src/orders_part.parquet")
     val cfg = graft.model.MigrationConfig(
@@ -208,7 +208,7 @@ class PlanAuditSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions.{col, concat, lit}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ncidx").toString
+    val tmp = tempDir("ncidx")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     graft.operators.Dedup.lshBuckets(docs, "doc_id", "text")
@@ -470,7 +470,7 @@ class PlanAuditSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_c13base").toString
+    val tmp = tempDir("c13base")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     docs.select(col("doc_id"), (col("doc_id") % 7).as("cluster_id"))

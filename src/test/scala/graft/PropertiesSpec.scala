@@ -4,7 +4,6 @@ import graft.model._
 import graft.operators.Dedup
 import graft.pipeline.MigrationPlanner
 import graft.sources.Tables
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -36,7 +35,7 @@ class PropertiesSpec extends SparkTestBase {
   test("property: keep-last upsert is idempotent (migrate twice == once)") {
     forAllSeeded(rowsGen) { rows =>
       if (rows.nonEmpty) {
-        val dir = Files.createTempDirectory("graft_prop").toString
+        val dir = tempDir("prop")
         val srcRef = TableRef(path = s"$dir/src")
         val tgtRef = TableRef(path = s"$dir/tgt")
         rows.toDF("pk", "v", "ord").write.mode("overwrite")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.StreamHarness
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // session shared across suites
+
+  /** A fresh `graft_<tag>-<uuid>` dir, deleted when the test JVM exits. */
+  def tempDir(tag: String): String = StreamHarness.tempDir(tag)
 }
 
 object SparkTestBase {
@@ -19,8 +23,7 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", StreamHarness.tempDir("wh"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -106,7 +106,7 @@ class ConfigCodecSpec extends AnyFunSuite {
   test("parsed config drives the planner (config-as-query round trip)") {
     val spark = graft.SparkTestBase.session
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cfg").toString
+    val dir = graft.streaming.StreamHarness.tempDir("cfg")
     Seq(("abcd", 2500), ("abcd", 3500), ("efgh", 9000))
       .toDF("part_key_col_1", "clust_key_col_2")
       .write.parquet(s"$dir/src/t.parquet")
@@ -127,7 +127,7 @@ class ConfigCodecSpec extends AnyFunSuite {
   test("anchored config: shared table boilerplate via <<: merge drives the planner") {
     val spark = graft.SparkTestBase.session
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cfg_anchor").toString
+    val dir = graft.streaming.StreamHarness.tempDir("cfg_anchor")
     Seq((1L, 10), (2L, 20), (3L, 30)).toDF("id", "v")
       .write.parquet(s"$dir/src/t1.parquet")
     Seq((4L, 40), (5L, 50)).toDF("id", "v")

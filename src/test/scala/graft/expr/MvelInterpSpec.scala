@@ -63,7 +63,7 @@ class MvelInterpSpec extends SparkTestBase {
   }
 
   test("planner falls back to the interpreter for a loop-bearing calculated column") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvelfb").toString
+    val dir = tempDir("mvelfb")
     Seq((1L, 3), (2L, 4)).toDF("id", "n").write.parquet(s"$dir/src/t.parquet")
     val cfg = MigrationConfig(TableRef(path = s"$dir/src"),
       TableRef(path = s"$dir/none"), Nil)
@@ -76,7 +76,7 @@ class MvelInterpSpec extends SparkTestBase {
   }
 
   test("planner fallback filter keeps JVM method-call semantics") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvelff").toString
+    val dir = tempDir("mvelff")
     Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
       .toDF("id", "name").write.parquet(s"$dir/src/t.parquet")
     val cfg = MigrationConfig(TableRef(path = s"$dir/src"),
@@ -151,7 +151,7 @@ class MvelInterpSpec extends SparkTestBase {
     // the user expression the verdict cites verbatim
     assertThrows[MvelTranslator.UnsupportedMvel](
       MvelTranslator.toSql("row.tags.size() > 0"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvelcoll").toString
+    val dir = tempDir("mvelcoll")
     Seq((1L, Seq("a", "b")), (2L, Seq.empty[String]), (3L, Seq("c")))
       .toDF("id", "tags").write.parquet(s"$dir/src/t.parquet")
     val cfg = MigrationConfig(TableRef(path = s"$dir/src"),
@@ -163,7 +163,7 @@ class MvelInterpSpec extends SparkTestBase {
   }
 
   test("interpreter calculated column over a map column infers the value type") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvelmap").toString
+    val dir = tempDir("mvelmap")
     Seq((1L, Map("score" -> 10)), (2L, Map("score" -> 20)), (3L, Map.empty[String, Int]))
       .toDF("id", "attrs").write.parquet(s"$dir/src/t.parquet")
     val cfg = MigrationConfig(TableRef(path = s"$dir/src"),

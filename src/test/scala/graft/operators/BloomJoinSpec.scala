@@ -50,7 +50,7 @@ class BloomJoinSpec extends SparkTestBase {
   test("bloom pre-filter sits below the join in the plan (map-side prune)") {
     // parquet-backed fact: a LocalRelation would let Catalyst fold the
     // probe away at plan time and hide the shape under test
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloomjoin").toString
+    val tmp = tempDir("bloomjoin")
     (1L to 100L).map(i => (i, i)).toDF("k", "v").write.parquet(s"$tmp/fact")
     val fact = spark.read.parquet(s"$tmp/fact")
     val build = Seq((1L, "a")).toDF("k", "name")

@@ -213,18 +213,18 @@ class DedupSpec extends SparkTestBase {
     // on a real cluster an executor loss mid-iteration kills a
     // localCheckpoint run; checkpointDir switches rounds to reliable
     // checkpoint() files that survive it. Same inputs, same clusters.
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+    val dir = tempDir("cc_ckpt")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("idA", "idB")
     val verts = Seq(1L, 2L, 3L, 4L, 10L, 11L, 99L).toDF("doc_id")
     val got = Dedup.clusterAssignments(pairs, verts, "doc_id",
-        checkpointDir = Some(dir.toString))
+        checkpointDir = Some(dir))
       .as[(Long, Long)].collect().toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 99L -> 99L))
     // the rounds actually went through files in the dir, superseded rounds
     // were deleted as the loop advanced, and ONLY the final labels frame's
     // backing file remains (a leak here is O(rounds × |V|) at cluster scale)
-    val roundDirs = new java.io.File(dir.toString).listFiles()
+    val roundDirs = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("round_"))
     assert(roundDirs.length === 1,
       s"expected exactly the final round file, got: ${roundDirs.map(_.getName).toSeq}")
@@ -235,13 +235,13 @@ class DedupSpec extends SparkTestBase {
     // only the final labels frame's backing file survives — leaking the
     // O(|E|) edge file per empty-delta call would accumulate on a
     // long-running service's shared checkpoint prefix
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_empty")
+    val dir = tempDir("cc_empty")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("idA", "idB")
     val verts = Seq.empty[Long].toDF("doc_id")
     val got = Dedup.clusterAssignments(pairs, verts, "doc_id",
-      checkpointDir = Some(dir.toString))
+      checkpointDir = Some(dir))
     assert(got.count() === 0L)
-    val roundDirs = new java.io.File(dir.toString).listFiles()
+    val roundDirs = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("round_"))
     assert(roundDirs.length === 1,
       s"expected only the labels round file, got: ${roundDirs.map(_.getName).toSeq}")

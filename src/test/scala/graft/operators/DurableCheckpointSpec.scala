@@ -23,20 +23,20 @@ class DurableCheckpointSpec extends SparkTestBase {
   private def bothModes(tag: String)(
       op: Option[String] => DataFrame): Int = {
     val default = op(None)
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_dc_$tag")
-    val durable = op(Some(dir.toString))
+    val dir = tempDir(s"dc_$tag")
+    val durable = op(Some(dir))
     val cols = default.columns.sorted.toSeq
     def canon(df: DataFrame): Seq[String] =
       df.select(cols.map(col): _*).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     assert(canon(durable) === canon(default),
       s"$tag: durable mode must be result-identical to localCheckpoint mode")
-    val left = new java.io.File(dir.toString).listFiles()
+    val left = new java.io.File(dir).listFiles()
     val names = if (left == null) Seq.empty[String] else left.map(_.getName).toSeq
     // consume-then-delete contract: removing the dir afterwards is safe
     val leftCount = names.size
     org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(dir.toString))
+      new java.io.File(dir))
     leftCount
   }
 

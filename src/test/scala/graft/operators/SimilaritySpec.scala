@@ -172,7 +172,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("persisted IVF-PQ index: loaded search equals the in-query build " +
       "row-for-row; incremental encode matches the one-shot code table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
+    val dir = tempDir("ivfpq_idx")
     val q = corpus.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"embedding")
     // same corpus, same params: the persisted model is the in-query model
@@ -207,7 +207,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("legacy FLAT code table: search still answers identically and " +
       "incremental encode appends flat (never mixes layouts)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_flat").toString
+    val dir = tempDir("ivfpq_flat")
     val base = corpus.filter($"vec_id" < 60)
     val rest = corpus.filter($"vec_id" >= 60)
     val q = corpus.filter($"vec_id" < 5)

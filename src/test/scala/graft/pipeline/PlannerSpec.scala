@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class PlannerSpec extends SparkTestBase {
   import spark.implicits._
 
-  private lazy val dir = Files.createTempDirectory("graft_planner").toString
+  private lazy val dir = tempDir("planner")
   private lazy val srcRef = TableRef(path = s"$dir/src")
   private lazy val tgtRef = TableRef(path = s"$dir/tgt")
   private def cfg = MigrationConfig(srcRef, tgtRef, Nil)

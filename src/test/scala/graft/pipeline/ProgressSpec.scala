@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.model._
 import graft.sources.Tables
-import graft.streaming.StreamingMigration
+import graft.streaming.{StreamHarness, StreamingMigration}
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.streaming.Trigger
 import scala.jdk.CollectionConverters._
@@ -20,7 +20,7 @@ class ProgressSpec extends SparkTestBase {
     val listener = new StreamingProgressListener(lines.add(_))
     spark.streams.addListener(listener)
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_prog").toString
+      val dir = tempDir("prog")
       val srcRef = TableRef(path = s"$dir/src")
       val cfg = MigrationConfig(srcRef, TableRef(path = s"$dir/tgt"), Nil,
         statusIntervalMillis = Some(100L))
@@ -31,7 +31,7 @@ class ProgressSpec extends SparkTestBase {
         TableMigrationDef("prog_t", simulateOnly = false),
         checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow(),
         maxFilesPerTrigger = 1)
-      q.awaitTermination(60000)
+      StreamHarness.drain("prog", q)
       // listener bus is async — drain it
       var waited = 0
       while (lines.asScala.count(_.contains("stream batch=")) < 2 && waited < 10000) {

@@ -16,7 +16,7 @@ class RoundSnapshotsSpec extends SparkTestBase {
 
   test("durable mode: snap writes a labeled round file, free deletes it, " +
       "values round-trip exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rs").toString
+    val dir = tempDir("rs")
     val snaps = new RoundSnapshots(Some(dir))
     val s1 = snaps.snap(Seq(1, 2, 3).toDF("x"), "alpha")
     val s2 = snaps.snap(Seq(4).toDF("x"), "beta")
@@ -32,7 +32,7 @@ class RoundSnapshotsSpec extends SparkTestBase {
 
   test("roll window: advance frees everything older than `keep` " +
       "predecessors; trim and close release the rest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rs2").toString
+    val dir = tempDir("rs2")
     val snaps = new RoundSnapshots(Some(dir))
     val roll = snaps.roll("r", keep = 1)
     (1 to 4).foreach(i => roll.advance(Seq(i).toDF("x")))
@@ -68,7 +68,7 @@ class RoundSnapshotsSpec extends SparkTestBase {
     local.free(s1)
     // durable mode: metrics ride the parquet write; the read-back frame
     // carries no CollectMetrics node
-    val dir = java.nio.file.Files.createTempDirectory("graft_rs4").toString
+    val dir = tempDir("rs4")
     val durable = new RoundSnapshots(Some(dir))
     val (s2, m2) = durable.snapObserved(Seq(4, 5).toDF("x"),
       Seq(count(lit(1)).as("__n")), "obs")
@@ -90,7 +90,7 @@ class RoundSnapshotsSpec extends SparkTestBase {
 
   test("distinct labels share one counter, so one operator invocation " +
       "never collides paths across its rolls") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rs3").toString
+    val dir = tempDir("rs3")
     val snaps = new RoundSnapshots(Some(dir))
     snaps.snap(Seq(1).toDF("x"), "a")
     val roll = snaps.roll("b")

@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.model._
 import graft.sources.Tables
-import java.nio.file.Files
 
 /** Batch-mode rate limiting (VERDICT r4 #4): pauseMillisBetweenPages must
   * cap batch writes, not just set the streaming trigger.
@@ -20,7 +19,7 @@ class ThrottleSpec extends SparkTestBase {
   }
 
   test("batch migration with pauseMillisBetweenPages takes at least the paced floor") {
-    val dir = Files.createTempDirectory("graft_throttle").toString
+    val dir = tempDir("throttle")
     val srcRef = TableRef(path = s"$dir/src")
     val cfg = MigrationConfig(srcRef, TableRef(path = s"$dir/tgt"), Nil)
     // 2 partitions x 25 rows; pageSize 10 => 2 inter-page pauses per task
@@ -38,7 +37,7 @@ class ThrottleSpec extends SparkTestBase {
   }
 
   test("dry runs skip the pacing (O16 stays a cheap gate)") {
-    val dir = Files.createTempDirectory("graft_throttle_dry").toString
+    val dir = tempDir("throttle_dry")
     val srcRef = TableRef(path = s"$dir/src")
     val cfg = MigrationConfig(srcRef, TableRef(path = s"$dir/tgt"), Nil)
     (1 to 50).map(i => (i.toLong, s"p_$i")).toDF("id", "payload")

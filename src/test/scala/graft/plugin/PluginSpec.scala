@@ -21,7 +21,7 @@ class PluginSpec extends SparkTestBase {
   import spark.implicits._
 
   test("a reflective plugin stage loaded from config drives a migration") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_plug").toString
+    val dir = tempDir("plug")
     (1L to 10L).map(i => (i, s"v$i")).toDF("id", "payload")
       .write.parquet(s"$dir/src/t.parquet")
     val cfg = ConfigCodec.fromYaml(

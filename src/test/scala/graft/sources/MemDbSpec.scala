@@ -142,7 +142,7 @@ class MemDbSpec extends SparkTestBase {
   }
 
   test("cross-format migration: csv source -> parquet target through the planner") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("csv")
     Seq((1L, "a", 10.5), (2L, "b", 20.25), (3L, "c", 30.0))
       .toDF("id", "name", "v")
       .write.option("header", "true").csv(s"$dir/src/t.csv")
@@ -159,7 +159,7 @@ class MemDbSpec extends SparkTestBase {
   }
 
   test("cross-format migration: orc source -> parquet target") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("orc")
     Seq((1L, 1.5), (2L, 2.5)).toDF("id", "v").write.orc(s"$dir/src/t.orc")
     val cfg = MigrationConfig(
       TableRef(format = "orc", path = s"$dir/src"),
@@ -170,7 +170,7 @@ class MemDbSpec extends SparkTestBase {
   }
 
   test("cross-format migration: json source -> parquet target") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("json")
     Seq((1L, "x"), (2L, "y")).toDF("id", "tag")
       .write.json(s"$dir/src/t.json")
     val cfg = MigrationConfig(
@@ -185,7 +185,7 @@ class MemDbSpec extends SparkTestBase {
   test("cross-format migration: raw text corpus -> parquet with derived columns") {
     // line-oriented text is the rawest LLM-ingestion format: one `value`
     // column per line; the planner filters/enriches it like any table
-    val dir = java.nio.file.Files.createTempDirectory("graft_text").toString
+    val dir = tempDir("text")
     Seq("the quick brown fox", "", "jumps over the lazy dog", "short")
       .toDF("value").coalesce(1).write.text(s"$dir/src/corpus.text")
     val cfg = MigrationConfig(
@@ -205,7 +205,7 @@ class MemDbSpec extends SparkTestBase {
   test("cross-format migration: single-column frame -> text sink") {
     // text sinks take exactly one string column (Spark's own contract);
     // the planner migrates such a frame like any other table
-    val dir = java.nio.file.Files.createTempDirectory("graft_text_out").toString
+    val dir = tempDir("text_out")
     Seq("alpha beta", "gamma", "skip me").toDF("line")
       .write.parquet(s"$dir/src/t.parquet")
     val cfg = MigrationConfig(
@@ -224,7 +224,7 @@ class MemDbSpec extends SparkTestBase {
     // line-delimited JSON is the lingua franca of LLM-corpus interchange;
     // Spark's `json` format IS JSONL, so reads/writes flow through the
     // same planner path as any table
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val dir = tempDir("jsonl")
     Seq((1L, "keep one", "en"), (2L, "drop", "de"), (3L, "keep two", "en"))
       .toDF("doc_id", "text", "lang")
       .coalesce(1).write.json(s"$dir/src/docs.json")

@@ -3,14 +3,26 @@ package graft.streaming
 import graft.SparkTestBase
 import graft.model._
 import graft.sources.Tables
-import java.nio.file.Files
 import org.apache.spark.sql.streaming.Trigger
+import org.scalatest.{Failed, Outcome}
 
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** After each test no stream may still run: a query its drain did not
+    * stop would keep writing into the shared session during later tests.
+    * Leftovers are stopped, and the test that left them fails.
+    */
+  override def withFixture(test: NoArgTest): Outcome = {
+    val outcome = super.withFixture(test)
+    val left = spark.streams.active.toSeq
+    left.foreach(_.stop())
+    if (left.isEmpty || !outcome.isSucceeded) outcome
+    else Failed(s"streams left running: ${left.map(_.id).mkString(", ")}")
+  }
+
   test("streaming migration produces the same rows as the batch plan (O17)") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("stream")
     val srcRef = TableRef(path = s"$dir/src")
     val tgtRef = TableRef(path = s"$dir/tgt")
     val cfg = MigrationConfig(srcRef, tgtRef, Nil)
@@ -29,7 +41,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingMigration.start(spark, cfg, t,
       checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger = 1)
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream", q)
 
     val got = Tables.load(spark, tgtRef, "stream_t")
     val batch = graft.pipeline.MigrationPlanner.plan(spark,
@@ -40,7 +52,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming bloom screen matches the batch screen and misses no exact hit") {
-    val dir = Files.createTempDirectory("graft_stream_bloom").toString
+    val dir = tempDir("stream_bloom")
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six seven"),
@@ -57,7 +69,7 @@ class StreamingSpec extends SparkTestBase {
       .writeStream.format("parquet")
       .option("path", s"$dir/out").option("checkpointLocation", s"$dir/cp")
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_bloom", q)
 
     val got = spark.read.parquet(s"$dir/out")
       .select("doc_id", "flagged").as[(Long, Boolean)].collect().toMap
@@ -73,7 +85,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming counter mode: appended batch pre-aggregates sum to batch totals (O15/O17)") {
-    val dir = Files.createTempDirectory("graft_stream_ctr").toString
+    val dir = tempDir("stream_ctr")
     val srcRef = TableRef(path = s"$dir/src")
     val tgtRef = TableRef(path = s"$dir/tgt")
     val cfg = MigrationConfig(srcRef, tgtRef, Nil)
@@ -93,7 +105,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingMigration.start(spark, cfg, t,
       checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger = 1)
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_ctr", q)
 
     // each micro-batch appended its per-PK partial sums; the counter value
     // is the read-time additive merge (sum per PK) - which must equal the
@@ -108,7 +120,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming insert-if-not-exists sees earlier micro-batches (no dup PKs)") {
-    val dir = Files.createTempDirectory("graft_stream_ine").toString
+    val dir = tempDir("stream_ine")
     val srcRef = TableRef(path = s"$dir/src")
     val tgtRef = TableRef(path = s"$dir/tgt")
     val cfg = MigrationConfig(srcRef, tgtRef, Nil)
@@ -131,7 +143,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingMigration.start(spark, cfg, t,
       checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger = 1)
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_ine", q)
 
     val got = Tables.load(spark, tgtRef, "ov_t")
     assert(got.count() === 15L, "each PK written exactly once")
@@ -140,7 +152,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming existence filter reads the target ONCE and keeps PK state " +
       "across batches (VERDICT r4 #2)") {
-    val dir = Files.createTempDirectory("graft_stream_state").toString
+    val dir = tempDir("stream_state")
     val srcRef = TableRef(path = s"$dir/src")
     val tgtRef = TableRef(path = s"$dir/tgt")
     val cfg = MigrationConfig(srcRef, tgtRef, Nil)
@@ -167,7 +179,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingMigration.start(spark, cfg, t,
       checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger = 1)
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_state", q)
     val targetLoads = Tables.loadCallCount(tgtRef, "pre_t") - before
     assert(targetLoads === 1L,
       s"target must be read once to seed state, not per batch (got $targetLoads)")
@@ -186,7 +198,7 @@ class StreamingSpec extends SparkTestBase {
     // the at-least-once file-sink path can leave duplicate PK rows in the
     // target; initial state must dedup them or Spark rejects the seed with
     // "initial state contained multiple rows with the same key"
-    val dir = Files.createTempDirectory("graft_stream_dupseed").toString
+    val dir = tempDir("stream_dupseed")
     val srcRef = TableRef(path = s"$dir/src")
     val tgtRef = TableRef(path = s"$dir/tgt")
     val cfg = MigrationConfig(srcRef, tgtRef, Nil)
@@ -199,14 +211,14 @@ class StreamingSpec extends SparkTestBase {
       writeMode = InsertIfNotExists, simulateOnly = false)
     val q = StreamingMigration.start(spark, cfg, t,
       checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow())
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_dupseed", q)
     val got = Tables.load(spark, tgtRef, "dup_t")
     assert(got.count() === 4L, "3 seeded rows (incl. the dup pair) + only id 3 added")
     assert(got.filter($"id" === 3L).count() === 1L)
   }
 
   test("streaming existence filter state survives a checkpointed restart") {
-    val dir = Files.createTempDirectory("graft_stream_restart").toString
+    val dir = tempDir("stream_restart")
     val srcRef = TableRef(path = s"$dir/src")
     val tgtRef = TableRef(path = s"$dir/tgt")
     val cfg = MigrationConfig(srcRef, tgtRef, Nil)
@@ -220,7 +232,7 @@ class StreamingSpec extends SparkTestBase {
       writeMode = InsertIfNotExists, simulateOnly = false)
     val q1 = StreamingMigration.start(spark, cfg, t,
       checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow())
-    q1.awaitTermination(60000)
+    StreamHarness.drain("stream_restart", q1)
 
     // new data lands while the stream is DOWN, overlapping run 1's writes;
     // the restarted query must resume the state store, NOT re-admit 4..6
@@ -228,7 +240,7 @@ class StreamingSpec extends SparkTestBase {
       .coalesce(1).write.mode("append").parquet(srcPath)
     val q2 = StreamingMigration.start(spark, cfg, t,
       checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow())
-    q2.awaitTermination(60000)
+    StreamHarness.drain("stream_restart", q2)
 
     val got = Tables.load(spark, tgtRef, "rs_t")
     assert(got.count() === 9L, "3 seeded + 3 from run A + 3 from run B")
@@ -241,7 +253,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming rejects patchNullsFromTarget (whole-table merge has no per-batch semantics)") {
-    val dir = Files.createTempDirectory("graft_stream_patch").toString
+    val dir = tempDir("stream_patch")
     val srcRef = TableRef(path = s"$dir/src")
     val cfg = MigrationConfig(srcRef, TableRef(path = s"$dir/tgt"), Nil)
     (1 to 5).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
@@ -255,7 +267,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming windowed agg with watermark matches the batch plan") {
-    val dir = Files.createTempDirectory("graft_swin").toString
+    val dir = tempDir("swin")
     // deterministic event-time data across 3 hours, several files =>
     // several micro-batches; watermark tolerates the shuffled file order
     val rows = (0 until 300).map { i =>
@@ -274,7 +286,7 @@ class StreamingSpec extends SparkTestBase {
       .format("memory").queryName("swin")
       .option("checkpointLocation", s"$dir/cp")
       .start()
-    q.awaitTermination(60000)
+    StreamHarness.drain("swin", q)
     val got = spark.table("swin")
       .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
     val expect = StreamingWindowAgg.windowedAgg(
@@ -285,7 +297,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming session windows close at the watermark and match the batch plan") {
-    val dir = Files.createTempDirectory("graft_ssess").toString
+    val dir = tempDir("ssess")
     def ev(hour: Int, minute: Int, key: String, v: Double) =
       (java.sql.Timestamp.valueOf(f"2024-01-01 $hour%02d:$minute%02d:00"), key, v)
     // per-key event-time-ordered FILES (append mode really drops
@@ -314,7 +326,7 @@ class StreamingSpec extends SparkTestBase {
       .format("memory").queryName("ssess")
       .option("checkpointLocation", s"$dir/cp")
       .start()
-    q.awaitTermination(60000)
+    StreamHarness.drain("ssess", q)
 
     val cutoff = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
     val got = spark.table("ssess")
@@ -334,7 +346,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("mapGroupsWithState running totals accumulate across micro-batches") {
-    val dir = Files.createTempDirectory("graft_mgws").toString
+    val dir = tempDir("mgws")
     // 4 files => 4 micro-batches; each key appears in several batches
     (0 until 200).map(i => (s"user_${i % 5}", i.toDouble))
       .toDF("user", "amount").repartition(4)
@@ -345,7 +357,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingRunningTotals.startToMemory(spark, stream, "user", "amount",
       queryName = "totals", checkpointDir = s"$dir/cp",
       trigger = Trigger.AvailableNow())
-    q.awaitTermination(60000)
+    StreamHarness.drain("mgws", q)
     // update mode re-emits a key's totals each batch it appears in; the
     // LAST emission per key must equal the exact batch totals
     val last = spark.table("totals")
@@ -369,7 +381,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming dedup holds state across micro-batches") {
-    val dir = Files.createTempDirectory("graft_sdedup").toString
+    val dir = tempDir("sdedup")
     // 4 files, same 10 texts repeated in each => 40 rows, 10 distinct
     (0 until 40).map(i => (i.toLong, s"doc text number ${i % 10}"))
       .toDF("id", "text").repartition(4)
@@ -383,14 +395,14 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", s"$dir/cp")
       .format("parquet").option("path", s"$dir/out")
       .start()
-    q.awaitTermination(60000)
+    StreamHarness.drain("sdedup", q)
     val out = spark.read.parquet(s"$dir/out")
     assert(out.count() === 10L) // duplicates across batches suppressed
   }
 
   test("stream-stream interval join matches the batch join on the same data") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_ssjoin").toString
+    val dir = tempDir("ssjoin")
     def ts(min: Int) = new java.sql.Timestamp(
       java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime + min * 60000L)
     val imps = Seq((1L, ts(0), "i1"), (1L, ts(30), "i2"), (2L, ts(5), "i3"))
@@ -412,7 +424,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", s"$dir/cp")
       .format("parquet").option("path", s"$dir/out")
       .start()
-    q.awaitTermination(60000)
+    StreamHarness.drain("ssjoin", q)
 
     val got = spark.read.parquet(s"$dir/out")
       .as[(String, String)].collect().toSet
@@ -442,7 +454,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming CDC apply: foreachBatch folds micro-batches into a versioned snapshot") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_scdc").toString
+    val dir = tempDir("scdc")
     // three change files; a stale update for key 1 (ver 20 < 30) lands in
     // a LATER file than the fresh one — the versioned merge must drop it
     // regardless of batch order
@@ -474,7 +486,7 @@ class StreamingSpec extends SparkTestBase {
         ()
       }
       .start()
-    q.awaitTermination(60000)
+    StreamHarness.drain("scdc", q)
 
     assert(batches === 3, s"expected one micro-batch per file, got $batches")
     val got = snap.select("k", "name", "ver")
@@ -490,7 +502,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming near-dup with persistent index: drained pairs equal the batch truth") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_neardup").toString
+    val dir = tempDir("stream_neardup")
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again today"),
       (2L, "completely different content about distributed query engines and shuffles"),
@@ -515,7 +527,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingNearDup.start(spark, stream, "doc_id", "text",
       s"$dir/index", s"$dir/docs", s"$dir/pairs", s"$dir/cp",
       threshold = 0.5)
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_neardup", q)
 
     val streamed = spark.read.parquet(s"$dir/pairs")
       .select("idA", "idB").as[(Long, Long)].collect().toSet
@@ -536,7 +548,7 @@ class StreamingSpec extends SparkTestBase {
       "fingerprint index, drained pairs equal batch winnowingPairs, a " +
       "replayed batch is a no-op") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_winnow").toString
+    val dir = tempDir("stream_winnow")
     val base = "the zebra quilt jumps over seventeen lazy xylophones while " +
       "quietly plotting a grand escape from the dusty barn tonight"
     val corpus = Seq(
@@ -559,7 +571,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingWinnow.start(spark, stream, "doc_id", "text",
       s"$dir/index", s"$dir/pairs", s"$dir/cp",
       k = 8, window = 4, minShared = 2)
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_winnow", q)
 
     def drained() = StreamingWinnow.pairs(spark, s"$dir/pairs")
       .as[(Long, Long, Long)].collect().toSet
@@ -595,7 +607,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming curation: gate, decon and cross-batch dedup survivors " +
       "match the contract (earliest batch, then min id, seed excluded)") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_curate").toString
+    val dir = tempDir("stream_curate")
     val seedText = "the seed corpus document that we already kept and curated"
     val evalText = "the held out evaluation prompt that must never leak into training"
     StreamingCuration.seedFingerprints(
@@ -632,7 +644,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingCuration.start(spark, stream, evalDocs,
       "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp",
       minQuality = 0.0, maxDupBigramFrac = 1.0)
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_curate", q)
     val kept = spark.read.parquet(s"$dir/kept")
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(11L, 14L, 22L),
@@ -665,7 +677,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("compactState folds the tail log into the partitioned base, " +
       "row set identical, screen still correct afterwards") {
-    val dir = Files.createTempDirectory("graft_snd_compact").toString
+    val dir = tempDir("snd_compact")
     val corpus = (1L to 10L).map(i =>
       (i, s"corpus document number $i with some distinctive words here"))
       .toDF("doc_id", "text")
@@ -728,7 +740,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("prunedIndexScan: touched pairs land as PartitionFilters on the base, " +
       "untouched sub-partition files are never opened, tail always visible") {
-    val dir = Files.createTempDirectory("graft_snd_prune").toString
+    val dir = tempDir("snd_prune")
     val corpus = (1L to 50L).map(i =>
       (i, s"corpus document number $i with some quite distinctive words $i here"))
       .toDF("doc_id", "text")
@@ -783,7 +795,7 @@ class StreamingSpec extends SparkTestBase {
       "exactly once — pairs, index and docs unchanged, including after a " +
       "crash that lost the state appends") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_snd_replay").toString
+    val dir = tempDir("snd_replay")
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again today"),
       (2L, "completely different content about distributed query engines and shuffles"),
@@ -803,7 +815,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingNearDup.start(spark, stream, "doc_id", "text",
       s"$dir/index", s"$dir/docs", s"$dir/pairs", s"$dir/cp",
       threshold = 0.5)
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("snd_replay", q)
     // outputs are batch-keyed: each micro-batch owns its partition
     assert(new java.io.File(s"$dir/pairs/batch=0").exists() &&
       new java.io.File(s"$dir/pairs/batch=1").exists(),
@@ -850,7 +862,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming semantic screen: drained pairs equal the stored-before " +
       "cosine truth; a replayed in-flight batch lands exactly once") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sem_screen").toString
+    val dir = tempDir("sem_screen")
     def vec(seed: Int): Seq[Float] = {
       val r = new scala.util.Random(seed)
       Seq.fill(8)(r.nextFloat() * 2f - 1f)
@@ -875,7 +887,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingSemanticScreen.start(spark, stream,
       "vec_id", "embedding", s"$dir/index", s"$dir/vecs", s"$dir/pairs",
       s"$dir/cp", threshold = 0.999)
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("sem_screen", q)
     def pairsRows() = spark.read.parquet(s"$dir/pairs")
       .select("idA", "idB").as[(Long, Long)].collect().sorted.toSeq
     val p0 = pairsRows()
@@ -902,7 +914,7 @@ class StreamingSpec extends SparkTestBase {
       "in-flight batch keeps its own survivors and appends no duplicate " +
       "fingerprints") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sc_replay").toString
+    val dir = tempDir("sc_replay")
     val seedText = "the seed corpus document that we already kept and curated"
     StreamingCuration.seedFingerprints(
       Seq((0L, seedText)).toDF("doc_id", "text"), "text", s"$dir/fp",
@@ -925,7 +937,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingCuration.start(spark, stream, evalDocs,
       "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp",
       minQuality = 0.0, maxDupBigramFrac = 1.0)
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("sc_replay", q)
     def keptRows() = spark.read.parquet(s"$dir/kept")
       .select("doc_id").as[Long].collect().sorted.toSeq
     def fpRows() = StreamingCuration.fingerprintSnapshot(spark, s"$dir/fp")
@@ -961,7 +973,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming CDC merge: drained merge-on-read snapshot equals batch " +
       "applyCdc under cross-batch key competition, deletes and ties") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_scdc").toString
+    val dir = tempDir("scdc")
     val seed = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "name", "bal")
     // batch 1 holds key 1's OLDER update and key 2's delete; batch 2 the
@@ -979,7 +991,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingCdcMerge.start(spark, stream, Seq("k"), "ver", "op",
       s"$dir/state", s"$dir/cp", tieBreak = Seq("eid"))
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("scdc", q)
     def snap() = StreamingCdcMerge.currentSnapshot(spark, s"$dir/state",
         Seq("k"), "ver", "op", tieBreak = Seq("eid"))
       .select("k", "name", "bal").as[(Long, String, Double)]
@@ -1015,7 +1027,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming CDC merge replay idempotence: a replayed in-flight " +
       "batch (including batch 0) leaves state and snapshot unchanged") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_scdc_replay").toString
+    val dir = tempDir("scdc_replay")
     val seed = Seq((1L, "a", 10.0)).toDF("k", "name", "bal")
     val cols = Seq("k", "name", "bal", "ver", "eid", "op")
     val b1 = Seq((1L, "u1", 11.0, 5L, 100L, "U"), (1L, "u0", 9.0, 4L, 99L, "U"))
@@ -1028,7 +1040,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingCdcMerge.start(spark, stream, Seq("k"), "ver", "op",
       s"$dir/state", s"$dir/cp", tieBreak = Seq("eid"))
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("scdc_replay", q)
     def state() = StreamingCdcMerge.storedChanges(spark, s"$dir/state", Seq("k"))
       .collect().map(_.toString).sorted.toSeq
     def snap() = StreamingCdcMerge.currentSnapshot(spark, s"$dir/state",
@@ -1085,8 +1097,7 @@ class StreamingSpec extends SparkTestBase {
       (21L, "the first unique document about engines and the data we keep", "en"),
       (22L, "the second unique document and the words it is made of", "en"))
     def drain(viaConfig: Boolean): (Seq[Long], Seq[String]) = {
-      val dir = Files.createTempDirectory(
-        s"graft_sc_cfg_$viaConfig").toString
+      val dir = tempDir(s"sc_cfg_$viaConfig")
       StreamingCuration.seedFingerprints(
         Seq((0L, seedText)).toDF("doc_id", "text"), "text", s"$dir/fp",
         partitionedBase = true)
@@ -1103,7 +1114,7 @@ class StreamingSpec extends SparkTestBase {
         else StreamingCuration.start(spark, stream, evalDocs,
           "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp",
           minQuality = 0.0, maxDupBigramFrac = 1.0)
-      assert(q.awaitTermination(120000), "stream did not drain")
+      StreamHarness.drain("sc_cfg", q)
       (spark.read.parquet(s"$dir/kept")
         .select("doc_id").as[Long].collect().sorted.toSeq,
         StreamingCuration.fingerprintSnapshot(spark, s"$dir/fp")
@@ -1119,7 +1130,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming config-as-query fails closed: a typo'd stage and a " +
       "contract-breaking pipeline abort BEFORE the stream starts") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sc_cfg_fail").toString
+    val dir = tempDir("sc_cfg_fail")
     StreamingCuration.seedFingerprints(
       Seq((0L, "seed")).toDF("doc_id", "text"), "text", s"$dir/fp",
       partitionedBase = true)
@@ -1149,7 +1160,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming config-as-query replay idempotence: a replayed " +
       "in-flight batch through the YAML path lands exactly once") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sc_cfg_replay").toString
+    val dir = tempDir("sc_cfg_replay")
     val seedText = "the seed corpus document that we already kept and curated"
     StreamingCuration.seedFingerprints(
       Seq((0L, seedText)).toDF("doc_id", "text"), "text", s"$dir/fp",
@@ -1172,7 +1183,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingCuration.startFromConfig(spark, stream,
       curationCfg(), Map("benchmark" -> evalDocs),
       "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("sc_cfg_replay", q)
     def keptRows() = spark.read.parquet(s"$dir/kept")
       .select("doc_id").as[Long].collect().sorted.toSeq
     def fpRows() = StreamingCuration.fingerprintSnapshot(spark, s"$dir/fp")
@@ -1191,7 +1202,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("prunedDocsScan: candidate id prefixes land as PartitionFilters on " +
       "the docs base, untouched prefix files never opened, tail visible") {
-    val dir = Files.createTempDirectory("graft_snd_docprune").toString
+    val dir = tempDir("snd_docprune")
     val corpus = (1L to 50L).map(i =>
       (i, s"corpus document number $i with some quite distinctive words $i here"))
       .toDF("doc_id", "text")
@@ -1238,7 +1249,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("legacy FLAT near-dup index: the screen still sees prior batches " +
       "(appends stay flat, no invisible tail) and compaction keeps all rows") {
-    val dir = Files.createTempDirectory("graft_snd_legacy").toString
+    val dir = tempDir("snd_legacy")
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again today"),
       (2L, "completely different content about distributed query engines and shuffles"))
@@ -1257,7 +1268,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingNearDup.start(spark, stream, "doc_id", "text",
       s"$dir/index", s"$dir/docs", s"$dir/pairs", s"$dir/cp", threshold = 0.5)
-    assert(q.awaitTermination(120000), "legacy-layout stream did not drain")
+    StreamHarness.drain("legacy-layout", q)
     val streamed = spark.read.parquet(s"$dir/pairs")
       .select("idA", "idB").as[(Long, Long)].collect().toSet
     // the CROSS-BATCH pair only exists if batch 2 can see batch 1's
@@ -1291,7 +1302,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("compactState honors rowsPerFile on the LSM base via per-partition salting") {
-    val dir = Files.createTempDirectory("graft_snd_sizing").toString
+    val dir = tempDir("snd_sizing")
     val corpus = (1L to 40L).map(i =>
       (i, s"corpus document number $i with some quite distinctive words $i here"))
       .toDF("doc_id", "text")
@@ -1312,7 +1323,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("compactState swap is crash-safe: a kill between the renames leaves " +
       "a recoverable copy, recoverState heals every half-state") {
-    val dir = Files.createTempDirectory("graft_snd_crash").toString
+    val dir = tempDir("snd_crash")
     val corpus = (1L to 10L).map(i =>
       (i, s"corpus document number $i with some distinctive words here"))
       .toDF("doc_id", "text")
@@ -1358,7 +1369,7 @@ class StreamingSpec extends SparkTestBase {
     // deterministicSample is content-keyed, so the streaming sample equals
     // the batch sample row-for-row regardless of micro-batching.
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_enrich").toString
+    val dir = tempDir("stream_enrich")
     val docs = (1 to 60).map(i =>
       (i.toLong, s"the quick document number $i with some words"))
     docs.toDF("doc_id", "text").repartition(3)
@@ -1379,7 +1390,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", s"$dir/cp")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(60000)
+    StreamHarness.drain("stream_enrich", q)
 
     val streamed = spark.read.parquet(s"$dir/out")
       .as[(Long, String, Int, Double, Long)].collect().toSet
@@ -1392,7 +1403,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming drift monitor: drained PSI equals batch psiDrift; " +
       "replayed batch ids never double-count") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_drift").toString
+    val dir = tempDir("stream_drift")
     val ref = (1 to 100).map(i => (i % 10) / 10.0 + 0.05).toDF("v")
     // stream skews high: batch 1 mid values, batch 2 top-bucket heavy
     val b1 = (1 to 50).map(i => (i % 5) / 10.0 + 0.05)
@@ -1405,7 +1416,7 @@ class StreamingSpec extends SparkTestBase {
       s"$dir/counts", s"$dir/psi", s"$dir/cp")
     // the d09 rule: a timed-out stream must FAIL, not fall through to
     // read whatever the sink holds
-    assert(q.awaitTermination(120000), "drift stream did not drain")
+    StreamHarness.drain("drift", q)
 
     val drained = spark.read.parquet(s"$dir/psi")
       .select("bucket", "n_a", "n_b", "frac_a", "frac_b", "psi_term")
@@ -1421,7 +1432,7 @@ class StreamingSpec extends SparkTestBase {
       spark.readStream.schema("v DOUBLE")
         .option("maxFilesPerTrigger", 1).parquet(s"$dir/src"),
       ref, "v", s"$dir/counts", s"$dir/psi", s"$dir/cp2")
-    assert(q2.awaitTermination(120000), "drift replay stream did not drain")
+    StreamHarness.drain("drift replay", q2)
     val replayed = spark.read.parquet(s"$dir/psi")
       .select("bucket", "n_a", "n_b", "frac_a", "frac_b", "psi_term")
       .as[(Int, Long, Long, Double, Double, Double)].collect().toSet
@@ -1431,7 +1442,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming token budget: full, partial and rejected batches; " +
       "a fresh-checkpoint restart resets the spend") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_tb").toString
+    val dir = tempDir("stream_tb")
     // 4 tokens per doc; budget 13 → batch 1 admits fully (8), batch 2
     // PARTIALLY (doc 3 lands on 12, doc 4 would cross). Batch 3 is ONE
     // token — it would fit the leftover slack (12 + 1 <= 13) if spend
@@ -1448,7 +1459,7 @@ class StreamingSpec extends SparkTestBase {
         .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
       val q = StreamingTokenBudget.start(spark, stream, "doc_id", "text",
         budget = 13L, s"$dir/state", s"$dir/out", s"$dir/$cp")
-      assert(q.awaitTermination(120000), "token-budget stream did not drain")
+      StreamHarness.drain("token-budget", q)
     }
     run("cp1")
     def drained(): Map[Long, (Long, Long)] =
@@ -1478,7 +1489,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming heavy hitters: drained top-k equals batch topTokens; " +
       "a fresh-checkpoint restart resets rather than double-counts") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_hh").toString
+    val dir = tempDir("stream_hh")
     val b1 = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"))
     val b2 = Seq((3L, "alpha delta delta beta"))
     b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/src")
@@ -1488,7 +1499,7 @@ class StreamingSpec extends SparkTestBase {
         .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
       val q = StreamingHeavyHitters.start(spark, stream, "text",
         s"$dir/counts", s"$dir/top", s"$dir/$cp", k = 3)
-      assert(q.awaitTermination(120000), "heavy-hitter stream did not drain")
+      StreamHarness.drain("heavy-hitter", q)
     }
     run("cp1")
     val truth = graft.operators.TextAnalysis.topTokens(
@@ -1522,7 +1533,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("heavy-hitter compactState swap is crash-safe: between-renames and " +
       "post-swap half-states both recover the full counts") {
-    val dir = Files.createTempDirectory("graft_hh_crash").toString
+    val dir = tempDir("hh_crash")
     Seq(("alpha", 3L), ("beta", 2L)).toDF("token", "n")
       .write.parquet(s"$dir/counts/batch=0")
     Seq(("alpha", 1L)).toDF("token", "n")
@@ -1554,7 +1565,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming entity resolution: cross-batch merges land on the batch " +
       "closure, a replayed batch is a no-op, compaction keeps the latest " +
       "snapshot") {
-    val dir = Files.createTempDirectory("graft_ser").toString
+    val dir = tempDir("ser")
     // batch 0: two separate proto-entities; batch 1: a bridge name within
     // one edit of BOTH 'cold ring' and 'gold ring' -> merges the clusters
     val b0 = Seq((1L, "cold ring"), (2L, "gold ring"), (3L, "hot gear"))
@@ -1609,7 +1620,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming entity resolution: a merge relabels only the touched " +
       "cluster's rows in the tail, and the monotone-id contract is " +
       "enforced per batch") {
-    val dir = Files.createTempDirectory("graft_ser_delta").toString
+    val dir = tempDir("ser_delta")
     // batch 0: two separate clusters at maxDist 1 ('abcd' vs 'abef' is
     // distance 2); batch 1: 'abed' is within 1 of BOTH -> merge
     val b0 = Seq((5L, "abcd"), (7L, "abef")).toDF("id", "name")
@@ -1643,7 +1654,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming vocab novelty: replay-exact counts against pre-batch " +
       "state; the seen-set base read carries a __tp PartitionFilter") {
-    val dir = Files.createTempDirectory("graft_svn").toString
+    val dir = tempDir("svn")
     val seedDocs = Seq((1L, "alpha beta gamma")).toDF("doc_id", "text")
     StreamingVocabNovelty.seedTokens(seedDocs, "text", s"$dir/tokens",
       partitionedBase = true)
@@ -1688,7 +1699,7 @@ class StreamingSpec extends SparkTestBase {
       "user state, drained report equals the batch operator, replays " +
       "are exact, post-conversion events drop, monotone violation throws") {
     import graft.operators.Events
-    val dir = Files.createTempDirectory("graft_sma").toString
+    val dir = tempDir("sma")
     val cols = Seq("user_id", "event_type", "ts", "event_id")
     def run(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamingMarkovAttribution.processBatch(b, id, "user_id",
@@ -1752,7 +1763,7 @@ class StreamingSpec extends SparkTestBase {
       "operator's 2-slice statistic, counts accumulate additively, " +
       "replays are exact, compaction preserves the report") {
     import graft.operators.TextAnalysis
-    val dir = Files.createTempDirectory("graft_sdt").toString
+    val dir = tempDir("sdt")
     def run(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamingDistinctiveTerms.processBatch(b, id, "text",
         s"$dir/state", s"$dir/report", minCount = 1L)
@@ -1798,7 +1809,7 @@ class StreamingSpec extends SparkTestBase {
       "a replayed batch overwrites its own partition, self-referential " +
       "ForeignKey refuses") {
     import graft.operators.DqAudit.{ForeignKey, NotNull, RangeRule}
-    val dir = Files.createTempDirectory("graft_sdq").toString
+    val dir = tempDir("sdq")
     val rules = Seq(
       NotNull("v_nn", "t", "v"),
       RangeRule("v_neg", "t", org.apache.spark.sql.functions.col("v") < 0))
@@ -1837,7 +1848,7 @@ class StreamingSpec extends SparkTestBase {
       "through the persisted key store, the drained report equals the " +
       "batch audit, and a replayed batch is exact") {
     import graft.operators.DqAudit.UniqueKey
-    val dir = Files.createTempDirectory("graft_sdq_uk").toString
+    val dir = tempDir("sdq_uk")
     val rules = Seq(UniqueKey("pk", "t", Seq("k")))
     // batch 0: in-batch dup (7) + a null key; batch 1: cross-batch dups
     // (7 again, null again) + one new key
@@ -1871,7 +1882,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming entity resolution heals a crash mid-snapshot-write: the " +
       "replay rebuilds its batch partitions from pre-batch state") {
-    val dir = Files.createTempDirectory("graft_ser_crash").toString
+    val dir = tempDir("ser_crash")
     val b0 = Seq((1L, "cold ring"), (2L, "hot gear")).toDF("id", "name")
     val b1 = Seq((10L, "old ring")).toDF("id", "name")
     def run(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
@@ -1894,7 +1905,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("compaction refuses while a registered stream is active over the " +
       "state dir, runs again once it stops, and prunes the registration") {
-    val dir = Files.createTempDirectory("graft_lsm_guard").toString
+    val dir = tempDir("lsm_guard")
     val layout = LsmLayout(Seq("__p"), Seq("__p"),
       df => df.withColumn("__p",
         org.apache.spark.sql.functions.pmod(
@@ -1937,7 +1948,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming funnel: chains extend across time-ordered batches, the " +
       "tail holds only changed users, replay is exact, and a watermark " +
       "violation fails fast") {
-    val dir = Files.createTempDirectory("graft_sfun").toString
+    val dir = tempDir("sfun")
     val stages = Seq("view", "click", "purchase")
     def run(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamingFunnel.processBatch(b, id, "user_id", "event_type", "ts",
@@ -2000,7 +2011,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming substring index: search over the accumulated postings " +
       "equals the full-scan truth, replays are idempotent, compaction " +
       "preserves answers") {
-    val dir = Files.createTempDirectory("graft_ssi").toString
+    val dir = tempDir("ssi")
     val b0 = Seq((1L, "the quick brown fox jumps"),
       (2L, "pack my box with five dozen jugs")).toDF("doc_id", "text")
     val b1 = Seq((3L, "quick boxes everywhere"), (4L, ""))
@@ -2032,7 +2043,7 @@ class StreamingSpec extends SparkTestBase {
   test("pending ownership covers the start() window: a claim taken " +
       "before the query exists already blocks compaction, and is " +
       "released on cancel or delegated on bind") {
-    val dir = Files.createTempDirectory("graft_lsm_pending").toString
+    val dir = tempDir("lsm_pending")
     val layout = LsmLayout(Seq("__p"), Seq("__p"),
       df => df.withColumn("__p",
         org.apache.spark.sql.functions.pmod(
@@ -2067,7 +2078,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming KS drift: additive histogram state reproduces the " +
       "batch statistic across arbitrary batch splits; replay is exact") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_ks").toString
+    val dir = tempDir("stream_ks")
     val ref = (1 to 60).map(i => (i % 10).toLong).toDF("v")
     val streamed = (1 to 40).map(i => (i % 10 + 3).toLong).toDF("v")
     streamed.filter($"v" % 2 === 0).coalesce(1).write.parquet(s"$dir/in/b1")
@@ -2077,7 +2088,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/in/*")
     val q = StreamingKsDrift.start(spark, stream, "v",
       s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("stream_ks", q)
     val got = StreamingKsDrift.report(spark, s"$dir/state", ref, "v")
       .as[(Double, Double)].head()
     val want = graft.operators.CorpusStats.ksStatistic(ref, streamed, "v")
@@ -2099,7 +2110,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming RFM: out-of-order batches fold to the exact batch " +
       "totals (max/sum/sum associativity), replay overwrites its own tail") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_rfm").toString
+    val dir = tempDir("stream_rfm")
     val ev = Seq(
       // user 1 split across batches, deliberately time-disordered
       (1L, 100L, 5.0), (1L, 50L, 2.5), (1L, 200L, 1.0),
@@ -2113,7 +2124,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/in/*")
     val q = StreamingRfm.start(spark, stream, "user_id", "ts", "value",
       s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("stream_rfm", q)
     val got = StreamingRfm.report(spark, s"$dir/state", "user_id")
       .select("user_id", "recency_ns", "frequency", "monetary")
       .as[(Long, Long, Long, Double)].collect()
@@ -2139,7 +2150,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming fuzzy decontamination: drained kept set equals the batch " +
       "operator, replay overwrites its own partition, bench stays static") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_stream_fuzzy").toString
+    val dir = tempDir("stream_fuzzy")
     val mk = (s: String) => s"$s shared core sentence with many common words here"
     val docs = Seq(
       (1L, mk("alpha"), "en"), (2L, mk("beta"), "en"),
@@ -2156,7 +2167,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/in/*")
     val q = StreamingFuzzyDecontaminate.start(spark, stream, bench,
       "doc_id", "text", s"$dir/kept", s"$dir/cp", threshold = 0.6)
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("stream_fuzzy", q)
     val got = StreamingFuzzyDecontaminate.kept(spark, s"$dir/kept")
       .select("doc_id", "lang").as[(Long, String)].collect().toSet
     val want = graft.operators.Dedup
@@ -2183,7 +2194,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming rolling actives: drained report equals the batch " +
       "operator, replays are exact, only affected days re-emit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sra").toString
+    val dir = tempDir("sra")
     def ns(day: Long) = day * 86400L * 1000000000L + 5L
     val b0 = Seq((ns(0), 1L), (ns(0), 2L), (ns(1), 1L))
       .toDF("ts_ns", "user_id")
@@ -2219,7 +2230,7 @@ class StreamingSpec extends SparkTestBase {
       "block state, drained report equals the batch g14 sweep, replays and " +
       "compaction are exact, untouched keys do not re-emit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sic").toString
+    val dir = tempDir("sic")
     // user 1: batch 0 plants [0,10] and [20,30]; batch 1's [5,25] BRIDGES
     // them (the cross-batch merge only state can see); user 2 exists only
     // in batch 0; user 3 only in batch 1 (with a degenerate interval)
@@ -2264,7 +2275,7 @@ class StreamingSpec extends SparkTestBase {
       "key whose merged disjoint blocks exceed maxBlocksPerKey fails the " +
       "batch with a diagnostic BEFORE the fat row lands in state") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sic_cap").toString
+    val dir = tempDir("sic_cap")
     // key 7: disjoint micro-intervals (gap 1 apart) -> one block each;
     // key 1 stays human-scale and must survive the same batches
     def run(b: org.apache.spark.sql.DataFrame, id: Long, cap: Int): Unit =
@@ -2296,7 +2307,7 @@ class StreamingSpec extends SparkTestBase {
       "persisted last_t, drained report equals the batch g15, replays are " +
       "exact, and out-of-order ingest throws the monotone contract") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sbu").toString
+    val dir = tempDir("sbu")
     // user 1: in-batch gap 5 then a cross-batch boundary gap 10;
     // user 2: single event in b0, its FIRST gap only exists via state
     val b0 = Seq((1L, 0L, 1L), (1L, 5L, 2L), (2L, 100L, 3L))
@@ -2343,7 +2354,7 @@ class StreamingSpec extends SparkTestBase {
       "sensitive values through membership facts, a class crosses the k " +
       "threshold mid-stream, replays and compaction are exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ska").toString
+    val dir = tempDir("ska")
     val b0 = Seq(("A", "x"), ("A", "x"), ("A", "y"), ("B", "x"))
       .toDF("zip", "disease")
     val b1 = Seq(("A", "z"), ("B", "x")).toDF("zip", "disease")
@@ -2382,7 +2393,7 @@ class StreamingSpec extends SparkTestBase {
       "its own cumulative counters across batches and null-sensitive rows " +
       "never count as membership facts — drained == batch audit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ska_null").toString
+    val dir = tempDir("ska_null")
     // null zip = its own auditable class (the v03 contract); null
     // disease = a row with NO membership fact (countDistinct semantics)
     val b0 = Seq((null, "x"), (null, null), ("A", null), ("A", "x"))
@@ -2418,7 +2429,7 @@ class StreamingSpec extends SparkTestBase {
       "batches (no time contract — min/max merge is associative), drained " +
       "curve equals the batch g17, replays and compaction are exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ssv").toString
+    val dir = tempDir("ssv")
     // user 1's LAST event arrives before its FIRST (deliberate disorder);
     // user 2 exists in one batch; user 3 spans both
     val b0 = Seq((1L, 90L), (3L, 0L), (3L, 40L)).toDF("user_id", "ts_us")
@@ -2451,7 +2462,7 @@ class StreamingSpec extends SparkTestBase {
       "history through the shared batch-eval code, replays and compaction " +
       "are exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_spr").toString
+    val dir = tempDir("spr")
     // scores with cross-batch repeats and ties; labels imbalanced
     val b0 = Seq((0.95, 1), (0.95, 0), (0.40, 0), (0.80, 1))
       .toDF("score", "y")
@@ -2496,7 +2507,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_ste").toString
+    val dir = tempDir("ste")
     val cols = Seq("user_id", "event_type", "ts_us", "event_id")
     val b0 = Seq((1L, "a", 1L, 10L), (1L, "b", 2L, 11L))
       .toDF(cols: _*)
@@ -2544,7 +2555,7 @@ class StreamingSpec extends SparkTestBase {
       "every batch answers the fixed panel over the cumulative index " +
       "through the shared scoring tail, replays and compaction are exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sbm").toString
+    val dir = tempDir("sbm")
     val b0 = Seq((1L, "apple banana cherry"), (2L, "apple apple durian"))
       .toDF("doc_id", "text")
     val b1 = Seq((3L, "banana banana banana"), (4L, "unique quince zebra"))
@@ -2584,7 +2595,7 @@ class StreamingSpec extends SparkTestBase {
       "persisted chunk-key store, drained report equals the batch m08, " +
       "replays and compaction are exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_scd").toString
+    val dir = tempDir("scd")
     val rnd = new scala.util.Random(11)
     val a = Array.fill[Byte](2048)((rnd.nextInt(256) - 128).toByte)
     val b = Array.fill[Byte](2048)((rnd.nextInt(256) - 128).toByte)
@@ -2624,7 +2635,7 @@ class StreamingSpec extends SparkTestBase {
       "replay is idempotent, compaction preserves later probes, the " +
       "skew guard drops hot buckets with an observed metric") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_e33_spec").toString
+    val dir = tempDir("e33_spec")
     val rnd = new scala.util.Random(41)
     def grid(): Seq[Int] = Seq.fill(1024)(rnd.nextInt(256))
     val g1 = grid(); val g2 = grid(); val g3 = grid()
@@ -2681,7 +2692,7 @@ class StreamingSpec extends SparkTestBase {
       "alignment counts match the batch operator exactly (no " +
       "double-probe doubling), replay and compaction are exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_e34_spec").toString
+    val dir = tempDir("e34_spec")
     val rnd = new scala.util.Random(43)
     val base = Array.fill[Byte](640)((rnd.nextInt(96) + 32).toByte)
     val pad = Array.fill[Byte](32)('P'.toByte)
@@ -2730,7 +2741,7 @@ class StreamingSpec extends SparkTestBase {
       "pairs match the batch operator exactly, replay and compaction " +
       "are exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_e37_spec").toString
+    val dir = tempDir("e37_spec")
     val rnd = new scala.util.Random(53)
     val base = Array.fill[Byte](640)((rnd.nextInt(96) + 32).toByte)
     val clip = base.drop(160) // drops frames 0..9
@@ -2776,7 +2787,7 @@ class StreamingSpec extends SparkTestBase {
       "audit, replay is idempotent, compaction preserves the report, " +
       "null classes and null sensitive follow the batch contract") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_e31_spec").toString
+    val dir = tempDir("e31_spec")
     // batch 1: A balanced over {x, y}; B is the large balanced ANCHOR
     // class (a small class can only drift from a global it does not
     // itself dominate); global = x:22, y:21
@@ -2833,7 +2844,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming NB training: drained merge-on-read model equals batch " +
       "train under cross-batch token overlap; compaction is invisible") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_snb").toString
+    val dir = tempDir("snb")
     // 'buy' counts split across batches; 'friend' only in batch 2 —
     // both the summed-delta and the new-token paths are exercised
     val b1 = Seq(("spam", "buy now buy"), ("ham", "hello there"))
@@ -2845,7 +2856,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingNbTrain.start(spark, stream, "text", "label",
       s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("snb", q)
     def model() = StreamingNbTrain.currentModel(spark, s"$dir/state", "label")
       .as[(String, String, Long, Double)].collect().sorted.toSeq
     val batchTruth = graft.operators.TextAnalysis.naiveBayesTrain(
@@ -2868,7 +2879,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming NB training replay idempotence: a replayed in-flight " +
       "batch (including batch 0) never double-counts") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_snb_replay").toString
+    val dir = tempDir("snb_replay")
     val b1 = Seq(("spam", "buy now"), ("ham", "hello"))
     val b2 = Seq(("spam", "buy"))
     val cols = Seq("label", "text")
@@ -2878,7 +2889,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingNbTrain.start(spark, stream, "text", "label",
       s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("snb_replay", q)
     def counts() = StreamingNbTrain.storedCounts(spark, s"$dir/state")
       .as[(String, String, Long)].collect().sorted.toSeq
     val c0 = counts()
@@ -2896,7 +2907,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming classifier eval: drained merge-on-read report equals " +
       "batch classifierEval; replays and compaction are invisible") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sceval").toString
+    val dir = tempDir("sceval")
     // class 'a' splits its tp/fp across batches; 'c' appears only in
     // batch 2 — both the summed-delta and the new-class paths exercise
     val b1 = Seq(("a", "a"), ("a", "b"), ("b", "b"))
@@ -2908,7 +2919,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingClassifierEval.start(spark, stream, "truth", "pred",
       s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("sceval", q)
     def report() = StreamingClassifierEval.currentEval(spark, s"$dir/state")
       .collect().map(_.toString).sorted.toSeq
     val batchTruth = graft.operators.CorpusStats.classifierEval(
@@ -2938,7 +2949,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming LR training: drained model equals batch logRegTrain " +
       "under any batching; compaction is invisible") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_slr").toString
+    val dir = tempDir("slr")
     val b1 = Seq((1L, 1, "ppp aa bb"), (2L, 0, "nnn aa cc"))
     val b2 = Seq((3L, 1, "ppp cc"), (4L, 0, "nnn bb"))
     val cols = Seq("doc_id", "y", "text")
@@ -2948,7 +2959,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingLrTrain.start(spark, stream, "doc_id", "text", col("y"),
       dim = 32, s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("slr", q)
     def model() = StreamingLrTrain.currentModel(spark, s"$dir/state",
         "doc_id", dim = 32, rounds = 3, eta = 5.0)
       .as[(Int, java.math.BigDecimal)].collect().sortBy(_._1).toSeq
@@ -2973,7 +2984,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming LR training replay idempotence: a replayed in-flight " +
       "batch (including batch 0) never double-banks features") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_slr_replay").toString
+    val dir = tempDir("slr_replay")
     val b1 = Seq((1L, 1, "ppp aa"), (2L, 0, "nnn bb"))
     val b2 = Seq((3L, 1, "ppp cc"))
     val cols = Seq("doc_id", "y", "text")
@@ -2983,7 +2994,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingLrTrain.start(spark, stream, "doc_id", "text", col("y"),
       dim = 32, s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("slr_replay", q)
     def feats() = StreamingLrTrain.storedFeatures(spark, s"$dir/state", "doc_id")
       .as[(Long, Int, Int, Double)].collect().sorted.toSeq
     val f0 = feats()
@@ -2999,7 +3010,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming retrieval eval: drained pooled report equals batch " +
       "retrievalEval; compaction is invisible") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sre").toString
+    val dir = tempDir("sre")
     // two query shards; q1 has a hit at rank 1 and a miss, q2 retrieves
     // nothing relevant, q3 arrives in batch 2 with a rank-2 hit
     val qrels = Seq(
@@ -3015,7 +3026,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("sre", q)
     def report() = StreamingRetrievalEval.currentEval(spark, s"$dir/state")
       .as[(Long, Double, Double, Double)].head()
     val batchTruth = graft.operators.CorpusStats.retrievalEval(
@@ -3035,7 +3046,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming retrieval eval replay idempotence: a replayed batch " +
       "never double-weights its queries") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sre_replay").toString
+    val dir = tempDir("sre_replay")
     val qrels = Seq((1L, 10L, 1), (2L, 20L, 1)).toDF("query_id", "doc_id", "grade")
     val b1 = Seq((1L, 10L, 1))
     val b2 = Seq((2L, 20L, 1))
@@ -3047,7 +3058,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("sre_replay", q)
     def rows() = StreamingRetrievalEval.storedMetrics(spark, s"$dir/state")
       .collect().map(_.toString).sorted.toSeq
     val r0 = rows()
@@ -3062,7 +3073,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming DP NB release: drained release equals batch " +
       "dpNbModelRelease; replay and compaction are invisible") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sdp").toString
+    val dir = tempDir("sdp")
     // 'a' counts split across batches under label x; cap L=2 bites doc 1
     val b1 = Seq(("x", "b a a c"), ("y", "a q"))
     val b2 = Seq(("x", "a zz"), ("x", "a b"))
@@ -3073,7 +3084,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingDpNbRelease.start(spark, stream, "text", "label",
       maxTokensPerDoc = 2, s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("sdp", q)
     def release() = StreamingDpNbRelease.currentRelease(spark,
         s"$dir/state", "label", maxTokensPerDoc = 2, epsilon = 1e9,
         threshold = 1.5, seed = "s1:")
@@ -3100,7 +3111,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming config-as-query resolves the trained-classifier stage: " +
       "a (qualityGate -> lrScreen) YAML drains to the batch compile's kept set") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sc_lr").toString
+    val dir = tempDir("sc_lr")
     // labeled train corpus for the screen (aux table, batch-bound)
     val train = (1L to 12L).map { i =>
       val pos = i % 2 == 0
@@ -3140,7 +3151,7 @@ class StreamingSpec extends SparkTestBase {
     val q = StreamingCuration.startFromConfig(spark, stream, cfg,
       Map("labeled" -> train), "doc_id", "text", "lang",
       s"$dir/fp", s"$dir/kept", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("sc_lr", q)
     val streamed = spark.read.parquet(s"$dir/kept")
       .select("doc_id").as[Long].collect().sorted.toSeq
     val batchKept = graft.pipeline.StagePipeline.compile(cfg,
@@ -3156,7 +3167,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming scene segments: drained scenes equal batch m13 under " +
       "any batching; a replayed batch rewrites exactly its own rows") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_ssc").toString
+    val dir = tempDir("ssc")
     val media = (1L to 9L).map(i =>
       (i, (("a" * 40) + ("z" * 40) * (i % 3).toInt).getBytes("UTF-8")))
     val df = media.toDF("media_id", "content")
@@ -3180,7 +3191,7 @@ class StreamingSpec extends SparkTestBase {
       "batch retro-drops from early pages (merge-on-read); replay exact; " +
       "drained equals batch") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sst").toString
+    val dir = tempDir("sst")
     val motto = "<p>our quality motto repeats on every page of this host</p>"
     def page(i: Long) = (i,
       s"$motto<p>unique article number $i body with plenty of words here</p>",
@@ -3216,7 +3227,7 @@ class StreamingSpec extends SparkTestBase {
       "under any batching (late links raise early pages); replay exact; " +
       "link-less pages keep their teleport rank") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_swg").toString
+    val dir = tempDir("swg")
     // pages 1..6: page i links to doc i/2 via a RELATIVE href (the
     // resolution path is load-bearing); page 6 has no links at all
     def page(i: Long) = (i,
@@ -3254,7 +3265,7 @@ class StreamingSpec extends SparkTestBase {
       "(merge-on-read counts); replay must not inflate; drained equals " +
       "batch schedule") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_sfr").toString
+    val dir = tempDir("sfr")
     // /p/hot is mentioned once in batch 0 and twice in batch 1 — its
     // rank-1 spot only exists if counts accumulate ACROSS batches
     val b0 = Seq("http://a.io/p/hot", "http://a.io/p/cold1",
@@ -3283,7 +3294,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming retrieval eval qrels-aware report: a judged query the " +
       "system never retrieved for zero-fills to match batch") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_srz").toString
+    val dir = tempDir("srz")
     // q9 is judged but the system retrieves NOTHING for it — it appears
     // in no micro-batch, so only the qrels-aware overload can count it
     val qrels = Seq((1L, 10L, 1), (9L, 90L, 1))
@@ -3296,7 +3307,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
     val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
-    assert(q.awaitTermination(120000), "stream did not drain")
+    StreamHarness.drain("srz", q)
     val batchTruth = graft.operators.CorpusStats.retrievalEval(
         runs.toDF("query_id", "doc_id", "rank"), qrels, k = 3)
       .as[(Long, Double, Double, Double)].head()
