@@ -4,7 +4,7 @@ import graft.expr.MvelTranslator
 import graft.model._
 import graft.schema.Reconciler
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -36,12 +36,15 @@ object MigrationPlanner {
 
   /** Result of planning: the write-ready DataFrame plus reconciliation
     * diagnostics (dropped columns / warnings — reference behavior
-    * DefaultMigratorPlugin.java:256-269).
+    * DefaultMigratorPlugin.java:256-269) and the target as loaded for the
+    * plan (None when it does not exist yet), so execution never probes it
+    * again.
     */
   final case class Planned(
       data: DataFrame,
       reconciliation: Reconciler.Reconciliation,
-      failedRows: Option[DataFrame])
+      failedRows: Option[DataFrame],
+      target: Option[DataFrame])
 
   /** Fill in pkColumns from connector metadata when the definition leaves
     * them empty — the reference discovers PKs from cluster metadata instead
@@ -78,7 +81,7 @@ object MigrationPlanner {
         (s"upsert on '${t.tableName}' has pkColumns but no orderingColumns: " +
           "duplicate-PK rows are not deduplicated"))
     else rec
-    Planned(df, rec2, failed)
+    Planned(df, rec2, failed, target)
   }
 
   /** The narrow (shuffle-free, streaming-safe) prefix of the plan:
@@ -295,8 +298,10 @@ object MigrationPlanner {
     * O16 dry-run: full plan executes against a `noop` sink — identical to
     * the reference's bind-everything-skip-execute gate
     * (DefaultMigratorPlugin.java:393-401).
-    * O20 observability: `observe` counts rows actually flowing into the
-    * sink without a separate count() job.
+    * O20 observability: an [[Observation]] counts the rows flowing into the
+    * sink (and into the dead letter) without a separate count() job; the
+    * reference's per-table migrated/failed totals
+    * (MigrateTableTask.java:146-151).
     */
   def execute(spark: SparkSession, cfg: MigrationConfig, t: TableMigrationDef): MigrationResult = {
     val startNanos = System.nanoTime()
@@ -311,139 +316,85 @@ object MigrationPlanner {
     val paced = t.pauseMillisBetweenPages.filter(_ > 0 && !t.simulateOnly)
       .map(p => Throttle.paced(planned.data, t.pageSize.getOrElse(5000), p))
       .getOrElse(planned.data)
-    val metricName = s"graft_${t.tableName}_${System.identityHashCode(planned)}"
-    val observed = paced.observe(metricName, count(lit(1)).as("rows_migrated"))
-    // the write runs in its own QueryExecution — capture the CollectMetrics
-    // result through the listener bus (no extra count() job: O20 for free)
-    @volatile var captured: Option[Long] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get(metricName).foreach(r =>
-          captured = Some(r.getAs[Long]("rows_migrated")))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    // Write-mode disposition against a pre-existing target:
-    //  - anti-join modes produce ONLY the new rows => APPEND (existing rows
-    //    must survive, and appending never conflicts with the scan);
-    //  - merge modes (patchNullsFromTarget) produce the FULL result set but
-    //    READ the target in the same plan — Spark refuses to overwrite a
-    //    path it is reading, so materialize to a staging path and swap.
-    // patchNullsFromTarget produces the FULL merged set, so it must never
-    // take the append branch even when an anti-join filter is also present
+    val migrated = Observation()
+    val observed = paced.observe(migrated, count(lit(1)).as("rows_migrated"))
+    // anti-join modes produce ONLY the new rows; patchNullsFromTarget
+    // produces the FULL merged set, so it never counts as new-rows-only even
+    // when an anti-join filter is also present
     val producesOnlyNewRows = !t.patchNullsFromTarget &&
       (t.writeMode == InsertIfNotExists || t.filters.contains(IfNotExistFilter))
-    val readsTarget = producesOnlyNewRows || t.patchNullsFromTarget
-    // existence probed through the source abstraction (works for DSv2
-    // table targets and file: prefixes, not just bare local paths)
-    val targetExists =
-      Tables.loadIfExists(spark, cfg.target, t.resolvedTargetName).isDefined
-    // pre-write footprint for the append path: lets the listener-miss
-    // fallback report appended = after - before instead of re-executing the
-    // anti-join AFTER the rows landed (which would anti-join them all away
-    // and report 0). Parquet footer statistics make this metadata-cheap —
-    // for PATH targets only: a connector COUNT is a full table scan, not a
-    // price to pay up front on every migration for a rare fallback.
+    val targetExists = planned.target.isDefined
     val pathTarget = Tables.isPathFormat(cfg.target)
-    val targetCountBefore: Long =
-      if (producesOnlyNewRows && targetExists && !t.simulateOnly && pathTarget)
-        Tables.loadIfExists(spark, cfg.target, t.resolvedTargetName)
-          .map(_.count()).getOrElse(0L)
-      else 0L
     var extraWarnings: Seq[String] = Nil
+    def write(mode: String): Unit = Tables.write(observed, cfg.target,
+      t.resolvedTargetName, mode = mode, ttlColumn = t.ttl.map(_.ttlColumn))
     // O20 periodic status lines while the write runs (reference interval
     // logging, MigrateTableTask.java:369-413)
     val progress = cfg.statusIntervalMillis.map { interval =>
       val r = new BatchProgressReporter(spark, t.tableName, interval)
       r.start(); r
     }
-    spark.listenerManager.register(listener)
     try {
-      val ttlCol = t.ttl.map(_.ttlColumn)
-      if (t.simulateOnly) {
-        observed.write.format("noop").mode("overwrite").save()
-      } else if (producesOnlyNewRows && targetExists) {
-        Tables.write(observed, cfg.target, t.resolvedTargetName, mode = "append",
-          ttlColumn = ttlCol)
-      } else if (readsTarget && targetExists) {
-        if (Tables.isLocalPath(cfg.target, t.resolvedTargetName)) {
-          Tables.writeReplacing(observed, cfg.target, t.resolvedTargetName)
-        } else if (Tables.isPathFormat(cfg.target)) {
-          throw PlanError(
-            s"merge-mode write to remote path target '${t.resolvedTargetName}' " +
-              "needs a staging swap, which is only implemented for local paths")
-        } else {
-          // table-addressed connector: row-level upsert semantics make a
-          // plain append the correct merge write
-          Tables.write(observed, cfg.target, t.resolvedTargetName, mode = "append",
-            ttlColumn = ttlCol)
-        }
-      } else if (targetExists && !Tables.isPathFormat(cfg.target)) {
-        // plain upsert into a live connector table: the reference's CQL
-        // upsert NEVER removes existing rows, and mode=overwrite can
-        // TRUNCATE a live table through some DSv2 connectors — append is
-        // the faithful write (per-row last-write-wins at the connector)
-        Tables.write(observed, cfg.target, t.resolvedTargetName, mode = "append",
-          ttlColumn = ttlCol)
+      // Write disposition against the target, one case each:
+      //  - nothing to preserve (no live target): overwrite;
+      //  - new rows only: append — existing rows must survive, and
+      //    appending never conflicts with the anti-join's scan;
+      //  - a live connector table: append — the reference's CQL upsert
+      //    NEVER removes existing rows (row-level last-write-wins at the
+      //    connector), and mode=overwrite can TRUNCATE a live table through
+      //    some DSv2 connectors;
+      //  - merge into a path target: the plan READS the target, and Spark
+      //    refuses to overwrite a path it is reading, so materialize to a
+      //    staging path and swap;
+      //  - plain write over a path target: overwrite replaces the whole
+      //    table, so target rows absent from the source are DROPPED (the
+      //    reference's row-wise upsert would keep them) — warn loudly.
+      if (t.simulateOnly) observed.write.format("noop").mode("overwrite").save()
+      else if (!targetExists) write("overwrite")
+      else if (producesOnlyNewRows || !pathTarget) write("append")
+      else if (t.patchNullsFromTarget) {
+        if (!Tables.isLocalPath(cfg.target, t.resolvedTargetName)) throw PlanError(
+          s"merge-mode write to remote path target '${t.resolvedTargetName}' " +
+            "needs a staging swap, which is only implemented for local paths")
+        Tables.writeReplacing(observed, cfg.target, t.resolvedTargetName)
       } else {
-        if (targetExists && t.writeMode == Upsert)
-          // populated path target without patchNullsFromTarget: overwrite
-          // replaces the whole table, so target rows absent from the source
-          // are DROPPED — the reference's row-wise upsert would keep them.
-          // Loud warning; merge semantics need patchNullsFromTarget=true.
+        if (t.writeMode == Upsert)
           extraWarnings :+= (s"upsert over existing target " +
             s"'${t.resolvedTargetName}' overwrites it: target rows absent " +
             "from the source are dropped (set patchNullsFromTarget=true " +
             "for merge semantics)")
-        Tables.write(observed, cfg.target, t.resolvedTargetName, ttlColumn = ttlCol)
+        write("overwrite")
       }
-      var waitedMs = 0
-      while (captured.isEmpty && waitedMs < 10000) { Thread.sleep(20); waitedMs += 20 }
-    } finally {
-      spark.listenerManager.unregister(listener)
-      progress.foreach(_.stop())
-    }
+    } finally progress.foreach(_.stop())
+    val rowsMigrated = observedCount(migrated, "rows_migrated", t)
     // O19 dead-letter handling: failed rows are preserved next to the
     // target (reference counts rowsFailed and proceeds,
     // MigrateTableTask.java:496-517)
-    val rowsFailed = planned.failedRows.map { f =>
-      if (!t.simulateOnly) {
-        Tables.write(f, cfg.target, t.resolvedTargetName + "_dead_letter")
-        // count what was actually persisted (footer-cheap) — re-running the
-        // dead-letter plan after the target was mutated could drift
-        Tables.loadIfExists(spark, cfg.target, t.resolvedTargetName + "_dead_letter")
-          .map(_.count()).getOrElse(0L)
-      } else f.count()
-    }.getOrElse(0L)
-    val elapsedMs = (System.nanoTime() - startNanos) / 1000000L
-    // listener missed the window (loaded bus, long GC): fall back to the
-    // cheapest truthful count — written-output footer counts, never a
-    // re-execution of a plan whose inputs the write just mutated
-    val rowsMigrated = captured.getOrElse {
-      if (t.simulateOnly) planned.data.count()
-      else if (producesOnlyNewRows && targetExists && pathTarget)
-        Tables.loadIfExists(spark, cfg.target, t.resolvedTargetName)
-          .map(_.count()).getOrElse(0L) - targetCountBefore
-      else if (producesOnlyNewRows && targetExists) {
-        // connector target with a missed listener: the appended rows are
-        // already IN the target, so no cheap truthful count exists —
-        // re-running the anti-join would report 0. Flag it instead of lying.
-        extraWarnings :+= ("rowsMigrated unavailable: observed-metric " +
-          "listener missed and the connector target has no cheap count; " +
-          "reporting 0 (rows WERE appended)")
-        0L
-      } else
-        Tables.loadIfExists(spark, cfg.target, t.resolvedTargetName)
-          .map(_.count()).getOrElse(planned.data.count())
+    val rowsFailed = planned.failedRows.fold(0L) { f =>
+      if (t.simulateOnly) f.count()
+      else {
+        val failed = Observation()
+        Tables.write(f.observe(failed, count(lit(1)).as("rows_failed")),
+          cfg.target, t.resolvedTargetName + "_dead_letter")
+        observedCount(failed, "rows_failed", t)
+      }
     }
     MigrationResult(
       t.tableName,
       rowsMigrated = rowsMigrated,
       rowsFailed = rowsFailed,
-      elapsedMillis = elapsedMs,
+      elapsedMillis = (System.nanoTime() - startNanos) / 1000000L,
       warnings = planned.reconciliation.warnings ++ extraWarnings)
   }
+
+  /** The count an [[Observation]] took of a finished write. Spark completes
+    * an observation with an empty row when its query reports no metric for
+    * it; that is an error here, never a count of 0.
+    */
+  private def observedCount(obs: Observation, metric: String, t: TableMigrationDef): Long =
+    obs.get.getOrElse(metric, throw PlanError(
+      s"write of '${t.tableName}' finished without its observed $metric metric"))
+      .asInstanceOf[Long]
 
   /** Run a whole config — the reference's `DbMigrator.migrate()`
     * (DbMigrator.java:39-106). Sequential by default (dependent tables must

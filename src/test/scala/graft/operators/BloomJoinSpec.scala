@@ -21,30 +21,14 @@ class BloomJoinSpec extends SparkTestBase {
     assert(got.nonEmpty && got.map(_._1).toSet === Set(7L, 13L, 400L))
     // the observe metric reports realized selectivity: of 2000 fact rows
     // only the 3 matching keys' rows (plus <= fpp false positives) pass
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      @volatile var in = -1L
-      @volatile var kept = -1L
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        qe.observedMetrics.get("bloom_join_pruned").foreach { r =>
-          in = r.getAs[Long]("fact_rows_in")
-          kept = r.getAs[Long]("fact_rows_kept")
-        }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      joined.count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (listener.in < 0 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(listener.in === 2000L, s"observe saw ${listener.in} fact rows")
-      // 3 matching keys x 4 fact rows each = 12 true rows; a 1% fpp
-      // filter over 500 distinct keys admits a handful more at most
-      assert(listener.kept >= 12L && listener.kept <= 100L,
-        s"bloom kept ${listener.kept} of 2000 — pruning is not happening")
-    } finally spark.listenerManager.unregister(listener)
+    val (_, metrics) = observedMetrics("bloom_join_pruned")(joined.count())
+    val in = metrics("bloom_join_pruned").getAs[Long]("fact_rows_in")
+    val kept = metrics("bloom_join_pruned").getAs[Long]("fact_rows_kept")
+    assert(in === 2000L, s"observe saw $in fact rows")
+    // 3 matching keys x 4 fact rows each = 12 true rows; a 1% fpp
+    // filter over 500 distinct keys admits a handful more at most
+    assert(kept >= 12L && kept <= 100L,
+      s"bloom kept $kept of 2000 — pruning is not happening")
   }
 
   test("bloom pre-filter sits below the join in the plan (map-side prune)") {

@@ -165,26 +165,11 @@ class DedupSpec extends SparkTestBase {
     spark.conf.set("spark.sql.adaptive.optimizer.excludedRules",
       "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
     val clones = (1L to 40L).map(i => (i, 0x5A5A5A5A5A5A5A5AL)).toDF("doc_id", "sig")
-    @volatile var dropped: Option[Long] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get("simhash_subband_guard").foreach(r =>
-          dropped = Some(r.getAs[Long]("dropped_buckets")))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val got = try {
-      val n = Dedup.simhashPairsFromSignatures(clones, "doc_id", "sig",
+    val (got, metrics) = try observedMetrics("simhash_subband_guard") {
+      Dedup.simhashPairsFromSignatures(clones, "doc_id", "sig",
         maxHamming = 3, maxBucketSize = 10).count()
-      var waited = 0
-      while (dropped.isEmpty && waited < 10000) { Thread.sleep(50); waited += 50 }
-      n
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.unset("spark.sql.adaptive.optimizer.excludedRules")
-    }
+    } finally spark.conf.unset("spark.sql.adaptive.optimizer.excludedRules")
+    val dropped = metrics.get("simhash_subband_guard").map(_.getAs[Long]("dropped_buckets"))
     assert(got === 0L, "still-hot sub-buckets must be dropped, not joined quadratically")
     assert(dropped.exists(_ >= 1L), s"expected subband dropped_buckets >= 1, got $dropped")
   }
@@ -288,22 +273,11 @@ class DedupSpec extends SparkTestBase {
   test("skew guard publishes the dropped-bucket count as an observe metric") {
     val clones = (100L to 129L).map(i => (i, "identical text repeated all over the corpus"))
       .toDF("doc_id", "text")
-    @volatile var dropped: Option[Long] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get("minhash_skew_guard").foreach(r =>
-          dropped = Some(r.getAs[Long]("dropped_buckets")))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val (_, metrics) = observedMetrics("minhash_skew_guard") {
       Dedup.minhashNearDupPairs(clones.unionByName(docs), "doc_id", "text",
         threshold = 0.9, maxBucketSize = 10).count()
-      var waited = 0
-      while (dropped.isEmpty && waited < 10000) { Thread.sleep(50); waited += 50 }
-    } finally spark.listenerManager.unregister(listener)
+    }
+    val dropped = metrics.get("minhash_skew_guard").map(_.getAs[Long]("dropped_buckets"))
     // every band bucket holding the 30 clones exceeded the cap of 10
     assert(dropped.exists(_ >= 1L), s"expected dropped_buckets >= 1, got $dropped")
   }
@@ -318,25 +292,11 @@ class DedupSpec extends SparkTestBase {
     // prunes its CollectMetrics node — the subband metric is then
     // legitimately absent (zero drops by construction). It must be present
     // and zero whenever the first-level guard actually refined something.
-    @volatile var refined: Option[Long] = None
-    @volatile var dropped: Option[Long] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
-        qe.observedMetrics.get("simhash_skew_guard").foreach(r =>
-          refined = Some(r.getAs[Long]("refined_buckets")))
-        qe.observedMetrics.get("simhash_subband_guard").foreach(r =>
-          dropped = Some(r.getAs[Long]("dropped_buckets")))
-      }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val (_, metrics) = observedMetrics("simhash_skew_guard") {
       graft.SparkEntry.queries("d04_simhash_pairs")(spark, "/root/testdata/sf0.001").count()
-      var waited = 0
-      while (refined.isEmpty && waited < 10000) { Thread.sleep(50); waited += 50 }
-    } finally spark.listenerManager.unregister(listener)
+    }
+    val refined = metrics.get("simhash_skew_guard").map(_.getAs[Long]("refined_buckets"))
+    val dropped = metrics.get("simhash_subband_guard").map(_.getAs[Long]("dropped_buckets"))
     assert(refined.nonEmpty, "first-level simhash_skew_guard metric never fired")
     if (refined.exists(_ > 0L))
       assert(dropped.contains(0L),
@@ -569,24 +529,12 @@ class DedupSpec extends SparkTestBase {
       (2L, "PREFIX the zebra quilt jumps over seventeen lazy xylophones " +
         "while quietly plotting a grand escape from the dusty barn"))
       .toDF("doc_id", "text")
-    @volatile var dropped: Option[Long] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get("winnow_buckets").foreach(r =>
-          dropped = Some(r.getAs[Long]("dropped_buckets")))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val got = try {
-      val rows = Dedup.winnowingPairs(clones.unionByName(uniq), "doc_id", "text",
+    val (got, metrics) = observedMetrics("winnow_buckets") {
+      Dedup.winnowingPairs(clones.unionByName(uniq), "doc_id", "text",
           k = 8, window = 4, minShared = 2, maxBucketSize = 10)
         .as[(Long, Long, Long)].collect()
-      var waited = 0
-      while (dropped.isEmpty && waited < 10000) { Thread.sleep(50); waited += 50 }
-      rows
-    } finally spark.listenerManager.unregister(listener)
+    }
+    val dropped = metrics.get("winnow_buckets").map(_.getAs[Long]("dropped_buckets"))
     assert(got.map(r => (r._1, r._2)).toSet === Set((1L, 2L)),
       s"only the genuine pair must survive the cap: ${got.toSeq}")
     assert(dropped.exists(_ >= 1L), s"expected dropped_buckets >= 1, got $dropped")

@@ -491,25 +491,9 @@ class MultimodalSpec extends SparkTestBase {
       s"(${got.size} vs ${want.size})")
   }
 
-  private def guardMetric(name: String)(run: => Unit): Option[(Long, Long)] = {
-    @volatile var got: Option[(Long, Long)] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get(name).foreach(r =>
-          got = Some((r.getAs[Long]("dropped_buckets"),
-            r.getAs[Long]("max_bucket_size"))))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      run
-      var waited = 0
-      while (got.isEmpty && waited < 10000) { Thread.sleep(50); waited += 50 }
-      got
-    } finally spark.listenerManager.unregister(listener)
-  }
+  private def guardMetric(name: String)(run: => Unit): Option[(Long, Long)] =
+    observedMetrics(name)(run)._2.get(name).map(r =>
+      (r.getAs[Long]("dropped_buckets"), r.getAs[Long]("max_bucket_size")))
 
   test("audio_fp_skew_guard under fire: a jingle landmark shared by every " +
       "asset drops at the cap (observe-counted) and creates NO pairs; the " +

@@ -17,6 +17,19 @@ class PlannerSpec extends SparkTestBase {
   private lazy val tgtRef = TableRef(path = s"$dir/tgt")
   private def cfg = MigrationConfig(srcRef, tgtRef, Nil)
 
+  /** Run `action` and return it with the number of Spark jobs it launched
+    * from this thread, read off the status tracker by job group once the
+    * listener bus has delivered every job event.
+    */
+  private def jobsLaunched[T](action: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    val out = try action finally sc.clearJobGroup()
+    org.apache.spark.graft.ListenerBus.drain(spark, 30000)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     // A1-ish source table
@@ -141,6 +154,17 @@ class PlannerSpec extends SparkTestBase {
       targetTableName = Some("errors_t"),
       continueOnRowError = Some(false)))
     assertThrows[org.apache.spark.SparkThrowable](strict.data.collect())
+    // execute writes the good rows, and the bad one to the dead letter;
+    // each write's own observed count gives the totals
+    val r = MigrationPlanner.execute(spark, cfg, TableMigrationDef(
+      tableName = "errors_src",
+      targetTableName = Some("errors_t"),
+      continueOnRowError = Some(true),
+      simulateOnly = false))
+    assert(r.rowsMigrated === 2L)
+    assert(r.rowsFailed === 1L)
+    assert(Tables.load(spark, tgtRef, "errors_t_dead_letter")
+      .select("pk").as[String].collect() === Seq("r2"))
   }
 
   test("partitionBy option produces hive-partitioned target (pruning-ready)") {
@@ -222,12 +246,33 @@ class PlannerSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(Tables.tablePath(tgtRef, "incr_t"))
     Seq(("b", 20), ("c", 30)).toDF("k", "v")
       .write.mode("overwrite").parquet(Tables.tablePath(srcRef, "incr_src"))
-    val r = MigrationPlanner.execute(spark, cfg, TableMigrationDef(
+    Tables.countLoads.set(true) // diagnostic counter is opt-in (off in prod)
+    val before = Tables.loadCallCount(tgtRef, "incr_t")
+    val (r, jobs) = jobsLaunched(MigrationPlanner.execute(spark, cfg, TableMigrationDef(
       tableName = "incr_src", targetTableName = Some("incr_t"),
-      pkColumns = Seq("k"), writeMode = InsertIfNotExists, simulateOnly = false))
+      pkColumns = Seq("k"), writeMode = InsertIfNotExists, simulateOnly = false)))
     assert(r.rowsMigrated === 1L) // only 'c' is new
+    val targetLoads = Tables.loadCallCount(tgtRef, "incr_t") - before
+    assert(targetLoads === 1L, s"execute must load the target once (got $targetLoads)")
+    // one schema-inference job per parquet load (source, target) plus the
+    // write's two; a re-probe or a count of the target would add more
+    assert(jobs === 4, s"execute launched $jobs Spark jobs")
     val out = Tables.load(spark, tgtRef, "incr_t").as[(String, Int)].collect().toSet
     assert(out === Set(("a", 1), ("b", 2), ("c", 30)))
+  }
+
+  test("insert-if-not-exists with every source PK already present " +
+      "migrates 0 rows and leaves the target unchanged") {
+    Seq(("a", 1), ("b", 2)).toDF("k", "v")
+      .write.mode("overwrite").parquet(Tables.tablePath(tgtRef, "seen_t"))
+    Seq(("a", 10), ("b", 20)).toDF("k", "v")
+      .write.mode("overwrite").parquet(Tables.tablePath(srcRef, "seen_src"))
+    val r = MigrationPlanner.execute(spark, cfg, TableMigrationDef(
+      tableName = "seen_src", targetTableName = Some("seen_t"),
+      pkColumns = Seq("k"), writeMode = InsertIfNotExists, simulateOnly = false))
+    assert(r.rowsMigrated === 0L)
+    val out = Tables.load(spark, tgtRef, "seen_t").as[(String, Int)].collect().toSet
+    assert(out === Set(("a", 1), ("b", 2)))
   }
 
   test("patchNullsFromTarget EXECUTES via staging swap (target read+replaced)") {
@@ -250,5 +295,16 @@ class PlannerSpec extends SparkTestBase {
       TableMigrationDef("my_source_table_3", simulateOnly = true))))
     assert(results.map(_.table) === Seq("my_table_v1", "my_source_table_3"))
     assert(results.map(_.rowsMigrated) === Seq(4L, 5L))
+  }
+
+  test("parallel executeAll counts each table's real write separately") {
+    val results = MigrationPlanner.executeAll(spark, cfg.copy(parallel = true, tables = Seq(
+      TableMigrationDef("my_table_v1", targetTableName = Some("par_a"), simulateOnly = false),
+      TableMigrationDef("my_source_table_3", targetTableName = Some("par_b"),
+        simulateOnly = false))))
+    assert(results.map(r => r.table -> r.rowsMigrated) ===
+      Seq("my_table_v1" -> 4L, "my_source_table_3" -> 5L))
+    assert(Tables.load(spark, tgtRef, "par_a").count() === 4L)
+    assert(Tables.load(spark, tgtRef, "par_b").count() === 5L)
   }
 }
