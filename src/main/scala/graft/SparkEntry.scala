@@ -5,7 +5,7 @@ import graft.functions.GraftFunctions
 import graft.model._
 import graft.operators.{Cdc, CorpusStats, Dedup, Events, Governance, Graph, Layout, Multimodal, Similarity, TextAnalysis}
 import graft.pipeline.MigrationPlanner
-import graft.streaming.{StreamingCdcMerge, StreamingClassifierEval, StreamingCuration, StreamingDpNbRelease, StreamingDrift, StreamingEntityResolution, StreamingFrontier, StreamingHeavyHitters, StreamingLrTrain, StreamingMigration, StreamingNbTrain, StreamingNearDup, StreamingRedirects, StreamingRetrievalEval, StreamingSceneSegments, StreamingSemanticScreen, StreamingSiteTemplate, StreamHarness, StreamingTokenBudget, StreamingWarcDedup, StreamingWebGraph, StreamingWinnow}
+import graft.streaming.{BatchMarker, StreamingCdcMerge, StreamingClassifierEval, StreamingCuration, StreamingDpNbRelease, StreamingDrift, StreamingEntityResolution, StreamingFrontier, StreamingHeavyHitters, StreamingLrTrain, StreamingMigration, StreamingNbTrain, StreamingNearDup, StreamingRedirects, StreamingRetrievalEval, StreamingSceneSegments, StreamingSemanticScreen, StreamingSiteTemplate, StreamHarness, StreamingTokenBudget, StreamingWarcDedup, StreamingWebGraph, StreamingWinnow}
 import graft.schema.Reconciler
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -941,7 +941,7 @@ object SparkEntry {
       val q = StreamingTokenBudget.start(s, src, "doc_id", "text", budget,
         s"$tmp/state", s"$tmp/out", s"$tmp/cp")
       StreamHarness.drain("e09", q)
-      s.read.parquet(s"$tmp/out/batch=*")
+      BatchMarker.readAll(s, s"$tmp/out")
         .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))
     }),
 

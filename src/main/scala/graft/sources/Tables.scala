@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.model.TableRef
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
 /**
  * Source/sink bindings behind the `TableRef` abstraction (SURVEY §7.1).
@@ -71,34 +72,25 @@ object Tables {
   }
 
   /** Load a table if it exists (target snapshots for anti-joins may not).
-    * Local parquet paths are probed directly — avoids Spark logging a WARN
-    * + stacktrace for the (entirely expected) missing-target case.
+    * Local paths are probed directly — avoids Spark logging a WARN +
+    * stacktrace for the (entirely expected) missing-target case. Once a
+    * local path EXISTS, a load failure is corruption/permissions, not
+    * absence, and surfaces instead of silently disabling existence
+    * filtering / null-patching against this target. Elsewhere an
+    * analysis-time failure is absence/misconfiguration -> None, but
+    * transport/auth errors (IO, driver exceptions) are NOT absence and
+    * surface: treating them as "target is empty" would re-insert every
+    * existing row under anti-join modes.
     */
   def loadIfExists(spark: SparkSession, ref: TableRef, table: String): Option[DataFrame] = {
-    val p = tablePath(ref, table).stripPrefix("file:")
-    val localPath = pathFormats.contains(ref.format) && !p.contains("://")
-    if (localPath && !java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-      return None
-    if (localPath) {
-      // the path EXISTS: a load failure now is corruption/permissions, not
-      // absence — surface it instead of silently disabling existence
-      // filtering / null-patching against this target
+    val local = isLocalPath(ref, table)
+    if (local && !java.nio.file.Files.exists(
+        java.nio.file.Paths.get(tablePath(ref, table).stripPrefix("file:")))) None
+    else try {
       val df = load(spark, ref, table)
-      df.schema
+      df.schema // force analysis so a missing table surfaces here
       Some(df)
-    } else {
-      try {
-        val df = load(spark, ref, table)
-        df.schema // force analysis so a missing table surfaces here
-        Some(df)
-      } catch {
-        // analysis-time failures at load are absence/misconfiguration ->
-        // None; transport/auth errors (IO, driver exceptions) are NOT
-        // absence and must surface: treating them as "target is empty"
-        // would re-insert every existing row under anti-join modes
-        case _: org.apache.spark.sql.AnalysisException => None
-      }
-    }
+    } catch { case _: org.apache.spark.sql.AnalysisException if !local => None }
   }
 
   /** Primary-key columns a table-addressed DSv2 source advertises as its
@@ -127,27 +119,29 @@ object Tables {
     *                  keep it as an ordinary data column.
     */
   def write(df: DataFrame, ref: TableRef, table: String, mode: String = "overwrite",
-      ttlColumn: Option[String] = None): Unit = {
-    // `partitionBy` option: comma-separated columns -> hive-style partition
-    // layout on the target, enabling partition pruning for downstream reads
-    // (the 100 TB posture: migrated tables should be partitioned)
-    val partitionCols = ref.options.get("partitionBy")
+      ttlColumn: Option[String] = None): Unit = ref.format match {
+    case "noop" => df.write.format("noop").mode("overwrite").save()
+    case f if pathFormats.contains(f) => writer(df, ref, mode).save(tablePath(ref, table))
+    case _ =>
+      val ttlOpts = ttlColumn
+        .map(c => Map(ref.options.getOrElse("ttlOptionKey", "ttl") -> c))
+        .getOrElse(Map.empty)
+      writer(df, ref, mode, ttlOpts + ("table" -> table)).save()
+  }
+
+  /** `partitionBy` option: comma-separated columns -> hive-style layout,
+    * so downstream reads prune partitions (migrated tables at scale).
+    */
+  private def partitionCols(ref: TableRef): Seq[String] =
+    ref.options.get("partitionBy")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val opts = ref.options - "partitionBy" - "ttlOptionKey"
-    def withParts(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) =
-      if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w
-    ref.format match {
-      case "noop" => df.write.format("noop").mode("overwrite").save()
-      case f if pathFormats.contains(f) =>
-        withParts(df.write.format(f).options(opts).mode(mode))
-          .save(tablePath(ref, table))
-      case other =>
-        val ttlOpts = ttlColumn
-          .map(c => Map(ref.options.getOrElse("ttlOptionKey", "ttl") -> c))
-          .getOrElse(Map.empty)
-        withParts(df.write.format(other).options(opts ++ ttlOpts)
-          .option("table", table).mode(mode)).save()
-    }
+
+  /** Every target write's writer: partitionBy survives swaps and commits. */
+  private def writer(df: DataFrame, ref: TableRef, mode: String,
+      extra: Map[String, String] = Map.empty): DataFrameWriter[Row] = {
+    val w = df.write.format(ref.format)
+      .options(ref.options - "partitionBy" - "ttlOptionKey" ++ extra).mode(mode)
+    if (partitionCols(ref).nonEmpty) w.partitionBy(partitionCols(ref): _*) else w
   }
 
   /** Replace a path-based target that the writing plan is simultaneously
@@ -157,24 +151,45 @@ object Tables {
   def writeReplacing(df: DataFrame, ref: TableRef, table: String): Unit = {
     require(isLocalPath(ref, table),
       s"writeReplacing needs a local path-based target, got '${ref.format}'")
-    val path = java.nio.file.Paths.get(tablePath(ref, table).stripPrefix("file:"))
-    val staging = path.resolveSibling(path.getFileName.toString + ".staging")
-    deleteRecursively(staging)
-    // same writer shape as write() so the partitionBy layout survives swaps
-    val partitionCols = ref.options.get("partitionBy")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val w = df.write.format(ref.format).options(ref.options - "partitionBy")
-      .mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .save(staging.toString)
-    deleteRecursively(path)
-    java.nio.file.Files.move(staging, path)
+    val path = new Path(tablePath(ref, table))
+    val staging = path.suffix(".staging")
+    val fs = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    fs.delete(staging, true)
+    writer(df, ref, "overwrite").save(staging.toString)
+    fs.delete(path, true)
+    if (!fs.rename(staging, path)) throw new java.io.IOException(s"could not rename $staging")
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
+  /** Commit one streaming micro-batch into a path target so that a replay
+    * of the batch replaces its first attempt: write it to the sibling
+    * `<table>._graft_stage/<tag>` (outside the target, so a crash before
+    * the renames leaves an absent target absent), delete the target files
+    * `<tag>-*` of an earlier attempt, rename each staged file into its
+    * partition dir as `<tag>-<name>`, drop the stage. Only filesystem
+    * metadata calls beyond the write; one streaming writer per target.
+    */
+  def commitBatch(df: DataFrame, ref: TableRef, table: String, tag: String): Unit = {
+    val root = new Path(tablePath(ref, table))
+    val stage = new Path(root.suffix("._graft_stage"), tag)
+    writer(df, ref, "overwrite").save(stage.toString)
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val depth = partitionCols(ref).size
+    def atDepth(dir: Path, name: String) =
+      fs.globStatus(new Path(dir, "*/" * depth + name)).map(_.getPath)
+    atDepth(root, s"$tag-*").foreach(fs.delete(_, false))
+    atDepth(stage, "[^_.]*").foreach { src =>
+      val dir = Iterator.iterate(src.getParent)(_.getParent).take(depth).toSeq
+        .foldRight(root)((d, parent) => new Path(parent, d.getName))
+      fs.mkdirs(dir)
+      if (!fs.rename(src, new Path(dir, s"$tag-${src.getName}")))
+        throw new java.io.IOException(s"could not rename $src into $dir")
     }
+    fs.delete(stage.getParent, true)
+  }
+
+  /** The partition column that the layout of the earlier streaming sink
+    * (one `__graft_batch=<id>` dir per micro-batch) adds to a target;
+    * [[commitBatch]] cannot extend that layout.
+    */
+  val oldBatchColumn = "__graft_batch"
 }

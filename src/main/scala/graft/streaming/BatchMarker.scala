@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,9 +11,23 @@ import org.apache.spark.sql.functions._
  * its own partition), read as "the latest marker of batches before
  * mine" so a foreachBatch replay sees exactly the pre-batch value.
  * [[compact]] folds history to the reserved pre-run id −1, which makes
- * a run restarting at batch 0 still see it.
+ * a run restarting at batch 0 still see it. [[readAll]] is the one
+ * reader of every operator's batch-keyed output dirs.
  */
-private[streaming] object BatchMarker {
+private[graft] object BatchMarker {
+
+  /** Every row under `<dir>/batch=<id>`, through partition discovery of
+    * `dir` (a `batch=*` glob reads the same rows but logs a stack trace per
+    * read); the discovered `batch` column is dropped unless `keepBatch`.
+    */
+  def readAll(s: SparkSession, dir: String, keepBatch: Boolean = false): DataFrame =
+    if (keepBatch) s.read.parquet(dir) else s.read.parquet(dir).drop("batch")
+
+  /** Delete `dirs` recursively (a fresh run's batch 0 clears old output). */
+  def reset(s: SparkSession, dirs: String*): Unit = dirs.foreach { d =>
+    val p = new org.apache.hadoop.fs.Path(d)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
 
   def write(s: SparkSession, dir: String, batchId: Long, value: Long): Unit = {
     import s.implicits._

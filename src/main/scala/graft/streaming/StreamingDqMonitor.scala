@@ -62,7 +62,7 @@ object StreamingDqMonitor {
     * violations, total) summed over all batches.
     */
   def report(spark: SparkSession, countsDir: String): DataFrame =
-    spark.read.parquet(s"$countsDir/batch=*")
+    BatchMarker.readAll(spark, countsDir)
       .groupBy("check", "type", "table")
       .agg(sum(col("violations")).as("violations"),
         sum(col("total")).as("total"))

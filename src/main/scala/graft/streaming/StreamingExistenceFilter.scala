@@ -61,8 +61,7 @@ object StreamingExistenceFilter {
     // key types so the binary key encodings line up
     val seeded = initialPks.map { pks =>
       // distinct BEFORE seeding: Spark rejects initial state with multiple
-      // rows per key, and duplicate target PKs are a normal occurrence for
-      // the at-least-once file-sink path this filter fronts
+      // rows per key, and a user's target table may hold duplicate PKs
       val aligned = pks.select(pkCols.map(c =>
         col(c).cast(stream.schema(c).dataType).as(c)): _*).dropDuplicates()
       aligned.as(keyEnc).groupByKey((r: Row) => r)(keyEnc)

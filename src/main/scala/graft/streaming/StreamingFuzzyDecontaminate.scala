@@ -67,5 +67,5 @@ object StreamingFuzzyDecontaminate {
 
   /** The drained kept set (all batch partitions). */
   def kept(spark: SparkSession, keptDir: String): DataFrame =
-    spark.read.parquet(s"$keptDir/batch=*")
+    BatchMarker.readAll(spark, keptDir)
 }

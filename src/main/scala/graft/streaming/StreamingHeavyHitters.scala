@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * combined, bounded by vocabulary size, never by corpus occurrences.
  * Between CLEANLY-DRAINED runs, pay down the per-batch delta directories
  * with [[compactState]] — NOT [[StreamingNearDup.compactState]], which
- * rewrites to flat files the `batch=*` glob would no longer see.
+ * rewrites them to flat files that [[BatchMarker.readAll]] cannot read.
  *
  * The drained monitor equals the batch computation by construction:
  * ranking is [[TextAnalysis.topTokensFromCounts]] — shared code — over
@@ -44,17 +44,14 @@ object StreamingHeavyHitters {
       source.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        if (batchId == 0L) {
-          // fresh run (a resume from checkpoint never re-enters batch 0
-          // unless it crashed inside it — where a reset is the replay):
-          // the new run re-streams everything, so older runs' deltas
-          // would double-count
-          val p = new org.apache.hadoop.fs.Path(countsDir)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        }
+        // fresh run (a resume from checkpoint never re-enters batch 0
+        // unless it crashed inside it — where a reset is the replay): the
+        // new run re-streams everything, so older runs' deltas would
+        // double-count
+        if (batchId == 0L) BatchMarker.reset(s, countsDir)
         TextAnalysis.tokenCounts(batch, textCol)
           .write.mode("overwrite").parquet(s"$countsDir/batch=$batchId")
-        val accumulated = s.read.parquet(s"$countsDir/batch=*")
+        val accumulated = BatchMarker.readAll(s, countsDir)
           .groupBy("token").agg(sum(col("n")).as("n"))
         TextAnalysis.topTokensFromCounts(accumulated, k)
           .coalesce(1).write.mode("overwrite").parquet(outDir)
@@ -80,12 +77,11 @@ object StreamingHeavyHitters {
     // current goes to `.bak` first so a crash at ANY instant leaves a
     // complete copy on disk ([[recoverState]] heals the half-states)
     val tmp = s"$countsDir.compact"
-    spark.read.parquet(s"$countsDir/batch=*")
+    BatchMarker.readAll(spark, countsDir)
       .groupBy("token").agg(sum(col("n")).as("n"))
       .write.mode("overwrite").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(countsDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(countsDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bak = new org.apache.hadoop.fs.Path(s"$countsDir.bak")
     require(fs.rename(p, bak), s"could not stage $countsDir to $bak")
     fs.mkdirs(p)

@@ -4,6 +4,7 @@ import graft.model.{IfNotExistFilter, InsertIfNotExists, MigrationConfig, TableM
 import graft.pipeline.MigrationPlanner
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
@@ -24,12 +25,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  *    per-page semantics;
  *  - task parallelism inside a batch replaces the write pool (O18).
  *
- * At scale, sink batches are retry-safe: each micro-batch overwrites its
- * own `__graft_batch=<id>` partition directory, so replaying a batch after
- * a crash rewrites the same files instead of appending duplicates (the
- * reference's counter path is NOT retry-safe — SURVEY §7.4 "counter
- * idempotence"). Readers see `__graft_batch` as an ordinary partition
- * column.
+ * Sink batches are replay-safe: a path target takes each micro-batch
+ * through [[Tables.commitBatch]] tagged `<queryId>-b<batchId>`, so a batch
+ * re-run after a crash replaces its first attempt's files — in every write
+ * mode, absent or populated target (the reference's counter path is NOT
+ * retry-safe — SURVEY §7.4). A table-addressed connector target gets a
+ * plain append, idempotent only when the connector upserts by PK.
  */
 object StreamingMigration {
 
@@ -39,23 +40,6 @@ object StreamingMigration {
     java.util.Collections.synchronizedSet(
       java.util.Collections.newSetFromMap(
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Batch-keyed partition dirs are only safe when the target is absent or
-    * already batch-partitioned — mixing them into a flat file layout would
-    * break partition discovery for readers.
-    */
-  private def batchDirsUsable(cfg: MigrationConfig, t: TableMigrationDef): Boolean = {
-    val p = java.nio.file.Paths.get(
-      Tables.tablePath(cfg.target, t.resolvedTargetName).stripPrefix("file:"))
-    if (!java.nio.file.Files.exists(p)) true
-    else {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(p).iterator().asScala.forall { child =>
-        val name = child.getFileName.toString
-        name.startsWith("__graft_batch=") || name.startsWith("_") || name.startsWith(".")
-      }
-    }
-  }
 
   /** Start the streaming migration for one table. Caller owns the returned
     * query lifecycle ([[StreamHarness.drain]] / `stop`).
@@ -109,6 +93,14 @@ object StreamingMigration {
     // schema anchor for the reconciled projection (schemas don't change
     // mid-stream).
     val schemaTarget = Tables.loadIfExists(spark, cfg.target, t.resolvedTargetName)
+    if (schemaTarget.exists(_.columns.contains(Tables.oldBatchColumn)))
+      throw MigrationPlanner.PlanError(s"target '${Tables.tablePath(cfg.target,
+        t.resolvedTargetName)}' holds ${Tables.oldBatchColumn}=<id> dirs of an " +
+        "earlier streaming sink; rewrite it as plain part files or use a new target")
+    // a restart may replay batch 0, which re-applies the seed: leave out
+    // the rows this query committed itself, or the replay admits none
+    val priorRun = org.apache.spark.sql.graft.Bridge.checkpointQueryId(spark, checkpointDir)
+      .filter(_ => Tables.isPathFormat(cfg.target))
     val needsExistenceFilter =
       t.filters.contains(IfNotExistFilter) || t.writeMode == InsertIfNotExists
     val tNarrow = t.copy(filters = t.filters.filterNot(_ == IfNotExistFilter))
@@ -129,9 +121,10 @@ object StreamingMigration {
         s"stream for '${t.tableName}' lacks PK column(s) " +
           s"${missingSrc.mkString(", ")} required for existence filtering " +
           "(missing from the source or dropped by the projection)")
+      val seed = schemaTarget.map(tgt => priorRun.fold(tgt)(id =>
+        tgt.filter(!col("_metadata.file_name").startsWith(id))))
       StreamingExistenceFilter(narrowNoExist,
-        schemaTarget.map(_.select(t.pkColumns.map(org.apache.spark.sql.functions.col): _*)),
-        t.pkColumns)
+        seed.map(_.select(t.pkColumns.map(col): _*)), t.pkColumns)
     } else narrowNoExist
     // the per-batch transform must not anti-join a second time
     val tBatch =
@@ -147,25 +140,11 @@ object StreamingMigration {
         // the batch arrives pre-filtered, no target re-read here
         val out = MigrationPlanner.writeModeTransform(batch, schemaTarget, tBatch)
         if (t.simulateOnly) out.write.format("noop").mode("overwrite").save()
-        else if (Tables.isPathFormat(cfg.target) && batchDirsUsable(cfg, t)) {
-          // idempotent per batch: each micro-batch OVERWRITES its own
-          // batch-keyed partition directory, so a post-crash replay of the
-          // same batchId rewrites identical files instead of appending
-          // duplicates (this is what makes counter increments retry-safe).
-          // Readers see `__graft_batch` as an ordinary partition column.
-          val base = Tables.tablePath(cfg.target, t.resolvedTargetName)
-          out.write.format(cfg.target.format)
-            .options(cfg.target.options - "partitionBy")
-            .mode("overwrite")
-            .save(s"$base/__graft_batch=$batchId")
-        } else {
-          // flat pre-existing target (mixing batch dirs into it would break
-          // partition discovery) or a table-addressed connector: plain
-          // append — at-least-once for file sinks, idempotent when the
-          // connector upserts by PK
-          Tables.write(out, cfg.target, t.resolvedTargetName, mode = "append",
-            ttlColumn = t.ttl.map(_.ttlColumn))
-        }
+        else if (Tables.isPathFormat(cfg.target)) {
+          val queryId = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+          Tables.commitBatch(out, cfg.target, t.resolvedTargetName, s"$queryId-b$batchId")
+        } else Tables.write(out, cfg.target, t.resolvedTargetName, mode = "append",
+          ttlColumn = t.ttl.map(_.ttlColumn))
       }
       .start()
   }

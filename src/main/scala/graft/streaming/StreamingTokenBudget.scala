@@ -46,21 +46,12 @@ object StreamingTokenBudget {
     source.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
-        if (batchId == 0L) {
-          // fresh run re-streams from scratch (a checkpoint resume never
-          // re-enters batch 0 unless it crashed inside it, where reset IS
-          // the replay): stale spend/output would double-count
-          Seq(stateDir, outDir).foreach { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            p.getFileSystem(conf).delete(p, true)
-          }
-        }
-        val statePath = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = statePath.getFileSystem(conf)
+        // a fresh run resets at batch 0 (a checkpoint resume never re-enters
+        // it unless it crashed inside it, where reset IS the replay): stale
+        // spend/output would double-count; later batches find batch 0's spend
         val prior: Long =
-          if (!fs.exists(statePath)) 0L
-          else s.read.option("basePath", stateDir).parquet(s"$stateDir/batch=*")
+          if (batchId == 0L) { BatchMarker.reset(s, stateDir, outDir); 0L }
+          else BatchMarker.readAll(s, stateDir, keepBatch = true)
             .filter(col("batch") < batchId)
             .agg(coalesce(sum(col("spent_tokens")), lit(0L)))
             .head().getLong(0)

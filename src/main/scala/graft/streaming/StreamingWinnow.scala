@@ -150,6 +150,6 @@ object StreamingWinnow {
 
   /** The drained pair set (all batch partitions). */
   def pairs(spark: SparkSession, pairsDir: String): DataFrame =
-    spark.read.parquet(s"$pairsDir/batch=*")
+    BatchMarker.readAll(spark, pairsDir)
       .select("idA", "idB", "n_shared")
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, SparkSession}
  * `private[sql]` in Spark 4.x; a sub-package of `org.apache.spark.sql` is the
  * sanctioned-visibility way to reach them without forking Spark. This file is
  * the ONLY place in the project allowed to touch Spark internals — everything
- * in `graft.*` goes through these three methods.
+ * in `graft.*` goes through this object.
  */
 object Bridge {
 
@@ -88,4 +88,10 @@ object Bridge {
     */
   def createTempDir(prefix: String): java.io.File =
     org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
+
+  /** The query id a streaming checkpoint recorded on an earlier run. */
+  def checkpointQueryId(spark: SparkSession, checkpointDir: String): Option[String] =
+    org.apache.spark.sql.execution.streaming.runtime.StreamMetadata.read(
+      new org.apache.hadoop.fs.Path(checkpointDir, "metadata"),
+      spark.sparkContext.hadoopConfiguration).map(_.id)
 }

@@ -16,6 +16,17 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   /** A fresh `graft_<tag>-<uuid>` dir, deleted when the test JVM exits. */
   def tempDir(tag: String): String = StreamHarness.tempDir(tag)
 
+  /** Make the next start on `checkpointDir` re-run its last micro-batch,
+    * as after a crash between the batch's sink write and its commit: the
+    * highest `commits/<N>` and its `.<N>.crc` are deleted. Returns N.
+    */
+  def replayLastBatch(checkpointDir: String): Long = {
+    val commits = new java.io.File(checkpointDir, "commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Seq(s"$last", s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+    last
+  }
+
   /** Run `action` and return its result with the observed metrics (by
     * name) of every query it ran. Query listeners hear of a finished query
     * through Spark's asynchronous listener bus, so the bus is drained (up to

@@ -195,8 +195,8 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming existence filter tolerates duplicate PKs in the seed target") {
-    // the at-least-once file-sink path can leave duplicate PK rows in the
-    // target; initial state must dedup them or Spark rejects the seed with
+    // a user's target may hold duplicate PK rows; initial state must
+    // dedup them or Spark rejects the seed with
     // "initial state contained multiple rows with the same key"
     val dir = tempDir("stream_dupseed")
     val srcRef = TableRef(path = s"$dir/src")
@@ -250,6 +250,118 @@ class StreamingSpec extends SparkTestBase {
     assert(got.filter($"id" >= 4 && $"id" <= 6).select("payload").as[String]
       .collect().forall(_.startsWith("runA_")),
       "run B must not re-admit PKs already written by run A")
+  }
+
+  // Replay: each case drains its source, deletes the last commit, restarts
+  // on the same checkpoint (Structured Streaming re-runs that batch, the
+  // crash-after-write path) and expects exactly the undisturbed rows.
+  private val replayCases = for {
+    (mode, ctr) <- Seq((InsertIfNotExists, Nil), (Upsert, Nil),
+      (CounterIncrement, Seq("hits")))
+    (batches, replays) <- Seq((3, "the last of 3 batches"), (1, "batch 0"))
+    if batches == 3 || mode == InsertIfNotExists
+    populated <- Seq(false, true)
+  } yield (mode, ctr, batches, replays, populated)
+
+  replayCases.foreach { case (mode, ctr, batches, replays, populated) =>
+    val target = if (populated) "a populated flat target" else "an absent target"
+    test(s"streaming $mode replay of $replays into $target keeps the undisturbed rows") {
+      val dir = tempDir("stream_replay")
+      val srcRef = TableRef(path = s"$dir/src")
+      val tgtRef = TableRef(path = s"$dir/tgt")
+      val cfg = MigrationConfig(srcRef, tgtRef, Nil)
+      if (populated) (1 to 3).map(i => (i.toLong, 1L)).toDF("id", "hits")
+        .write.parquet(Tables.tablePath(tgtRef, "rp_t"))
+      (0 until batches).foreach { b =>
+        (4 * b + 1 to 4 * b + 4).map(i => (i.toLong, 1L)).toDF("id", "hits")
+          .coalesce(1).write.mode("append").parquet(Tables.tablePath(srcRef, "rp_t"))
+      }
+      val t = TableMigrationDef("rp_t", pkColumns = Seq("id"), counterColumns = ctr,
+        writeMode = mode, simulateOnly = false)
+      def run(): org.apache.spark.sql.streaming.StreamingQuery = {
+        val q = StreamingMigration.start(spark, cfg, t, checkpointDir = s"$dir/cp",
+          trigger = Trigger.AvailableNow(), maxFilesPerTrigger = 1)
+        StreamHarness.drain("stream_replay", q)
+        q
+      }
+      def rows() = Tables.load(spark, tgtRef, "rp_t").select("id", "hits")
+        .as[(Long, Long)].collect().sorted.toSeq
+      run()
+      val undisturbed = rows()
+      val replayed = replayLastBatch(s"$dir/cp")
+      assert(replayed === batches - 1L)
+      assert(run().recentProgress.exists(p => p.batchId == replayed && p.numInputRows > 0),
+        s"the restart must re-run batch $replayed")
+      assert(rows() === undisturbed)
+      assert(new java.io.File(s"$dir/tgt").list().toSeq === Seq("rp_t.parquet"),
+        "no stage dir may remain")
+    }
+  }
+
+  test("a restart after a crash inside the first batch's stage write finds the target absent") {
+    val dir = tempDir("stream_crash")
+    val srcRef = TableRef(path = s"$dir/src")
+    val tgtRef = TableRef(path = s"$dir/tgt")
+    val cfg = MigrationConfig(srcRef, tgtRef, Nil)
+    Seq((1L, 1L)).toDF("id", "hits").write.parquet(Tables.tablePath(srcRef, "cr_t"))
+    // what the crashed attempt left: a staged batch, no target
+    val stage = Tables.tablePath(tgtRef, "cr_t") + "._graft_stage"
+    Seq((1L, 1L)).toDF("id", "hits").write.parquet(s"$stage/crashed-b0")
+    val t = TableMigrationDef("cr_t", pkColumns = Seq("id"), writeMode = InsertIfNotExists,
+      simulateOnly = false)
+    StreamHarness.drain("stream_crash", StreamingMigration.start(spark, cfg, t,
+      checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow()))
+    assert(Tables.load(spark, tgtRef, "cr_t").as[(Long, Long)].collect().toSeq === Seq((1L, 1L)))
+    assert(!new java.io.File(stage).exists())
+  }
+
+  test("streaming into an absent target keeps partitionBy and adds no batch column") {
+    val dir = tempDir("stream_parts")
+    val srcRef = TableRef(path = s"$dir/src")
+    val tgtRef = TableRef(path = s"$dir/tgt", options = Map("partitionBy" -> "bucket"))
+    val cfg = MigrationConfig(srcRef, tgtRef, Nil)
+    (1 to 6).map(i => (i.toLong, i % 2)).toDF("id", "bucket").coalesce(1)
+      .write.parquet(Tables.tablePath(srcRef, "pt_t"))
+    val q = StreamingMigration.start(spark, cfg, TableMigrationDef("pt_t", simulateOnly = false),
+      checkpointDir = s"$dir/cp", trigger = Trigger.AvailableNow())
+    StreamHarness.drain("stream_parts", q)
+    val entries = new java.io.File(Tables.tablePath(tgtRef, "pt_t")).list().toSet
+    assert(entries === Set("bucket=0", "bucket=1"))
+    val got = Tables.load(spark, tgtRef, "pt_t")
+    assert(got.columns.toSet === Set("id", "bucket"))
+    assert(got.as[(Long, Int)].collect().toSet === (1 to 6).map(i => (i.toLong, i % 2)).toSet)
+  }
+
+  test("a streaming run on a fresh checkpoint keeps an earlier run's rows in the target") {
+    val dir = tempDir("stream_rerun")
+    val srcRef = TableRef(path = s"$dir/src")
+    val tgtRef = TableRef(path = s"$dir/tgt")
+    val cfg = MigrationConfig(srcRef, tgtRef, Nil)
+    (1 to 4).map(i => (i.toLong, s"v$i")).toDF("id", "payload").coalesce(1)
+      .write.parquet(Tables.tablePath(srcRef, "rr_t"))
+    val t = TableMigrationDef("rr_t", simulateOnly = false)
+    Seq("cp1", "cp2").foreach { cp =>
+      StreamHarness.drain("stream_rerun", StreamingMigration.start(spark, cfg, t,
+        checkpointDir = s"$dir/$cp", trigger = Trigger.AvailableNow()))
+    }
+    // both runs' batch 0 land side by side: the tag carries the query id
+    assert(Tables.load(spark, tgtRef, "rr_t").count() === 8L)
+  }
+
+  test("streaming rejects a target holding the old per-batch dir layout") {
+    val dir = tempDir("stream_oldlayout")
+    val srcRef = TableRef(path = s"$dir/src")
+    val tgtRef = TableRef(path = s"$dir/tgt")
+    val cfg = MigrationConfig(srcRef, tgtRef, Nil)
+    Seq((1L, "a")).toDF("id", "payload").write.parquet(Tables.tablePath(srcRef, "ol_t"))
+    Seq((2L, "b")).toDF("id", "payload")
+      .write.parquet(Tables.tablePath(tgtRef, "ol_t") + "/__graft_batch=0")
+    val e = intercept[graft.pipeline.MigrationPlanner.PlanError] {
+      StreamingMigration.start(spark, cfg, TableMigrationDef("ol_t", simulateOnly = false),
+        checkpointDir = s"$dir/cp")
+    }
+    assert(e.getMessage.contains(Tables.tablePath(tgtRef, "ol_t")))
+    assert(e.getMessage.contains("__graft_batch"))
   }
 
   test("streaming rejects patchNullsFromTarget (whole-table merge has no per-batch semantics)") {
