@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.expr.MvelTranslator
 import graft.model._
 import graft.schema.Reconciler
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -62,6 +62,7 @@ object MigrationPlanner {
 
   /** Compile the full migration plan for one table. */
   def plan(spark: SparkSession, cfg: MigrationConfig, t0: TableMigrationDef): Planned = {
+    LocalFs.install(spark)
     val t = resolvePk(spark, cfg, t0)
     val source = Tables.load(spark, cfg.source, t.tableName)
     val target = Tables.loadIfExists(spark, cfg.target, t.resolvedTargetName)
@@ -352,12 +353,9 @@ object MigrationPlanner {
       if (t.simulateOnly) observed.write.format("noop").mode("overwrite").save()
       else if (!targetExists) write("overwrite")
       else if (producesOnlyNewRows || !pathTarget) write("append")
-      else if (t.patchNullsFromTarget) {
-        if (!Tables.isLocalPath(cfg.target, t.resolvedTargetName)) throw PlanError(
-          s"merge-mode write to remote path target '${t.resolvedTargetName}' " +
-            "needs a staging swap, which is only implemented for local paths")
+      else if (t.patchNullsFromTarget)
         Tables.writeReplacing(observed, cfg.target, t.resolvedTargetName)
-      } else {
+      else {
         if (t.writeMode == Upsert)
           extraWarnings :+= (s"upsert over existing target " +
             s"'${t.resolvedTargetName}' overwrites it: target rows absent " +

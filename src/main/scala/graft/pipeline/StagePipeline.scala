@@ -256,6 +256,7 @@ object StagePipeline {
   def stagesOf(cfg: PipelineConfig, input: DataFrame,
       tables: Map[String, DataFrame] = Map.empty,
       materializeIntermediates: Boolean = true): Seq[(String, DataFrame)] = {
+    graft.sources.LocalFs.install(input.sparkSession)
     val resolved: Seq[(StageDef, StageFn)] =
       cfg.stages.map(s => s -> resolve(s.stage))
     var acc = input

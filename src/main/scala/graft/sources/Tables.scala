@@ -38,7 +38,7 @@ object Tables {
   /** Is this ref addressed by filesystem path (vs. a table-name DSv2)? */
   def isPathFormat(ref: TableRef): Boolean = pathFormats.contains(ref.format)
 
-  /** Is the table a LOCAL filesystem path (staging swaps possible)? */
+  /** Is the table a LOCAL filesystem path (probed without Spark)? */
   def isLocalPath(ref: TableRef, table: String): Boolean =
     isPathFormat(ref) && !tablePath(ref, table).stripPrefix("file:").contains("://")
 
@@ -149,8 +149,6 @@ object Tables {
     * Spark refuses a direct overwrite of an input path — and is right to.
     */
   def writeReplacing(df: DataFrame, ref: TableRef, table: String): Unit = {
-    require(isLocalPath(ref, table),
-      s"writeReplacing needs a local path-based target, got '${ref.format}'")
     val path = new Path(tablePath(ref, table))
     val staging = path.suffix(".staging")
     val fs = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)

@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.model.{IfNotExistFilter, InsertIfNotExists, MigrationConfig, TableMigrationDef}
 import graft.pipeline.MigrationPlanner
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 /**
  * Streaming mode: the same migration plan under Structured Streaming.
@@ -34,12 +35,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  */
 object StreamingMigration {
 
-  // one progress listener per session (guarded weakly so sessions can GC):
-  // repeated start() calls must not stack duplicate status lines
-  private val progressAttached =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+  // sessions that have a listener (weakly held so sessions can GC):
+  // repeated start() calls must not stack duplicate listeners
+  private def sessionSet() = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+  private val progressAttached = sessionSet()
+  private val releaseAttached = sessionSet()
+
+  // started runs by run id, until they terminate; their state-store
+  // providers are then closed instead of staying loaded, with their state
+  // maps, until Spark's next maintenance pass
+  private val running = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, StreamingQuery]()
+  private object ReleaseState extends StreamingQueryListener {
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      Option(running.remove(e.runId)).foreach(Bridge.releaseStateStores)
+  }
 
   /** Start the streaming migration for one table. Caller owns the returned
     * query lifecycle ([[StreamHarness.drain]] / `stop`).
@@ -51,7 +64,9 @@ object StreamingMigration {
       checkpointDir: String,
       trigger: Trigger = null,
       maxFilesPerTrigger: Int = 0): StreamingQuery = {
+    LocalFs.install(spark)
     val t = MigrationPlanner.resolvePk(spark, cfg, t0)
+    if (releaseAttached.add(spark)) spark.streams.addListener(ReleaseState)
     // O20: per-micro-batch status lines (micro-batch = the reference's page)
     if (cfg.statusIntervalMillis.isDefined && progressAttached.add(spark))
       spark.streams.addListener(new graft.pipeline.StreamingProgressListener())
@@ -99,7 +114,7 @@ object StreamingMigration {
         "earlier streaming sink; rewrite it as plain part files or use a new target")
     // a restart may replay batch 0, which re-applies the seed: leave out
     // the rows this query committed itself, or the replay admits none
-    val priorRun = org.apache.spark.sql.graft.Bridge.checkpointQueryId(spark, checkpointDir)
+    val priorRun = Bridge.checkpointQueryId(spark, checkpointDir)
       .filter(_ => Tables.isPathFormat(cfg.target))
     val needsExistenceFilter =
       t.filters.contains(IfNotExistFilter) || t.writeMode == InsertIfNotExists
@@ -132,7 +147,7 @@ object StreamingMigration {
         t.copy(filters = t.filters :+ IfNotExistFilter)
       else t
 
-    narrow.writeStream
+    val query = narrow.writeStream
       .trigger(resolvedTrigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -147,5 +162,9 @@ object StreamingMigration {
           ttlColumn = t.ttl.map(_.ttlColumn))
       }
       .start()
+    // a run that ends before this line (no batch can finish that fast)
+    // would leave its providers to the maintenance pass
+    running.put(query.runId, query)
+    query
   }
 }

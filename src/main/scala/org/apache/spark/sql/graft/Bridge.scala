@@ -89,6 +89,39 @@ object Bridge {
   def createTempDir(prefix: String): java.io.File =
     org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
 
+  /** The default-named state-store providers that the current run of
+    * `query` can have loaded in this JVM: one per
+    * `<checkpoint>/state/<op>/<partition>`.
+    */
+  private def stateStoreIds(query: org.apache.spark.sql.streaming.StreamingQuery) = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.state.{StateStoreId, StateStoreProviderId}
+    val exec = query.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper].streamingQuery
+    // the root that keys the stores: StreamExecution.checkpointFile("state")
+    val root = new Path(new Path(exec.resolvedCheckpointRoot), "state")
+    val fs = root.getFileSystem(exec.sparkSession.sessionState.newHadoopConf())
+    def numbered(p: Path): Seq[Path] = if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+        .filter(_.getName.forall(_.isDigit))
+    for (op <- numbered(root); part <- numbered(op)) yield StateStoreProviderId(
+      StateStoreId(root.toString, op.getName.toLong, part.getName.toInt), exec.runId)
+  }
+
+  /** Close and unload the state-store providers that the terminated
+    * `query` loaded in this JVM. Spark's maintenance pass would otherwise
+    * keep them, with their cached state maps, until its next tick.
+    */
+  def releaseStateStores(query: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    stateStoreIds(query).foreach(id =>
+      org.apache.spark.sql.execution.streaming.state.StateStore
+        .removeFromLoadedProvidersAndClose(id))
+
+  /** How many of `query`'s state-store providers are loaded in this JVM. */
+  def loadedStateStores(query: org.apache.spark.sql.streaming.StreamingQuery): Int =
+    stateStoreIds(query).count(
+      org.apache.spark.sql.execution.streaming.state.StateStore.isLoaded)
+
   /** The query id a streaming checkpoint recorded on an earlier run. */
   def checkpointQueryId(spark: SparkSession, checkpointDir: String): Option[String] =
     org.apache.spark.sql.execution.streaming.runtime.StreamMetadata.read(

@@ -66,6 +66,7 @@ object SparkTestBase {
       .config("spark.sql.warehouse.dir", StreamHarness.tempDir("wh"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    graft.sources.LocalFs.install(s)
     s
   }
 }

@@ -289,6 +289,25 @@ class PlannerSpec extends SparkTestBase {
     assert(out === Set(("k1", Some(1)), ("k2", Some(2)), ("k3", Some(3))))
   }
 
+  test("patchNullsFromTarget swaps a path target on a non-local scheme") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftremote.impl", classOf[RemoteSchemeFs].getName)
+    val remote = TableRef(path = s"graftremote://$dir/remote")
+    assert(!Tables.isLocalPath(remote, "swap_t"))
+    Seq(("k1", Some(1)), ("k2", Some(2))).toDF("k", "a")
+      .write.parquet(Tables.tablePath(remote, "swap_t"))
+    Seq(("k1", None: Option[Int]), ("k3", Some(3))).toDF("k", "a")
+      .write.parquet(Tables.tablePath(srcRef, "remote_swap_src"))
+    val r = MigrationPlanner.execute(spark, MigrationConfig(srcRef, remote, Nil),
+      TableMigrationDef(tableName = "remote_swap_src", targetTableName = Some("swap_t"),
+        pkColumns = Seq("k"), patchNullsFromTarget = true, simulateOnly = false))
+    assert(r.rowsMigrated === 3L)
+    assert(Tables.load(spark, remote, "swap_t").as[(String, Option[Int])].collect().toSet ===
+      Set(("k1", Some(1)), ("k2", Some(2)), ("k3", Some(3))))
+    assert(new java.io.File(s"$dir/remote").list().toSeq === Seq("swap_t.parquet"),
+      "the staging dir is renamed away")
+  }
+
   test("executeAll runs tables sequentially in declared order (O18)") {
     val results = MigrationPlanner.executeAll(spark, cfg.copy(tables = Seq(
       TableMigrationDef("my_table_v1", simulateOnly = true),
@@ -307,4 +326,11 @@ class PlannerSpec extends SparkTestBase {
     assert(Tables.load(spark, tgtRef, "par_a").count() === 4L)
     assert(Tables.load(spark, tgtRef, "par_b").count() === 5L)
   }
+}
+
+/** Local files under the `graftremote:` scheme: a path target that is not
+  * local by its name, as an object store's would be.
+  */
+class RemoteSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftremote:///")
 }

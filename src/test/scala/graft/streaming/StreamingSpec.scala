@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkTestBase
 import graft.model._
 import graft.sources.Tables
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.{Failed, Outcome}
 
@@ -250,6 +251,28 @@ class StreamingSpec extends SparkTestBase {
     assert(got.filter($"id" >= 4 && $"id" <= 6).select("payload").as[String]
       .collect().forall(_.startsWith("runA_")),
       "run B must not re-admit PKs already written by run A")
+  }
+
+  test("a terminated streaming migration releases its state-store providers") {
+    val dir = tempDir("stream_release")
+    val srcRef = TableRef(path = s"$dir/src")
+    val tgtRef = TableRef(path = s"$dir/tgt")
+    (1 to 3).map(i => (i.toLong, s"seed_$i")).toDF("id", "payload")
+      .write.parquet(Tables.tablePath(tgtRef, "rel_t"))
+    (1 to 6).map(i => (i.toLong, s"new_$i")).toDF("id", "payload")
+      .coalesce(1).write.parquet(Tables.tablePath(srcRef, "rel_t"))
+    val q = StreamingMigration.start(spark, MigrationConfig(srcRef, tgtRef, Nil),
+      TableMigrationDef("rel_t", pkColumns = Seq("id"), writeMode = InsertIfNotExists,
+        simulateOnly = false),
+      checkpointDir = s"$dir/cp", trigger = Trigger.ProcessingTime(0L))
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    try {
+      q.processAllAvailable()
+      assert(Bridge.loadedStateStores(q) === partitions, "one provider per state partition")
+    } finally q.stop()
+    org.apache.spark.graft.ListenerBus.drain(spark, 30000)
+    assert(Bridge.loadedStateStores(q) === 0, "every provider released at termination")
+    assert(Tables.load(spark, tgtRef, "rel_t").count() === 6L)
   }
 
   // Replay: each case drains its source, deletes the last commit, restarts
