@@ -1,13 +1,23 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: compare Verify output
 parquet against DuckDB running oracle_sql.json over the same fixtures.
-Usage: check_correctness.py <sfDir> <verifyOutDir>
+Usage: check_correctness.py <sfDir> <verifyOutDir> [--parent <parentOutDir>]
+
+With --parent, also print for each query whether the sorted-row hash of
+its output equals that of the same query's output under <parentOutDir>
+(a Verify run of another tree, e.g. the parent commit); any difference
+fails the run like a gate failure.
 """
-import json, sys, glob, os
+import argparse, hashlib, json, glob, os, sys
 import duckdb
 import pandas as pd
 
-sfdir, outdir = sys.argv[1], sys.argv[2]
+ap = argparse.ArgumentParser()
+ap.add_argument("sfdir")
+ap.add_argument("outdir")
+ap.add_argument("--parent", metavar="parentOutDir")
+args = ap.parse_args()
+sfdir, outdir = args.sfdir, args.outdir
 con = duckdb.connect()
 for f in glob.glob(f"{sfdir}/*.parquet"):
     name = os.path.basename(f)[:-8]
@@ -90,4 +100,37 @@ for n, r in rows_only:
     print(f"  rows  {n} ({r} rows)")
 for n, p in fails:
     print(f"  FAIL  {n}: {p[:2]}")
-sys.exit(1 if fails else 0)
+
+
+def row_hash(d):
+    """sha256 of the output's rows, columns in name order, rows sorted."""
+    rel = con.sql(f"SELECT * FROM '{d}/*.parquet'")
+    cols = sorted(rel.columns)
+    select = ", ".join('"' + c + '"' for c in cols)
+    rows = con.sql(f"SELECT {select} FROM '{d}/*.parquet'").fetchall()
+    h = hashlib.sha256(repr(cols).encode())
+    for r in sorted(map(repr, rows)):
+        h.update(r.encode())
+        h.update(b"\n")
+    return h.hexdigest()
+
+
+differ = []
+if args.parent:
+    same = 0
+    for name in sorted(os.listdir(outdir)):
+        d = os.path.join(outdir, name)
+        if not os.path.isdir(d):
+            continue
+        p = os.path.join(args.parent, name)
+        if not os.path.isdir(p):
+            differ.append(name)
+            print(f"  parent-missing  {name}")
+        elif row_hash(d) == row_hash(p):
+            same += 1
+            print(f"  parent-same     {name}")
+        else:
+            differ.append(name)
+            print(f"  parent-DIFFERS  {name}")
+    print(f"PARENT-SAME: {same}  PARENT-DIFFERS: {len(differ)}")
+sys.exit(1 if fails or differ else 0)

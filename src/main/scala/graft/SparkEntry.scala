@@ -913,11 +913,9 @@ object SparkEntry {
     "e08_streaming_heavy_hitters" -> ((s, dir) => {
       val tmp = StreamHarness.tempDir("e08")
       val docs = t(s, dir, "documents").select("doc_id", "text")
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 === 1))
       val q = StreamingHeavyHitters.start(s, src, "text",
         s"$tmp/counts", s"$tmp/top", s"$tmp/cp")
       StreamHarness.drain("e08", q)
@@ -933,11 +931,8 @@ object SparkEntry {
       val budget = 15000L
       val tmp = StreamHarness.tempDir("e09")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      (0 until 3).foreach { b =>
-        docs.filter(pmod(col("doc_id"), lit(3)) === b)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$b")
-      }
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp, (0 until 3).map(b =>
+        docs.filter(pmod(col("doc_id"), lit(3)) === b)): _*)
       val q = StreamingTokenBudget.start(s, src, "doc_id", "text", budget,
         s"$tmp/state", s"$tmp/out", s"$tmp/cp")
       StreamHarness.drain("e09", q)
@@ -958,24 +953,21 @@ object SparkEntry {
       StreamingSemanticScreen.seed(corpus, "vec_id", "embedding",
         s"$tmp/index", s"$tmp/vecs", dim = 64,
         numCentroids = 16, m = 8, codesPerSub = 16)
-      // batch 1: copies of corpus vecs (ids ≡ 0 mod 40, +1e6) + novel
-      // vecs the corpus has never seen (ids < 50, +3e6)
-      emb.filter(col("vec_id") >= 100 && col("vec_id") % 40 === 0)
-        .select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
-        .unionByName(emb.filter(col("vec_id") < 50)
-          .select((col("vec_id") + 3000000).as("vec_id"), col("embedding")))
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      // batch 2: copies of BATCH 1's novel vecs (+4e6 — the cross-batch
-      // pair that only exists because batch 1's state persisted) + more
-      // corpus copies (ids ≡ 20 mod 40, +2e6)
-      emb.filter(col("vec_id") < 50)
-        .select((col("vec_id") + 4000000).as("vec_id"), col("embedding"))
-        .unionByName(
-          emb.filter(col("vec_id") >= 100 && col("vec_id") % 40 === 20)
-            .select((col("vec_id") + 2000000).as("vec_id"), col("embedding")))
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "vec_id BIGINT, embedding ARRAY<FLOAT>")
+      val src = StreamHarness.feed(tmp,
+        // batch 1: copies of corpus vecs (ids ≡ 0 mod 40, +1e6) + novel
+        // vecs the corpus has never seen (ids < 50, +3e6)
+        emb.filter(col("vec_id") >= 100 && col("vec_id") % 40 === 0)
+          .select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
+          .unionByName(emb.filter(col("vec_id") < 50)
+            .select((col("vec_id") + 3000000).as("vec_id"), col("embedding"))),
+        // batch 2: copies of BATCH 1's novel vecs (+4e6 — the cross-batch
+        // pair that only exists because batch 1's state persisted) + more
+        // corpus copies (ids ≡ 20 mod 40, +2e6)
+        emb.filter(col("vec_id") < 50)
+          .select((col("vec_id") + 4000000).as("vec_id"), col("embedding"))
+          .unionByName(
+            emb.filter(col("vec_id") >= 100 && col("vec_id") % 40 === 20)
+              .select((col("vec_id") + 2000000).as("vec_id"), col("embedding"))))
       val q = StreamingSemanticScreen.start(s, src, "vec_id", "embedding",
         s"$tmp/index", s"$tmp/vecs", s"$tmp/pairs", s"$tmp/cp",
         threshold = 0.999)
@@ -994,11 +986,9 @@ object SparkEntry {
       graft.streaming.StreamingVocabNovelty.seedTokens(
         docs.filter(col("doc_id") % 3 === 0), "text", s"$tmp/tokens",
         partitionedBase = true)
-      docs.filter(col("doc_id") % 3 === 1)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") % 3 === 2)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") % 3 === 1),
+        docs.filter(col("doc_id") % 3 === 2))
       val q = graft.streaming.StreamingVocabNovelty.start(s, src, "text",
         s"$tmp/tokens", s"$tmp/report", s"$tmp/cp")
       StreamHarness.drain("e13", q)
@@ -1015,14 +1005,12 @@ object SparkEntry {
       import graft.operators.DqAudit.{ForeignKey, NotNull, RangeRule, UniqueKey}
       val tmp = StreamHarness.tempDir("e12")
       val li = t(s, dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-      li.filter(col("l_orderkey") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      li.filter(col("l_orderkey") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "l_orderkey BIGINT, l_linenumber BIGINT, " +
-          "l_partkey BIGINT, l_quantity DOUBLE")
+        .select(col("l_orderkey"),
+          col("l_linenumber").cast("bigint").as("l_linenumber"),
+          col("l_partkey"), col("l_quantity"))
+      val src = StreamHarness.feed(tmp,
+        li.filter(col("l_orderkey") % 2 === 0),
+        li.filter(col("l_orderkey") % 2 === 1))
       val q = graft.streaming.StreamingDqMonitor.start(s, src, "lineitem",
         Map("part" -> t(s, dir, "part")),
         Seq(
@@ -1050,12 +1038,8 @@ object SparkEntry {
         val r = ev.agg(min(col("ts")), max(col("ts"))).head()
         (r.getLong(0) + r.getLong(1)) / 2
       }
-      ev.filter(col("ts") < mid)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("ts") >= mid)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "user_id BIGINT, event_type STRING, ts BIGINT")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("ts") < mid), ev.filter(col("ts") >= mid))
       val q = graft.streaming.StreamingFunnel.start(s, src, "user_id",
         "event_type", "ts", Seq("view", "click", "purchase"),
         s"$tmp/state", s"$tmp/cp")
@@ -1072,11 +1056,9 @@ object SparkEntry {
       import s.implicits._
       val tmp = StreamHarness.tempDir("e15")
       val docs = t(s, dir, "documents").select("doc_id", "text")
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 === 1))
       val q = graft.streaming.StreamingSubstringIndex.start(s, src,
         "doc_id", "text", s"$tmp/index", s"$tmp/docs", s"$tmp/cp")
       StreamHarness.drain("e15", q)
@@ -1096,11 +1078,9 @@ object SparkEntry {
       val tmp = StreamHarness.tempDir("e11")
       val parts = t(s, dir, "part").select("p_partkey", "p_name")
       val mid = 1000L
-      parts.filter(col("p_partkey") < mid)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      parts.filter(col("p_partkey") >= mid)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "p_partkey BIGINT, p_name STRING")
+      val src = StreamHarness.feed(tmp,
+        parts.filter(col("p_partkey") < mid),
+        parts.filter(col("p_partkey") >= mid))
       val q = StreamingEntityResolution.start(s, src, "p_partkey", "p_name",
         s"$tmp/names", s"$tmp/map", s"$tmp/cp", maxDist = 1)
       StreamHarness.drain("e11", q)
@@ -1442,13 +1422,11 @@ object SparkEntry {
       StreamingNearDup.seedIndex(docs, "doc_id", "text",
         s"$tmp/index", s"$tmp/docs")
       val stripped = regexp_replace(col("text"), "^\\S+\\s", "").as("text")
-      docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"), stripped)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") % 10 === 5)
-        .select((col("doc_id") + 2000000).as("doc_id"), stripped)
-        .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") % 10 === 0)
+          .select((col("doc_id") + 1000000).as("doc_id"), stripped),
+        docs.filter(col("doc_id") % 10 === 5)
+          .select((col("doc_id") + 2000000).as("doc_id"), stripped))
       val q = StreamingNearDup.start(s, src, "doc_id", "text",
         s"$tmp/index", s"$tmp/docs", s"$tmp/pairs", s"$tmp/cp",
         threshold = 0.7)
@@ -1473,12 +1451,9 @@ StreamHarness.drain("d09", q)
           regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
       StreamingCuration.seedFingerprints(
         docs.filter(col("doc_id") % 3 === 0), "text", s"$tmp/fp")
-      docs.filter(col("doc_id") % 3 === 1)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") % 3 === 2)
-        .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, text STRING, lang STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") % 3 === 1),
+        docs.filter(col("doc_id") % 3 === 2))
       val q = StreamingCuration.start(s, src, evalDocs, "doc_id", "text",
         "lang", s"$tmp/fp", s"$tmp/kept", s"$tmp/cp")
 StreamHarness.drain("e05", q)
@@ -1501,12 +1476,9 @@ StreamHarness.drain("e05", q)
           regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
       StreamingCuration.seedFingerprints(
         docs.filter(col("doc_id") % 3 === 0), "text", s"$tmp/fp")
-      docs.filter(col("doc_id") % 3 === 1)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") % 3 === 2)
-        .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, text STRING, lang STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") % 3 === 1),
+        docs.filter(col("doc_id") % 3 === 2))
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-curation
@@ -1542,11 +1514,9 @@ StreamHarness.drain("e05", q)
       val streamed = docs.filter(col("doc_id") % 3 =!= 0)
         .select(col("doc_id"),
           regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
-      streamed.filter(col("doc_id") % 3 === 1)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      streamed.filter(col("doc_id") % 3 === 2)
-        .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp,
+        streamed.filter(col("doc_id") % 3 === 1),
+        streamed.filter(col("doc_id") % 3 === 2))
         .select(TextAnalysis.qualityScore(col("text")).as("quality"))
       val q = StreamingDrift.start(s, src, ref, "quality",
         s"$tmp/counts", s"$tmp/psi", s"$tmp/cp")
@@ -2925,11 +2895,9 @@ StreamHarness.drain("e05", q)
       val tmp = StreamHarness.tempDir("e42")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         concat(col("text"), lit(" mk"), col("lang")).as("text"))
-      for (r <- 0 until 3)
+      val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
-          .select("lang", "text")
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp, "lang STRING, text STRING")
+          .select("lang", "text")): _*)
       val q = StreamingDpNbRelease.start(s, src, "text", "lang",
         maxTokensPerDoc = 30, s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e42", q)
@@ -2947,10 +2915,8 @@ StreamHarness.drain("e05", q)
       val media = t(s, dir, "documents").select(
         col("doc_id").as("media_id"),
         encode(col("text"), "UTF-8").as("content"))
-      for (r <- 0 until 3)
-        media.filter(pmod(col("media_id"), lit(3)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp, "media_id BIGINT, content BINARY")
+      val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
+        media.filter(pmod(col("media_id"), lit(3)) === r)): _*)
       val q = StreamingSceneSegments.start(s, src, "media_id", "content",
         s"$tmp/scenes", s"$tmp/cp", windowBytes = 16, cutThreshold = 120)
       StreamHarness.drain("e43", q)
@@ -3232,10 +3198,8 @@ StreamHarness.drain("e05", q)
     "e52_streaming_digest_dedup" -> ((s, dir) => {
       val tmp = StreamHarness.tempDir("e52")
       val blobs = f14Blobs(t(s, dir, "documents"))
-      for (r <- 0 until 2)
-        blobs.filter(pmod(col("warc_id"), lit(2)) === (1 - r))
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp, "warc_id BIGINT, warc STRING")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        blobs.filter(pmod(col("warc_id"), lit(2)) === (1 - r))): _*)
       val q = StreamingWarcDedup.start(s, src, "warc_id", "warc",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e52", q)
@@ -3276,11 +3240,9 @@ StreamHarness.drain("e05", q)
     "e53_streaming_redirects" -> ((s, dir) => {
       val tmp = StreamHarness.tempDir("e53")
       val pieces = t73Pieces(t(s, dir, "documents"))
-      t73Pack(pieces.filter(col("__seq") === 0))
-        .coalesce(1).write.parquet(s"$tmp/stream/b0")
-      t73Pack(pieces.filter(col("__seq") >= 1))
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      val src = StreamHarness.fileStream(s, tmp, "warc_id BIGINT, warc STRING")
+      val src = StreamHarness.feed(tmp,
+        t73Pack(pieces.filter(col("__seq") === 0)),
+        t73Pack(pieces.filter(col("__seq") >= 1)))
       val q = StreamingRedirects.start(s, src, "warc_id", "warc",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e53", q)
@@ -3466,10 +3428,8 @@ StreamHarness.drain("e05", q)
       val docs = t(s, dir, "documents")
       val pages = docs.select(col("doc_id"),
         frontierPage(col("doc_id"), col("text")).as("html"))
-      for (r <- 0 until 2)
-        pages.filter(pmod(col("doc_id"), lit(2)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, html STRING")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        pages.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
       val q = StreamingFrontier.start(s, src, "doc_id", "html",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e50", q)
@@ -3529,10 +3489,8 @@ StreamHarness.drain("e05", q)
       val docs = t(s, dir, "documents")
       val pages = docs.select(col("doc_id"),
         frontierPage(col("doc_id"), col("text")).as("html"))
-      for (r <- 0 until 2)
-        pages.filter(pmod(col("doc_id"), lit(2)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, html STRING")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        pages.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
       val q = StreamingFrontier.start(s, src, "doc_id", "html",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e51", q)
@@ -3740,11 +3698,8 @@ StreamHarness.drain("e05", q)
         regexp_replace(col("text"), "^\\S+\\s", "").as("text"),
         col("lang")))
       StreamingCuration.seedFingerprints(docs.limit(0), "text", s"$tmp/fp")
-      for (r <- 0 until 2)
-        corpus.filter(pmod(col("doc_id"), lit(2)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, text STRING, lang STRING")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        corpus.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-neardup-screen
@@ -3775,11 +3730,8 @@ StreamHarness.drain("e05", q)
       val pages = t(s, dir, "documents").select(col("doc_id"),
         htmlSitePage(col("doc_id"), col("text")).as("html"),
         col("source"))
-      for (r <- 0 until 2)
-        pages.filter(pmod(col("doc_id"), lit(2)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, html STRING, source STRING")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        pages.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
       val q = StreamingSiteTemplate.start(s, src, "doc_id", "html",
         "source", s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e47", q)
@@ -3800,11 +3752,8 @@ StreamHarness.drain("e05", q)
         htmlLinkPage(col("doc_id"), col("text")).as("html"),
         concat(lit("http://example.com/doc/"),
           col("doc_id").cast("string")).as("base_uri"))
-      for (r <- 0 until 2)
-        pages.filter(pmod(col("doc_id"), lit(2)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, html STRING, base_uri STRING")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        pages.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
       val q = StreamingWebGraph.start(s, src, "doc_id", "html",
         "base_uri", s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e49", q)
@@ -3877,10 +3826,8 @@ StreamHarness.drain("e05", q)
       StreamingCuration.seedFingerprints(
         docs.limit(0).select(col("doc_id"), lit("").as("text")),
         "text", s"$tmp/fp")
-      for (r <- 0 until 2)
-        blobs.filter(pmod(col("warc_id"), lit(2)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp, "warc_id BIGINT, warc BINARY")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        blobs.filter(pmod(col("warc_id"), lit(2)) === r)): _*)
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-warc-ingest
@@ -3912,11 +3859,8 @@ StreamHarness.drain("e05", q)
       StreamingCuration.seedFingerprints(
         pages.limit(0).select(col("doc_id"), lit("").as("text")),
         "text", s"$tmp/fp")
-      for (r <- 0 until 2)
-        pages.filter(pmod(col("doc_id"), lit(2)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, html STRING, lang STRING")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        pages.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-extract-gate
@@ -3950,11 +3894,8 @@ StreamHarness.drain("e05", q)
           lpad((col("doc_id") % 10000).cast("string"), 4, "0")).as("text"),
         col("lang"))
       StreamingCuration.seedFingerprints(docs.limit(0), "text", s"$tmp/fp")
-      for (r <- 0 until 2)
-        docs.filter(pmod(col("doc_id"), lit(2)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, text STRING, lang STRING")
+      val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
+        docs.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
       val cfg = graft.config.ConfigCodec.pipelineFromYaml(
         """pipeline:
           |  name: streaming-pii-gate
@@ -4122,13 +4063,9 @@ StreamHarness.drain("e05", q)
         expr("((ts div 1000) div 3600000000) % 24").as("hour_of_day"),
         floor(col("value") / lit(10.0)).cast("long").as("value_bucket"),
         col("user_id"))
-      ev.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
-          "value_bucket BIGINT, user_id BIGINT")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 === 1))
       val q = graft.streaming.StreamingKAnonymity.start(s, src,
         Seq("event_type", "hour_of_day", "value_bucket"), "user_id",
         k = 5L, l = 3L, s"$tmp/pairs", s"$tmp/counts", s"$tmp/report",
@@ -4149,13 +4086,9 @@ StreamHarness.drain("e05", q)
         col("event_id"), col("event_type"),
         expr("((ts div 1000) div 3600000000) % 24").as("hour_of_day"),
         floor(col("value") / lit(10.0)).cast("long").as("value_bucket"))
-      ev.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
-          "value_bucket BIGINT")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 === 1))
       val q = graft.streaming.StreamingTCloseness.start(s, src,
         Seq("hour_of_day", "value_bucket"), "event_type", t = 0.2,
         ordered = false, s"$tmp/vals", s"$tmp/global", s"$tmp/report",
@@ -4174,13 +4107,9 @@ StreamHarness.drain("e05", q)
         col("event_id"), col("event_type"),
         expr("((ts div 1000) div 3600000000) % 24").as("hour_of_day"),
         floor(col("value") / lit(10.0)).cast("long").as("value_bucket"))
-      ev.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "event_id BIGINT, event_type STRING, hour_of_day BIGINT, " +
-          "value_bucket BIGINT")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 === 1))
       val q = graft.streaming.StreamingTCloseness.start(s, src,
         Seq("event_type", "hour_of_day"), "value_bucket", t = 0.15,
         ordered = true, s"$tmp/vals", s"$tmp/global", s"$tmp/report",
@@ -4198,11 +4127,9 @@ StreamHarness.drain("e05", q)
       val tmp = StreamHarness.tempDir("e23")
       val media = Multimodal.fromText(t(s, dir, "documents"),
         "doc_id", "text", "txt").select("media_id", "content")
-      media.filter(col("media_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      media.filter(col("media_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "media_id BIGINT, content BINARY")
+      val src = StreamHarness.feed(tmp,
+        media.filter(col("media_id") % 2 === 0),
+        media.filter(col("media_id") % 2 === 1))
       val q = graft.streaming.StreamingChunkDedup.start(s, src,
         "media_id", "content", s"$tmp/chunks", s"$tmp/report", s"$tmp/cp")
       StreamHarness.drain("e23", q)
@@ -4221,11 +4148,9 @@ StreamHarness.drain("e05", q)
       val scored = t(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.qualityScore(col("text")).as("quality"),
         (col("lang") === "en").cast("int").as("y"))
-      scored.filter(col("doc_id") % 2 === 0).select("quality", "y")
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      scored.filter(col("doc_id") % 2 === 1).select("quality", "y")
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "quality DOUBLE, y INT")
+      val src = StreamHarness.feed(tmp,
+        scored.filter(col("doc_id") % 2 === 0).select("quality", "y"),
+        scored.filter(col("doc_id") % 2 === 1).select("quality", "y"))
       val q = graft.streaming.StreamingPrDrift.start(s, src, "quality", "y",
         s"$tmp/state", s"$tmp/report", s"$tmp/cp")
       StreamHarness.drain("e25", q)
@@ -4245,11 +4170,9 @@ StreamHarness.drain("e05", q)
       val tmp = StreamHarness.tempDir("e26")
       val ev = t(s, dir, "events")
         .select(col("user_id"), expr("ts div 1000").as("ts_us"))
-      ev.filter(col("ts_us") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("ts_us") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "user_id BIGINT, ts_us BIGINT")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("ts_us") % 2 === 0),
+        ev.filter(col("ts_us") % 2 === 1))
       val q = graft.streaming.StreamingSurvival.start(s, src, "user_id",
         "ts_us", s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e26", q)
@@ -4267,12 +4190,9 @@ StreamHarness.drain("e05", q)
       val Array(lo, hi) = ev.agg(min(col("ts_us")), max(col("ts_us")))
         .head().toSeq.map(_.asInstanceOf[Long]).toArray
       val mid = lo + (hi - lo) / 2
-      ev.filter(col("ts_us") <= mid)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("ts_us") > mid)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "user_id BIGINT, event_type STRING, event_id BIGINT, ts_us BIGINT")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("ts_us") <= mid),
+        ev.filter(col("ts_us") > mid))
       val q = graft.streaming.StreamingTransitionEntropy.start(s, src,
         "user_id", "event_type", "ts_us", "event_id", s"$tmp/state",
         s"$tmp/report", s"$tmp/cp")
@@ -4291,12 +4211,9 @@ StreamHarness.drain("e05", q)
       val mm = ev.agg(min("ts_us").as("lo"), max("ts_us").as("hi"))
         .collect()(0)
       val cut = (mm.getLong(0) + mm.getLong(1)) / 2
-      ev.filter(col("ts_us") < cut)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("ts_us") >= cut)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "event_id BIGINT, user_id BIGINT, ts_us BIGINT, event_type STRING")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("ts_us") < cut),
+        ev.filter(col("ts_us") >= cut))
       val q = graft.streaming.StreamingMarkovAttribution.start(s, src,
         "user_id", "event_type", "ts_us", "event_id", "purchase",
         Seq("click", "view", "signup"), s"$tmp/state", s"$tmp/report",
@@ -4311,11 +4228,9 @@ StreamHarness.drain("e05", q)
     "e29_streaming_distinctive_terms" -> ((s, dir) => {
       val tmp = StreamHarness.tempDir("e29")
       val docs = t(s, dir, "documents").select("doc_id", "text")
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 === 1))
       val q = graft.streaming.StreamingDistinctiveTerms.start(s, src,
         "text", s"$tmp/state", s"$tmp/report", s"$tmp/cp", minCount = 5L)
       StreamHarness.drain("e29", q)
@@ -4344,11 +4259,9 @@ StreamHarness.drain("e05", q)
               split(regexp_replace(lower(trim(col("text"))), "\\s+", " "),
                 " "), 2, 2))).as("qtext"))
         .localCheckpoint(eager = true)
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 === 1))
       val q = graft.streaming.StreamingBm25.start(s, src, "doc_id", "text",
         queries, "query_id", "qtext", s"$tmp/state", s"$tmp/report",
         s"$tmp/cp", k = 5, maxDfFrac = 0.5)
@@ -4362,12 +4275,9 @@ StreamHarness.drain("e05", q)
       val tmp = StreamHarness.tempDir("e22")
       val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("ts_us"))
-      ev.filter(col("user_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("user_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "user_id BIGINT, event_id BIGINT, ts_us BIGINT")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("user_id") % 2 === 0),
+        ev.filter(col("user_id") % 2 === 1))
       val q = graft.streaming.StreamingBurstiness.start(s, src,
         "user_id", "ts_us", "event_id", s"$tmp/state", s"$tmp/report",
         s"$tmp/cp")
@@ -4386,12 +4296,9 @@ StreamHarness.drain("e05", q)
         (expr("ts div 1000") +
           floor(greatest(col("value"), lit(0.0)) * lit(1000000.0)))
           .as("end_us"))
-      iv.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      iv.filter(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "user_id BIGINT, event_id BIGINT, start_us BIGINT, end_us BIGINT")
+      val src = StreamHarness.feed(tmp,
+        iv.filter(col("event_id") % 2 === 0),
+        iv.filter(col("event_id") % 2 === 1))
       val q = graft.streaming.StreamingIntervalCoverage.start(s, src,
         "user_id", "start_us", "end_us", s"$tmp/blocks", s"$tmp/report",
         s"$tmp/cp")
@@ -4404,11 +4311,9 @@ StreamHarness.drain("e05", q)
       val tmp = StreamHarness.tempDir("e19")
       val ev = t(s, dir, "events").select(col("ts").as("ts_ns"),
         col("user_id"))
-      ev.filter(col("user_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("user_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "ts_ns BIGINT, user_id BIGINT")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("user_id") % 2 === 0),
+        ev.filter(col("user_id") % 2 === 1))
       val q = graft.streaming.StreamingRollingActives.start(s, src,
         "user_id", "ts_ns", s"$tmp/pairs", s"$tmp/report", s"$tmp/cp")
       StreamHarness.drain("e19", q)
@@ -4420,12 +4325,9 @@ StreamHarness.drain("e05", q)
       val docs = t(s, dir, "documents").select("doc_id", "n_chars", "lang")
       val ref = docs.filter(col("lang") === "en").select("n_chars")
       val streamed = docs.filter(col("lang") =!= "en")
-      streamed.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      streamed.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, n_chars BIGINT, lang STRING")
+      val src = StreamHarness.feed(tmp,
+        streamed.filter(col("doc_id") % 2 === 0),
+        streamed.filter(col("doc_id") % 2 === 1))
       val q = graft.streaming.StreamingKsDrift.start(s, src, "n_chars",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e18", q)
@@ -4439,12 +4341,9 @@ StreamHarness.drain("e05", q)
     "e17_streaming_rfm" -> ((s, dir) => {
       val tmp = StreamHarness.tempDir("e17")
       val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "value")
-      ev.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      ev.filter(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "event_id BIGINT, user_id BIGINT, ts BIGINT, value DOUBLE")
+      val src = StreamHarness.feed(tmp,
+        ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 === 1))
       val q = graft.streaming.StreamingRfm.start(s, src, "user_id", "ts",
         "value", s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e17", q)
@@ -4468,9 +4367,7 @@ StreamHarness.drain("e05", q)
       val docs = t(s, dir, "documents").select("doc_id", "text")
       val mangled = docs.select((col("doc_id") + 1000000).as("doc_id"),
         regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
-      docs.coalesce(1).write.parquet(s"$tmp/stream/b1")
-      mangled.coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, text STRING")
+      val src = StreamHarness.feed(tmp, docs, mangled)
       val q = StreamingWinnow.start(s, src, "doc_id", "text",
         s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         k = 16, window = 16, minShared = 14)
@@ -4485,12 +4382,9 @@ StreamHarness.drain("e05", q)
         .select((col("doc_id") + 2000000).as("doc_id"),
           regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
       val half = docs.agg(expr("percentile(doc_id, 0.5)")).head().getDouble(0)
-      docs.filter(col("doc_id") <= half)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      docs.filter(col("doc_id") > half)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, text STRING, lang STRING")
+      val src = StreamHarness.feed(tmp,
+        docs.filter(col("doc_id") <= half),
+        docs.filter(col("doc_id") > half))
       val q = graft.streaming.StreamingFuzzyDecontaminate.start(
         s, src, bench, "doc_id", "text", s"$tmp/kept", s"$tmp/cp",
         threshold = 0.7)
@@ -4943,11 +4837,9 @@ StreamHarness.drain("e05", q)
         col("event_id"),
         when(pmod(col("event_id"), lit(10)) === 0, "D").otherwise("U").as("op"))
       StreamingCdcMerge.seedState(snap, s"$tmp/state")
-      changes.filter(pmod(col("event_id"), lit(2)) === 0)
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      changes.filter(pmod(col("event_id"), lit(2)) === 1)
-        .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, changes.schema)
+      val src = StreamHarness.feed(tmp,
+        changes.filter(pmod(col("event_id"), lit(2)) === 0),
+        changes.filter(pmod(col("event_id"), lit(2)) === 1))
       val q = StreamingCdcMerge.start(s, src, Seq("c_custkey"), "ver", "op",
         s"$tmp/state", s"$tmp/cp", tieBreak = Seq("event_id"))
       StreamHarness.drain("e36", q)
@@ -4965,11 +4857,9 @@ StreamHarness.drain("e05", q)
       val tmp = StreamHarness.tempDir("e38")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         concat(col("text"), lit(" mk"), col("lang")).as("text"))
-      for (r <- 0 until 3)
+      val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
-          .select("lang", "text")
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp, "lang STRING, text STRING")
+          .select("lang", "text")): _*)
       val q = StreamingNbTrain.start(s, src, "text", "lang",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e38", q)
@@ -4992,11 +4882,9 @@ StreamHarness.drain("e05", q)
           "doc_id", "text", "lang")
         .select(col("doc_id"), col("predicted"))
         .join(test.select(col("doc_id"), col("lang")), "doc_id")
-      for (r <- 0 until 3)
+      val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         pairs.filter(pmod(col("doc_id"), lit(3)) === r)
-          .select(col("lang"), col("predicted"))
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp, "lang STRING, predicted STRING")
+          .select(col("lang"), col("predicted"))): _*)
       val q = StreamingClassifierEval.start(s, src, "lang", "predicted",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e39", q)
@@ -5013,12 +4901,9 @@ StreamHarness.drain("e05", q)
       val tmp = StreamHarness.tempDir("e40")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         concat(col("text"), lit(" mk"), col("lang")).as("text"))
-      for (r <- 0 until 3)
+      val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
-          .select("doc_id", "lang", "text")
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp,
-        "doc_id BIGINT, lang STRING, text STRING")
+          .select("doc_id", "lang", "text")): _*)
       val q = StreamingLrTrain.start(s, src, "doc_id", "text",
         (col("lang") === "en").cast("int"), dim = 64,
         s"$tmp/state", s"$tmp/cp")
@@ -5224,11 +5109,8 @@ StreamHarness.drain("e05", q)
           (col("query_id") % 50).as("__m")), "__m")
         .select(col("query_id"), col("doc_id"),
           when(col("doc_id") === col("query_id"), 2).otherwise(1).as("grade"))
-      for (r <- 0 until 3)
-        runs.filter(pmod(col("query_id"), lit(3)) === r)
-          .coalesce(1).write.parquet(s"$tmp/stream/b$r")
-      val src = StreamHarness.fileStream(s, tmp,
-        "query_id BIGINT, doc_id BIGINT, rank INT")
+      val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
+        runs.filter(pmod(col("query_id"), lit(3)) === r)): _*)
       val q = StreamingRetrievalEval.start(s, src, qrels, k = 10,
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e41", q)
@@ -5387,11 +5269,9 @@ StreamHarness.drain("e05", q)
         .select((col("doc_id") + 100000).as("doc_id"),
           transform(col("pixels"), p => least(p + lit(3), lit(255)))
             .as("pixels"))
-      base.unionByName(variants.filter(col("doc_id") % 10 === 3))
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      variants.filter(col("doc_id") % 10 === 8)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "doc_id BIGINT, pixels ARRAY<INT>")
+      val src = StreamHarness.feed(tmp,
+        base.unionByName(variants.filter(col("doc_id") % 10 === 3)),
+        variants.filter(col("doc_id") % 10 === 8))
       val q = graft.streaming.StreamingPHashDedup.start(s, src, "doc_id",
         "pixels", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         maxHamming = 12, maxBucketSize = 10000)
@@ -5412,11 +5292,9 @@ StreamHarness.drain("e05", q)
         .select((col("doc_id") + 1000000).as("media_id"),
           encode(concat(lit("P" * 32), col("text")), "UTF-8")
             .as("content"))
-      base.unionByName(variants.filter(col("media_id") % 50 === 0))
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      variants.filter(col("media_id") % 50 === 25)
-        .coalesce(1).write.mode("append").parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "media_id BIGINT, content BINARY")
+      val src = StreamHarness.feed(tmp,
+        base.unionByName(variants.filter(col("media_id") % 50 === 0)),
+        variants.filter(col("media_id") % 50 === 25))
       val q = graft.streaming.StreamingAudioFingerprint.start(s, src,
         "media_id", "content", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         windowBytes = 16, fanout = 3, zone = 16, minAligned = 3,
@@ -5441,11 +5319,9 @@ StreamHarness.drain("e05", q)
           octet_length(col("text")) === length(col("text")))
         .select((col("doc_id") + 1000000).as("media_id"),
           encode(expr("substring(text, 33)"), "UTF-8").as("content"))
-      base.unionByName(clips.filter(col("media_id") % 50 === 0))
-        .coalesce(1).write.parquet(s"$tmp/stream/b1")
-      clips.filter(col("media_id") % 50 === 25)
-        .coalesce(1).write.parquet(s"$tmp/stream/b2")
-      val src = StreamHarness.fileStream(s, tmp, "media_id BIGINT, content BINARY")
+      val src = StreamHarness.feed(tmp,
+        base.unionByName(clips.filter(col("media_id") % 50 === 0)),
+        clips.filter(col("media_id") % 50 === 25))
       val q = graft.streaming.StreamingClipAlign.start(s, src,
         "media_id", "content", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         frameBytes = 16, minAligned = 3, maxDigestGroup = 10000)

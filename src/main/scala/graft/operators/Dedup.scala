@@ -1598,11 +1598,11 @@ object Dedup {
       else {
         val words = split(normalized(col(textCol)), " ")
         df.select(col(idCol).as("__id"),
-          explode(when(size(words) >= shingleWidth,
+          TextAnalysis.explodeWhen(size(words) >= shingleWidth,
             transform(
               sequence(lit(1), size(words) - shingleWidth + 1),
-              i => array_join(slice(words, i, lit(shingleWidth)), " ")))
-            .otherwise(array().cast("array<string>"))).as("__tok"))
+              i => array_join(slice(words, i, lit(shingleWidth)), " ")),
+            "string").as("__tok"))
       }
     val tf = feats.groupBy("__id", "__tok").agg(count(lit(1)).as("__tf"))
     val dfq = tf.groupBy("__tok").agg(count(lit(1)).as("__df"))

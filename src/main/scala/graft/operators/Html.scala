@@ -372,8 +372,8 @@ object Html {
         regexp_extract(TextAnalysis.canonicalUrl(col("__res")),
           idPattern, 1).as("__d"))
       .select(col("src"),
-        explode(when(col("__d") =!= "", array(col("__d")))
-          .otherwise(array().cast("array<string>"))).as("__dv"))
+        TextAnalysis.explodeWhen(col("__d") =!= "", array(col("__d")),
+          "string").as("__dv"))
       .select(col("src"), col("__dv").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
@@ -440,8 +440,8 @@ object Html {
       .select(col("src"), col("anchor"),
         regexp_extract(col("__res"), idPattern, 1).as("__d"))
       .select(col("src"), col("anchor"),
-        explode(when(col("__d") =!= "", array(col("__d")))
-          .otherwise(array().cast("array<string>"))).as("__dv"))
+        TextAnalysis.explodeWhen(col("__d") =!= "", array(col("__d")),
+          "string").as("__dv"))
       .select(col("src"), col("__dv").cast("long").as("dst"), col("anchor"))
   }
 

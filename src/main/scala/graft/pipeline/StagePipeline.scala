@@ -66,10 +66,10 @@ object StagePipeline {
     // plan, ~650 regexp_replace calls per row per filter)
     scored
       .select(col("doc_id"), col("text"), col("lang"), col("quality"),
-        explode(when(col("pred_lang") === lang &&
+        TextAnalysis.explodeWhen(col("pred_lang") === lang &&
           col("quality") >= minQuality &&
-          col("dup_bigram_frac") <= maxDupBigramFrac, array(lit(1)))
-          .otherwise(array().cast("array<int>"))).as("__keep"))
+          col("dup_bigram_frac") <= maxDupBigramFrac, array(lit(1)), "int")
+          .as("__keep"))
       .drop("__keep")
   }
 

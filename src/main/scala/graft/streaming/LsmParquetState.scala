@@ -39,27 +39,20 @@ private[streaming] object LsmParquetState {
     * queries, so [[compact]] can refuse to run under an active stream
     * instead of silently racing its swap against a micro-batch's
     * reads/appends (the "call BETWEEN runs" contract, now enforced).
-    * Operators register their state dirs when `start` returns; the guard
-    * prunes entries whose query has since stopped. The registry is
-    * driver-JVM-local by design: every foreachBatch writer of these
-    * stores runs in the driver that started it, so the footgun this
-    * guards against — compacting a store THIS process is streaming
-    * into — is exactly the in-JVM case. A stream in a different driver
-    * is out of scope (same as Spark's own state-store locking) and
-    * stays covered by the documented between-runs contract.
+    * Operators claim their state dirs before `start` (see
+    * [[startOwning]]); the guard prunes entries whose query has since
+    * stopped. The registry is driver-JVM-local by design: every
+    * foreachBatch writer of these stores runs in the driver that started
+    * it, so the footgun this guards against — compacting a store THIS
+    * process is streaming into — is exactly the in-JVM case. A stream in
+    * a different driver is out of scope (same as Spark's own state-store
+    * locking) and stays covered by the documented between-runs contract.
     */
   private final case class Owner(label: String, isActive: () => Boolean)
   private val owners =
     new java.util.concurrent.ConcurrentHashMap[String, Owner]()
 
   private def ownerKey(dir: String): String = dir.stripSuffix("/")
-
-  /** Record that `q` is streaming into `dir`; called by operator
-    * `start` methods. Latest registration wins (a restart re-registers).
-    */
-  def registerOwner(dir: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    owners.put(ownerKey(dir), Owner(s"streaming query ${q.id}", () => q.isActive))
 
   /** A registration taken out BEFORE `start()` returns, closing the
     * window where the first micro-batch is already live but no owner is
@@ -102,17 +95,23 @@ private[streaming] object LsmParquetState {
     h
   }
 
-  /** Take pending ownership of every dir in order, run `start`, bind the
-    * query to all handles; on failure release the handles and rethrow.
-    * The one helper every streaming operator's `start` should use.
+  /** The one start of every `foreachBatch` streaming operator: take
+    * pending ownership of every dir in `owns` (in order), start `source`
+    * as an `AvailableNow` query running `batch` per micro-batch and
+    * checkpointed at `checkpointDir`, then bind the query to all claims.
+    * If the start throws, the claims are released and the error rethrown.
     */
-  def withPendingOwners(dirs: Seq[String])(
-      start: => org.apache.spark.sql.streaming.StreamingQuery)
+  def startOwning(source: DataFrame, checkpointDir: String, owns: Seq[String])(
+      batch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val handles = new scala.collection.mutable.ArrayBuffer[PendingOwner]
     try {
-      dirs.foreach(d => handles += registerPending(d))
-      val q = start
+      owns.foreach(d => handles += registerPending(d))
+      val q = source.writeStream
+        .foreachBatch(batch)
+        .option("checkpointLocation", checkpointDir)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
       handles.foreach(_.bind(q))
       q
     } catch {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -22,15 +22,30 @@ object StreamHarness {
   def tempDir(tag: String): String =
     org.apache.spark.sql.graft.Bridge.createTempDir(s"graft_$tag").getPath
 
-  /** The parquet files under `$tmp/stream/`, one per micro-batch. */
-  def fileStream(s: SparkSession, tmp: String, schema: StructType): DataFrame =
-    s.readStream.schema(schema)
+  /** Write each of `batches`, in order, as one parquet file under
+    * `$tmp/stream/b<i>` and return them as a stream of one file per
+    * trigger — one frame, one micro-batch — typed by the first frame's
+    * schema. Frames whose column names or types differ from the first's
+    * are rejected before anything is written (nullability is not
+    * compared: the file source reads every column as nullable).
+    */
+  def feed(tmp: String, batches: DataFrame*): DataFrame = {
+    require(batches.nonEmpty, "feed needs at least one batch")
+    def shape(t: StructType) =
+      t.fields.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+    val schema = batches.head.schema
+    batches.zipWithIndex.foreach { case (b, i) =>
+      require(shape(b.schema) == shape(schema),
+        s"batch $i has columns (${shape(b.schema)}), " +
+          s"batch 0 has (${shape(schema)})")
+    }
+    batches.zipWithIndex.foreach { case (b, i) =>
+      b.coalesce(1).write.parquet(s"$tmp/stream/b$i")
+    }
+    batches.head.sparkSession.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$tmp/stream/*")
-
-  /** [[fileStream]] with a DDL schema string. */
-  def fileStream(s: SparkSession, tmp: String, ddl: String): DataFrame =
-    fileStream(s, tmp, StructType.fromDDL(ddl))
+  }
 
   /** Block until `q` terminates. A query still running after the timeout
     * is stopped and the call throws, so a caller never reads half-written

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming audio fingerprint matching — the ingest-time twin of the
@@ -68,17 +68,11 @@ object StreamingAudioFingerprint {
       idCol: String, payloadCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       windowBytes: Int = 16, fanout: Int = 3, zone: Int = 16,
-      minAligned: Int = 3, maxHashGroup: Int = 10000,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(indexDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, payloadCol, indexDir,
-            pairsDir, windowBytes, fanout, zone, minAligned, maxHashGroup)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      minAligned: Int = 3, maxHashGroup: Int = 10000): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(indexDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, payloadCol, indexDir,
+          pairsDir, windowBytes, fanout, zone, minAligned, maxHashGroup)
     }
   }
 

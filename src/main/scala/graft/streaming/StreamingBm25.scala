@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming BM25 retrieval index — the live counterpart of the batch
@@ -106,27 +106,23 @@ object StreamingBm25 {
   def start(spark: SparkSession, source: DataFrame, idCol: String,
       textCol: String, queries: DataFrame, queryIdCol: String,
       queryTextCol: String, stateDir: String, reportDir: String,
-      checkpointDir: String, k: Int = 5, maxDfFrac: Double = 0.1,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    LsmParquetState.withPendingOwners(
+      checkpointDir: String, k: Int = 5,
+      maxDfFrac: Double = 0.1): StreamingQuery = {
+    // the panel is FIXED for the stream's lifetime: tokenize it (and
+    // derive its touched hash prefixes, inside the checkpoint job)
+    // ONCE here, not per batch
+    val (qtoks, touchedSet) = EagerBatch.withIntSet(
+      TextAnalysis.queryTokens(queries, queryIdCol, queryTextCol),
+      pmod(hash(col("__tok")), lit(tokenPrefixes)).cast("int"))
+    val touched = touchedSet.toArray
+    LsmParquetState.startOwning(source, checkpointDir,
         Seq(postingsDir(stateDir), scalarsDir(stateDir))) {
-      // the panel is FIXED for the stream's lifetime: tokenize it (and
-      // derive its touched hash prefixes, inside the checkpoint job)
-      // ONCE here, not per batch
-      val (qtoks, touchedSet) = EagerBatch.withIntSet(
-        TextAnalysis.queryTokens(queries, queryIdCol, queryTextCol),
-        pmod(hash(col("__tok")), lit(tokenPrefixes)).cast("int"))
-      val touched = touchedSet.toArray
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, textCol, queries, queryIdCol,
-            queryTextCol, stateDir, reportDir, k, maxDfFrac,
-            panel = Some((qtoks, touched)))
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, textCol, queries, queryIdCol,
+          queryTextCol, stateDir, reportDir, k, maxDfFrac,
+          panel = Some((qtoks, touched)))
     }
+  }
 
   /** One micro-batch — split out so the replay spec drives the exact
     * production path with a pinned `batchId`.

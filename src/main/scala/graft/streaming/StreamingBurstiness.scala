@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming inter-event burstiness — the live counterpart of the batch
@@ -80,18 +80,12 @@ object StreamingBurstiness {
 
   def start(spark: SparkSession, source: DataFrame, keyCol: String,
       tsCol: String, tieCol: String, stateDir: String, reportDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     ensureStore(spark, stateDir)
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, keyCol, tsCol, tieCol, stateDir,
-            reportDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, keyCol, tsCol, tieCol, stateDir,
+          reportDir)
     }
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming CDC merge — the ingest-time twin of the batch c03 operator
@@ -69,18 +69,13 @@ object StreamingCdcMerge {
     */
   def start(spark: SparkSession, source: DataFrame, keyCols: Seq[String],
       versionCol: String, opCol: String, stateDir: String,
-      checkpointDir: String, tieBreak: Seq[String] = Nil,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      checkpointDir: String, tieBreak: Seq[String] = Nil): StreamingQuery = {
     require(keyCols.nonEmpty, "need at least one key column")
-    LsmParquetState.withPendingOwners(Seq(s"$stateDir/changes")) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, keyCols, versionCol, opCol, stateDir,
-            tieBreak)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir,
+        Seq(s"$stateDir/changes")) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, keyCols, versionCol, opCol, stateDir,
+          tieBreak)
     }
   }
 

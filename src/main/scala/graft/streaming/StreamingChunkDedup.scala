@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming content-defined chunk dedup — the live counterpart of the
@@ -63,18 +63,12 @@ object StreamingChunkDedup {
   def start(spark: SparkSession, source: DataFrame, idCol: String,
       payloadCol: String, chunksDir: String, reportDir: String,
       checkpointDir: String, minSize: Int = 32, maskBits: Int = 6,
-      maxSize: Int = 256,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      maxSize: Int = 256): StreamingQuery = {
     ensureStore(spark, chunksDir)
-    LsmParquetState.withPendingOwners(Seq(chunksDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, payloadCol, chunksDir,
-            reportDir, minSize, maskBits, maxSize)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(chunksDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, payloadCol, chunksDir,
+          reportDir, minSize, maskBits, maxSize)
     }
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.CorpusStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming classifier evaluation — the ingest-time twin of the batch
@@ -45,16 +45,11 @@ object StreamingClassifierEval {
     * `source` must carry `truthCol` and `predCol`.
     */
   def start(spark: SparkSession, source: DataFrame, truthCol: String,
-      predCol: String, stateDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, truthCol, predCol, stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      predCol: String, stateDir: String,
+      checkpointDir: String): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, truthCol, predCol, stateDir)
     }
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{ByteStubDecoder, MediaDecoder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming video clip alignment — the ingest-time twin of the batch
@@ -56,17 +56,11 @@ object StreamingClipAlign {
       indexDir: String, pairsDir: String, checkpointDir: String,
       frameBytes: Int = 16, minAligned: Int = 3,
       maxDigestGroup: Int = 10000,
-      decoder: Option[MediaDecoder] = None,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(indexDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, payloadCol, indexDir,
-            pairsDir, frameBytes, minAligned, maxDigestGroup, decoder)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      decoder: Option[MediaDecoder] = None): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(indexDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, payloadCol, indexDir,
+          pairsDir, frameBytes, minAligned, maxDigestGroup, decoder)
     }
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming end-to-end curation screen — the streaming sibling of the
@@ -119,20 +119,14 @@ object StreamingCuration {
       fpDir: String, keptDir: String, checkpointDir: String,
       lang: String = "en", minQuality: Double = 0.9,
       maxDupBigramFrac: Double = 0.05,
-      overlapN: Int = 5, overlapThreshold: Double = 0.5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      overlapN: Int = 5, overlapThreshold: Double = 0.5): StreamingQuery = {
     require(!evalDocs.isStreaming, "the eval set must be a bounded batch frame")
     // fingerprint compaction refuses while this query is pending/live
-    LsmParquetState.withPendingOwners(Seq(fpDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, evalDocs, idCol, textCol, langCol,
-            fpDir, keptDir, lang, minQuality, maxDupBigramFrac, overlapN,
-            overlapThreshold)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(fpDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, evalDocs, idCol, textCol, langCol,
+          fpDir, keptDir, lang, minQuality, maxDupBigramFrac, overlapN,
+          overlapThreshold)
     }
   }
 
@@ -162,8 +156,7 @@ object StreamingCuration {
   def startFromConfig(spark: SparkSession, source: DataFrame,
       cfg: graft.model.PipelineConfig, tables: Map[String, DataFrame],
       idCol: String, textCol: String, langCol: String,
-      fpDir: String, keptDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      fpDir: String, keptDir: String, checkpointDir: String): StreamingQuery = {
     require(tables.values.forall(!_.isStreaming),
       "aux tables must be bounded batch frames")
     graft.pipeline.StagePipeline.validate(cfg)
@@ -179,15 +172,10 @@ object StreamingCuration {
       s"config pipeline must emit (${Seq(idCol, textCol, langCol,
         "quality").mkString(", ")}) for the curation state fold; " +
         s"missing: ${missing.mkString(", ")}")
-    LsmParquetState.withPendingOwners(Seq(fpDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processConfigBatch(batch, batchId, cfg, tables, idCol, textCol,
-            langCol, fpDir, keptDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(fpDir)) {
+      (batch, batchId) =>
+        processConfigBatch(batch, batchId, cfg, tables, idCol, textCol,
+          langCol, fpDir, keptDir)
     }
   }
 

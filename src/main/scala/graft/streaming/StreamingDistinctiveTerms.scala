@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming distinctive-terms drift monitor — the t50 Dunning G²
@@ -74,18 +74,12 @@ object StreamingDistinctiveTerms {
 
   def start(spark: SparkSession, source: DataFrame, textCol: String,
       stateDir: String, reportDir: String, checkpointDir: String,
-      minCount: Long = 5L,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    LsmParquetState.withPendingOwners(
+      minCount: Long = 5L): StreamingQuery =
+    LsmParquetState.startOwning(source, checkpointDir,
         Seq(countsDir(stateDir), scalarsDir(stateDir))) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, textCol, stateDir, reportDir,
-            minCount)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      (batch, batchId) =>
+        processBatch(batch, batchId, textCol, stateDir, reportDir,
+          minCount)
     }
 
   /** One micro-batch — split out so the replay spec drives the exact

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Governance
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming DP Naive Bayes model release — the ingest-time twin of the
@@ -47,17 +47,11 @@ object StreamingDpNbRelease {
     */
   def start(spark: SparkSession, source: DataFrame, textCol: String,
       labelCol: String, maxTokensPerDoc: Int, stateDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, textCol, labelCol, maxTokensPerDoc,
-            stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      checkpointDir: String): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, textCol, labelCol, maxTokensPerDoc,
+          stateDir)
     }
   }
 

@@ -4,7 +4,7 @@ import graft.operators.DqAudit
 import graft.operators.DqAudit.{DqRule, ForeignKey, UniqueKey}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming data-quality monitor — the ingest-time form of the
@@ -79,8 +79,7 @@ object StreamingDqMonitor {
 
   def start(spark: SparkSession, source: DataFrame, tableName: String,
       refTables: Map[String, DataFrame], rules: Seq[DqRule],
-      countsDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      countsDir: String, checkpointDir: String): StreamingQuery = {
     require(rules.nonEmpty, "no rules to audit")
     require(rules.forall(_.table == tableName),
       s"every rule must target the streaming table '$tableName'")
@@ -97,14 +96,9 @@ object StreamingDqMonitor {
       "reference tables must be bounded batch frames"))
     val keyDirs = rules.collect { case r: UniqueKey =>
       keysDirFor(countsDir, r.name) }
-    LsmParquetState.withPendingOwners(countsDir +: keyDirs) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, tableName, refTables, rules, countsDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, countsDir +: keyDirs) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, tableName, refTables, rules, countsDir)
     }
   }
 

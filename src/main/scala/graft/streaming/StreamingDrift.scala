@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.CorpusStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming distribution-drift monitor — the streaming sibling of the
@@ -45,8 +45,8 @@ object StreamingDrift {
     */
   def start(spark: SparkSession, source: DataFrame, reference: DataFrame,
       valueCol: String, countsDir: String, outDir: String,
-      checkpointDir: String, nBuckets: Int = 10, eps: Double = 1e-6,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      checkpointDir: String, nBuckets: Int = 10,
+      eps: Double = 1e-6): StreamingQuery = {
     require(!reference.isStreaming, "the reference must be a bounded batch frame")
     // reference counts: one aggregate, nBuckets rows — bounded model
     // state. A null metric buckets to a null key, carried as None so the
@@ -58,8 +58,8 @@ object StreamingDrift {
         .map(r => (if (r.isNullAt(0)) None else Some(r.getInt(0)), r.getLong(1)))
     val refTotal = refCounts.map(_._2).sum
 
-    source.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    LsmParquetState.startOwning(source, checkpointDir, Nil) {
+      (batch, batchId) =>
         val s = batch.sparkSession
         import s.implicits._
         val delta = CorpusStats.bucketCounts(batch, valueCol, nBuckets, "n")
@@ -94,9 +94,6 @@ object StreamingDrift {
               refTotal, streamTotal, eps)
             .coalesce(1).write.mode("overwrite").parquet(outDir)
         }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
   }
 }

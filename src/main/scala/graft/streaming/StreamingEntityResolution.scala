@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming incremental entity resolution — the ingest-time form of the
@@ -198,18 +198,12 @@ object StreamingEntityResolution {
       idCol: String, strCol: String,
       namesDir: String, mapDir: String, checkpointDir: String,
       maxDist: Int = 1,
-      trigger: Trigger = Trigger.AvailableNow(),
       maxBucketSize: Int = 10000): StreamingQuery = {
-    LsmParquetState.withPendingOwners(
+    LsmParquetState.startOwning(source, checkpointDir,
         Seq(namesDir, variantsDirFor(namesDir), mapDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, strCol, namesDir, mapDir,
-            maxDist, maxBucketSize)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, strCol, namesDir, mapDir,
+          maxDist, maxBucketSize)
     }
   }
 

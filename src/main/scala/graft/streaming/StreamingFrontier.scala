@@ -35,22 +35,15 @@ object StreamingFrontier {
     * g23 candidate chain verbatim) feeding [[processBatch]].
     */
   def start(spark: SparkSession, source: DataFrame, idCol: String,
-      htmlCol: String, stateDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      htmlCol: String, stateDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(
-            graft.operators.Html.outlinks(batch, idCol, htmlCol)
-              .select(graft.operators.TextAnalysis
-                .canonicalUrl(col("url")).as("url")),
-            batchId, "url", stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(
+          graft.operators.Html.outlinks(batch, idCol, htmlCol)
+            .select(graft.operators.TextAnalysis
+              .canonicalUrl(col("url")).as("url")),
+          batchId, "url", stateDir)
     }
 
   /** Bank one micro-batch's candidate occurrences. `candidates` carries

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming conversion funnel — the ingest-time form of
@@ -92,19 +92,14 @@ object StreamingFunnel {
 
   def start(spark: SparkSession, source: DataFrame,
       userCol: String, typeCol: String, tsCol: String,
-      stages: Seq[String], stateDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      stages: Seq[String], stateDir: String,
+      checkpointDir: String): StreamingQuery = {
     require(stages.size >= 2 && stages.distinct.size == stages.size,
       s"need >= 2 distinct stages, got $stages")
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, userCol, typeCol, tsCol, stages,
-            stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, userCol, typeCol, tsCol, stages,
+          stateDir)
     }
   }
 

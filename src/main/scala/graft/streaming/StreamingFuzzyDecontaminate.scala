@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming fuzzy-decontamination screen — the ingest-time form of
@@ -32,8 +32,7 @@ object StreamingFuzzyDecontaminate {
   def start(spark: SparkSession, source: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, keptDir: String, checkpointDir: String,
       threshold: Double = 0.8, shingleK: Int = 5, bands: Int = 16,
-      rowsPerBand: Int = 4, maxBucketSize: Int = 1000,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      rowsPerBand: Int = 4, maxBucketSize: Int = 1000): StreamingQuery = {
     require(!bench.isStreaming, "the benchmark must be a bounded batch frame")
     val benchBuckets = Dedup.lshBuckets(bench, idCol, textCol, shingleK,
         bands, rowsPerBand)
@@ -41,14 +40,11 @@ object StreamingFuzzyDecontaminate {
       .persist()
     val benchSets = Dedup.shingleSetsOf(bench, idCol, textCol, shingleK,
       "idB", "__shB").persist()
-    source.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    LsmParquetState.startOwning(source, checkpointDir, Nil) {
+      (batch, batchId) =>
         processBatch(batch, batchId, benchBuckets, benchSets, idCol, textCol,
           keptDir, threshold, shingleK, bands, rowsPerBand, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
   }
 
   /** One micro-batch — split out so the replay spec can drive it with a

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming heavy-hitters monitor — the streaming sibling of the batch
@@ -38,11 +38,9 @@ object StreamingHeavyHitters {
     */
   def start(spark: SparkSession, source: DataFrame, textCol: String,
       countsDir: String, outDir: String, checkpointDir: String,
-      k: Int = 20,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(countsDir)) {
-      source.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      k: Int = 20): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(countsDir)) {
+      (batch, batchId) =>
         val s = batch.sparkSession
         // fresh run (a resume from checkpoint never re-enters batch 0
         // unless it crashed inside it — where a reset is the replay): the
@@ -55,10 +53,6 @@ object StreamingHeavyHitters {
           .groupBy("token").agg(sum(col("n")).as("n"))
         TextAnalysis.topTokensFromCounts(accumulated, k)
           .coalesce(1).write.mode("overwrite").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
     }
   }
 

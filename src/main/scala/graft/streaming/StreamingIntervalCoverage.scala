@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming interval-union coverage — the live counterpart of the batch
@@ -93,18 +93,12 @@ object StreamingIntervalCoverage {
   def start(spark: SparkSession, source: DataFrame, keyCol: String,
       startCol: String, endCol: String, blocksDir: String,
       reportDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
       maxBlocksPerKey: Int = 100000): StreamingQuery = {
     ensureStore(spark, blocksDir)
-    LsmParquetState.withPendingOwners(Seq(blocksDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, keyCol, startCol, endCol,
-            blocksDir, reportDir, maxBlocksPerKey)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(blocksDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, keyCol, startCol, endCol,
+          blocksDir, reportDir, maxBlocksPerKey)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
@@ -117,19 +117,14 @@ object StreamingKAnonymity {
   def start(spark: SparkSession, source: DataFrame,
       quasiCols: Seq[String], sensitiveCol: String, k: Long, l: Long,
       pairsDir: String, countsDir: String, reportDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     ensureStores(spark, source.schema, quasiCols, sensitiveCol, pairsDir,
       countsDir)
-    LsmParquetState.withPendingOwners(Seq(pairsDir, countsDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, quasiCols, sensitiveCol, k, l,
-            pairsDir, countsDir, reportDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir,
+        Seq(pairsDir, countsDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, quasiCols, sensitiveCol, k, l,
+          pairsDir, countsDir, reportDir)
     }
   }
 

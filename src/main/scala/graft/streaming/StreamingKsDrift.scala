@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming Kolmogorov–Smirnov drift — the shape-sensitive companion to
@@ -68,16 +68,10 @@ object StreamingKsDrift {
         .agg(max_by(col("n"), col("__tail_batch")).as("n"))))
 
   def start(spark: SparkSession, source: DataFrame, valueCol: String,
-      stateDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, valueCol, stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      stateDir: String, checkpointDir: String): StreamingQuery =
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, valueCol, stateDir)
     }
 
   /** One micro-batch — split out so the replay spec can drive it with a

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming logistic-regression trainer — the ingest-time twin of the
@@ -54,16 +54,10 @@ object StreamingLrTrain {
     */
   def start(spark: SparkSession, source: DataFrame, idCol: String,
       textCol: String, yCol: Column, dim: Int, stateDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, textCol, yCol, dim, stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      checkpointDir: String): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, textCol, yCol, dim, stateDir)
     }
   }
 

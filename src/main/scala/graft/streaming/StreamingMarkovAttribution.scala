@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming Markov removal-effect attribution — the live counterpart of
@@ -127,19 +127,14 @@ object StreamingMarkovAttribution {
   def start(spark: SparkSession, source: DataFrame, userCol: String,
       typeCol: String, tsCol: String, tieCol: String,
       conversionType: String, touchTypes: Seq[String], stateDir: String,
-      reportDir: String, checkpointDir: String, iterations: Int = 60,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      reportDir: String, checkpointDir: String,
+      iterations: Int = 60): StreamingQuery = {
     ensureStores(spark, stateDir)
-    LsmParquetState.withPendingOwners(
+    LsmParquetState.startOwning(source, checkpointDir,
         Seq(usersDir(stateDir), countsDir(stateDir))) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, userCol, typeCol, tsCol, tieCol,
-            conversionType, touchTypes, stateDir, reportDir, iterations)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      (batch, batchId) =>
+        processBatch(batch, batchId, userCol, typeCol, tsCol, tieCol,
+          conversionType, touchTypes, stateDir, reportDir, iterations)
     }
   }
 

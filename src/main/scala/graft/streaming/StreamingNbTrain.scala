@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming Naive Bayes trainer — the ingest-time twin of the batch t53
@@ -52,16 +52,11 @@ object StreamingNbTrain {
     * must carry `textCol` and `labelCol`.
     */
   def start(spark: SparkSession, source: DataFrame, textCol: String,
-      labelCol: String, stateDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, textCol, labelCol, stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      labelCol: String, stateDir: String,
+      checkpointDir: String): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, textCol, labelCol, stateDir)
     }
   }
 

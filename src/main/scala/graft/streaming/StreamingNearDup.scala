@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming near-duplicate screening with PERSISTENT index state — the
@@ -241,20 +241,14 @@ object StreamingNearDup {
       checkpointDir: String,
       threshold: Double = 0.8, shingleK: Int = 5,
       bands: Int = 16, rowsPerBand: Int = 4, maxBucketSize: Int = 1000,
-      trigger: Trigger = Trigger.AvailableNow(),
       restrictToTouched: Boolean = true): StreamingQuery = {
     // compaction of either state dir refuses while this query is
     // pending/live
-    LsmParquetState.withPendingOwners(Seq(indexDir, docsDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, textCol, indexDir, docsDir,
-            pairsDir, threshold, shingleK, bands, rowsPerBand, maxBucketSize,
-            restrictToTouched)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(indexDir, docsDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, textCol, indexDir, docsDir,
+          pairsDir, threshold, shingleK, bands, rowsPerBand, maxBucketSize,
+          restrictToTouched)
     }
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{Dedup, Multimodal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming perceptual-hash image dedup — the ingest-time twin of the
@@ -85,17 +85,11 @@ object StreamingPHashDedup {
   def start(spark: SparkSession, source: DataFrame,
       idCol: String, pixelsCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
-      maxHamming: Int = 10, maxBucketSize: Int = 10000,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(indexDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, pixelsCol, indexDir,
-            pairsDir, maxHamming, maxBucketSize)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      maxHamming: Int = 10, maxBucketSize: Int = 10000): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(indexDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, pixelsCol, indexDir,
+          pairsDir, maxHamming, maxBucketSize)
     }
   }
 

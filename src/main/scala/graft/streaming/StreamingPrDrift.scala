@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming PR-AUC + calibration drift for a deployed quality
@@ -80,17 +80,11 @@ object StreamingPrDrift {
 
   def start(spark: SparkSession, source: DataFrame, scoreCol: String,
       labelCol: String, stateDir: String, reportDir: String,
-      checkpointDir: String, bins: Int = 10,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, scoreCol, labelCol, stateDir,
-            reportDir, bins)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      checkpointDir: String, bins: Int = 10): StreamingQuery =
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, scoreCol, labelCol, stateDir,
+          reportDir, bins)
     }
 
   /** One micro-batch — split out so the replay spec drives the exact

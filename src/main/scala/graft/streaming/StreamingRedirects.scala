@@ -31,27 +31,20 @@ object StreamingRedirects {
     * verbatim) feeding [[processBatch]].
     */
   def start(spark: SparkSession, source: DataFrame, idCol: String,
-      warcCol: String, stateDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      warcCol: String, stateDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val recs = graft.sources.Warc.httpResponses(
-            graft.sources.Warc.records(batch, idCol, warcCol), "body")
-          val redirects = recs
-            .filter(col("http_status").between(300, 399) &&
-              col("location") =!= "")
-            .select(col("target_uri"), col("location"))
-          val edges = graft.operators.TextAnalysis.withResolvedUrl(
-              redirects, "target_uri", "location", "__t")
-            .select(col("target_uri").as("url"), col("__t").as("target"))
-          processBatch(edges, batchId, stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        val recs = graft.sources.Warc.httpResponses(
+          graft.sources.Warc.records(batch, idCol, warcCol), "body")
+        val redirects = recs
+          .filter(col("http_status").between(300, 399) &&
+            col("location") =!= "")
+          .select(col("target_uri"), col("location"))
+        val edges = graft.operators.TextAnalysis.withResolvedUrl(
+            redirects, "target_uri", "location", "__t")
+          .select(col("target_uri").as("url"), col("__t").as("target"))
+        processBatch(edges, batchId, stateDir)
     }
 
   /** Bank one micro-batch's redirect edges. */

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.CorpusStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming ranked-retrieval evaluation — the ingest-time twin of the
@@ -50,16 +50,10 @@ object StreamingRetrievalEval {
     * (query_id, doc_id, grade) assessment frame.
     */
   def start(spark: SparkSession, source: DataFrame, qrels: DataFrame,
-      k: Int, stateDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, qrels, k, stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      k: Int, stateDir: String, checkpointDir: String): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, qrels, k, stateDir)
     }
   }
 

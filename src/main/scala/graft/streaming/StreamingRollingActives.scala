@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming rolling-window distinct actives — the live counterpart of
@@ -61,19 +61,13 @@ object StreamingRollingActives {
 
   def start(spark: SparkSession, source: DataFrame, userCol: String,
       tsNsCol: String, pairsDir: String, reportDir: String,
-      checkpointDir: String, windowDays: Int = 7,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      checkpointDir: String, windowDays: Int = 7): StreamingQuery = {
     require(windowDays >= 1, "window must span at least one day")
     ensureStore(spark, pairsDir)
-    LsmParquetState.withPendingOwners(Seq(pairsDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, userCol, tsNsCol, pairsDir,
-            reportDir, windowDays)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(pairsDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, userCol, tsNsCol, pairsDir,
+          reportDir, windowDays)
     }
   }
 

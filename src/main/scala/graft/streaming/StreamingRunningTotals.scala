@@ -62,12 +62,12 @@ object StreamingRunningTotals {
     */
   def startToMemory(
       spark: SparkSession, stream: DataFrame, keyCol: String, valueCol: String,
-      queryName: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger): org.apache.spark.sql.streaming.StreamingQuery =
+      queryName: String, checkpointDir: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     runningTotals(spark, stream, keyCol, valueCol)
       .writeStream
       .outputMode(OutputMode.Update())
-      .trigger(trigger)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .format("memory").queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .start()

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{MediaDecoder, Multimodal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming scene segmentation — the ingest-time twin of the batch m13
@@ -34,16 +34,12 @@ object StreamingSceneSegments {
   def start(spark: SparkSession, source: DataFrame, idCol: String,
       payloadCol: String, scenesDir: String, checkpointDir: String,
       windowBytes: Int = 16, cutThreshold: Long = 120,
-      decoder: Option[MediaDecoder] = None,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      decoder: Option[MediaDecoder] = None): StreamingQuery =
+    LsmParquetState.startOwning(source, checkpointDir, Nil) {
+      (batch, batchId) =>
         processBatch(batch, batchId, idCol, payloadCol, scenesDir,
           windowBytes, cutThreshold, decoder)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
 
   /** One micro-batch: the batch operator over the batch's own assets,
     * batch-keyed append. Split out for the replay spec (the

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming SEMANTIC duplicate screening against a persisted IVF-PQ
@@ -121,18 +121,12 @@ object StreamingSemanticScreen {
       indexDir: String, vecsDir: String, pairsDir: String,
       checkpointDir: String,
       threshold: Double = 0.999, k: Int = 5, nprobe: Int = 4,
-      rerank: Int = 32,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      rerank: Int = 32): StreamingQuery = {
     // stored-vector compaction refuses while this query is pending/live
-    LsmParquetState.withPendingOwners(Seq(vecsDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, vecCol, indexDir, vecsDir,
-            pairsDir, threshold, k, nprobe, rerank)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(vecsDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, vecCol, indexDir, vecsDir,
+          pairsDir, threshold, k, nprobe, rerank)
     }
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Html
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming site-level template removal — the ingest-time twin of the
@@ -43,17 +43,11 @@ object StreamingSiteTemplate {
     */
   def start(spark: SparkSession, source: DataFrame, idCol: String,
       htmlCol: String, hostCol: String, stateDir: String,
-      checkpointDir: String, minWords: Int = 5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, htmlCol, hostCol, stateDir,
-            minWords)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      checkpointDir: String, minWords: Int = 5): StreamingQuery =
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, htmlCol, hostCol, stateDir,
+          minWords)
     }
 
   /** One micro-batch: the per-document block rows + per-page sentinels,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming substring-search index — the ingest-time form of
@@ -65,16 +65,10 @@ object StreamingSubstringIndex {
   def start(spark: SparkSession, source: DataFrame,
       idCol: String, textCol: String,
       indexDir: String, docsDir: String, checkpointDir: String,
-      q: Int = 3,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(indexDir, docsDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, textCol, indexDir, docsDir, q)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      q: Int = 3): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(indexDir, docsDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, textCol, indexDir, docsDir, q)
     }
   }
 

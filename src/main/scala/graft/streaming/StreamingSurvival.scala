@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming Kaplan–Meier / Nelson–Aalen survival — the live counterpart
@@ -61,16 +61,10 @@ object StreamingSurvival {
       censorHorizon)
 
   def start(spark: SparkSession, source: DataFrame, keyCol: String,
-      tsCol: String, stateDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, keyCol, tsCol, stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      tsCol: String, stateDir: String, checkpointDir: String): StreamingQuery =
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, keyCol, tsCol, stateDir)
     }
 
   /** One micro-batch — split out so the replay spec drives the exact

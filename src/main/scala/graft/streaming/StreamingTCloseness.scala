@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
@@ -119,19 +119,14 @@ object StreamingTCloseness {
   def start(spark: SparkSession, source: DataFrame,
       quasiCols: Seq[String], sensitiveCol: String, t: Double,
       ordered: Boolean, valsDir: String, globalDir: String,
-      reportDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      reportDir: String, checkpointDir: String): StreamingQuery = {
     ensureStores(spark, source.schema, quasiCols, sensitiveCol, valsDir,
       globalDir)
-    LsmParquetState.withPendingOwners(Seq(valsDir, globalDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, quasiCols, sensitiveCol, t,
-            ordered, valsDir, globalDir, reportDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir,
+        Seq(valsDir, globalDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, quasiCols, sensitiveCol, t,
+          ordered, valsDir, globalDir, reportDir)
     }
   }
 

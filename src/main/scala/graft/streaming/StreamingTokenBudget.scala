@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{CorpusStats, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming token-budget admission — ingest a document stream until a
@@ -40,11 +40,10 @@ object StreamingTokenBudget {
     */
   def start(spark: SparkSession, source: DataFrame, idCol: String,
       textCol: String, budget: Long, stateDir: String, outDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     require(budget >= 0, "budget must be non-negative")
-    source.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    LsmParquetState.startOwning(source, checkpointDir, Nil) {
+      (batch, batchId) =>
         val s = batch.sparkSession
         // a fresh run resets at batch 0 (a checkpoint resume never re-enters
         // it unless it crashed inside it, where reset IS the replay): stale
@@ -81,9 +80,6 @@ object StreamingTokenBudget {
         import s.implicits._
         Seq(spent).toDF("spent_tokens")
           .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming Markov transition entropy — the live counterpart of the
@@ -108,19 +108,13 @@ object StreamingTransitionEntropy {
 
   def start(spark: SparkSession, source: DataFrame, keyCol: String,
       typeCol: String, tsCol: String, tieCol: String, stateDir: String,
-      reportDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      reportDir: String, checkpointDir: String): StreamingQuery = {
     ensureStores(spark, stateDir)
-    LsmParquetState.withPendingOwners(
+    LsmParquetState.startOwning(source, checkpointDir,
         Seq(usersDir(stateDir), countsDir(stateDir))) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, keyCol, typeCol, tsCol, tieCol,
-            stateDir, reportDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      (batch, batchId) =>
+        processBatch(batch, batchId, keyCol, typeCol, tsCol, tieCol,
+          stateDir, reportDir)
     }
   }
 

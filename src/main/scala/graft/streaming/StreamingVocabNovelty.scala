@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming vocabulary-novelty monitor — the ingest-time Heaps curve
@@ -75,16 +75,11 @@ object StreamingVocabNovelty {
     LsmParquetState.compact(spark, tokensDir, layout)
 
   def start(spark: SparkSession, source: DataFrame, textCol: String,
-      tokensDir: String, reportDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(tokensDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, textCol, tokensDir, reportDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      tokensDir: String, reportDir: String,
+      checkpointDir: String): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(tokensDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, textCol, tokensDir, reportDir)
     }
   }
 

@@ -34,20 +34,13 @@ object StreamingWarcDedup {
     * the f14 chain verbatim) feeding [[processBatch]].
     */
   def start(spark: SparkSession, source: DataFrame, idCol: String,
-      warcCol: String, stateDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      warcCol: String, stateDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(
-            graft.sources.Warc.recordsFull(batch, idCol, warcCol),
-            batchId, stateDir)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(
+          graft.sources.Warc.recordsFull(batch, idCol, warcCol),
+          batchId, stateDir)
     }
 
   /** Bank one micro-batch's digest-bearing capture rows. */

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{Graph, Html}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming web-graph construction — the ingest-time twin of the batch
@@ -41,17 +41,12 @@ object StreamingWebGraph {
     */
   def start(spark: SparkSession, source: DataFrame, idCol: String,
       htmlCol: String, baseUriCol: String, stateDir: String,
-      checkpointDir: String, idPattern: String = "/doc/([0-9]+)",
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    LsmParquetState.withPendingOwners(Seq(stateDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, htmlCol, baseUriCol,
-            stateDir, idPattern)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      checkpointDir: String,
+      idPattern: String = "/doc/([0-9]+)"): StreamingQuery =
+    LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, htmlCol, baseUriCol,
+          stateDir, idPattern)
     }
 
   /** One micro-batch: the per-page doc-link edges + per-page vertex

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming winnowing (MOSS) overlap screen — the ingest-time form of
@@ -75,17 +75,11 @@ object StreamingWinnow {
       idCol: String, textCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       k: Int = 16, window: Int = 16, minShared: Long = 2,
-      maxBucketSize: Int = 1000,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LsmParquetState.withPendingOwners(Seq(indexDir)) {
-      source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, idCol, textCol, indexDir, pairsDir,
-            k, window, minShared, maxBucketSize)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+      maxBucketSize: Int = 1000): StreamingQuery = {
+    LsmParquetState.startOwning(source, checkpointDir, Seq(indexDir)) {
+      (batch, batchId) =>
+        processBatch(batch, batchId, idCol, textCol, indexDir, pairsDir,
+          k, window, minShared, maxBucketSize)
     }
   }
 

@@ -1008,4 +1008,81 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!p.contains("Exchange"), s"scoring should not shuffle:\n$p")
     assert(p.contains("lr_buckets"), s"feature kernel missing:\n$p")
   }
+
+  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+  /** Expression-tree nodes of `n` itself (not its children) that pass
+    * `keep`.
+    */
+  private def nodeExprs(n: Plan,
+      keep: org.apache.spark.sql.catalyst.expressions.Expression => Boolean =
+        _ => true): Int =
+    n.expressions.map(_.collect { case e if keep(e) => e }.size).sum
+
+  /** Expression-tree nodes over every node of `lp`. */
+  private def exprNodes(lp: Plan): Int = lp.collect { case n => nodeExprs(n) }.sum
+
+  test("Generate barrier: the n-gram overlap kernel runs once per pair " +
+      "in t59/t60 — no pushed predicate re-evaluates it") {
+    // bleuPairs and chrfPairs drop empty sides through
+    // TextAnalysis.explodeWhen; a Filter there put 12 kernel calls per
+    // row into the pushed predicate. Each query unions two pair sets, so
+    // the kernel sits once in each branch's projection and nowhere else
+    for (name <- Seq("t59_bleu", "t60_chrf")) {
+      val lp = SparkEntry.queries(name)(spark, dir)
+        .queryExecution.optimizedPlan
+      val perNode = lp.collect { case n =>
+        n -> nodeExprs(n, _.prettyName == "gram_overlap_counts")
+      }.filter(_._2 > 0)
+      assert(perNode.map(_._2) == Seq(1, 1) && perNode.forall(
+        _._1.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Project]),
+        s"$name: gram_overlap_counts per node ${perNode.map(p =>
+          p._1.nodeName -> p._2)}:\n$lp")
+    }
+  }
+
+  test("Generate barrier: c37's optimized plan stays within 2x of its " +
+      "192 expression nodes") {
+    // 76,593 nodes before the qualityGate barrier: seven pushed Filters,
+    // each carrying the substituted extract/redact chain
+    val lp = SparkEntry.queries("c37_config_web_pipeline")(spark, dir)
+      .queryExecution.optimizedPlan
+    val total = exprNodes(lp)
+    assert(total <= 384, s"c37 optimized plan carries $total expression nodes")
+  }
+
+  test("Generate barrier: curate's qualityGate drops rows through one " +
+      "Generate and pushes no Filter over the redacted text") {
+    import org.apache.spark.sql.functions._
+    val pages = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), concat(lit("<html><body><p>"), col("text"),
+        lit(" mail x@example.com</p></body></html>")).as("html"),
+        col("lang"))
+    val cfg = graft.config.ConfigCodec.pipelineFromYaml(
+      """pipeline:
+        |  name: web-pipeline
+        |  stages:
+        |    - stage: htmlExtract
+        |    - stage: piiRedact
+        |    - stage: qualityGate
+        |      options:
+        |        lang: en
+        |        minQuality: "0.9"
+        |        maxDupBigramFrac: "0.05"
+        |""".stripMargin)
+    val gated = graft.pipeline.StagePipeline.stagesOf(cfg, pages).last
+    assert(gated._1 == "a3_qualityGate")
+    val lp = gated._2.queryExecution.optimizedPlan
+    val generates = lp.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }
+    assert(generates.size == 1, s"one gate Generate expected:\n$lp")
+    val filters = lp.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f }
+    filters.foreach { f =>
+      val redacts = f.condition.collect {
+        case e if e.prettyName == "regexp_replace" => e }.size
+      assert(redacts == 0,
+        s"a Filter carries $redacts substituted regexp_replace calls:\n$f")
+    }
+  }
 }

@@ -490,8 +490,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/src/tx.parquet")
     val q = StreamingRunningTotals.startToMemory(spark, stream, "user", "amount",
-      queryName = "totals", checkpointDir = s"$dir/cp",
-      trigger = Trigger.AvailableNow())
+      queryName = "totals", checkpointDir = s"$dir/cp")
     StreamHarness.drain("mgws", q)
     // update mode re-emits a key's totals each batch it appears in; the
     // LAST emission per key must equal the exact batch totals
@@ -653,12 +652,9 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(
       (102L, "completely different content about distributed query engines and exchanges"),
       (103L, "the quick brown fox jumps over the lazy dog again and again tonight!"))
-    b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema(corpus.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text"),
+      b2.toDF("doc_id", "text"))
     val q = StreamingNearDup.start(spark, stream, "doc_id", "text",
       s"$dir/index", s"$dir/docs", s"$dir/pairs", s"$dir/cp",
       threshold = 0.5)
@@ -697,12 +693,9 @@ class StreamingSpec extends SparkTestBase {
     // that pair only exists because batch 1's fingerprints persisted
     val b1 = Seq((101L, "PREFIX " + base))
     val b2 = Seq((102L, "PREFIX " + base + " SUFFIX"))
-    b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema(corpus.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text"),
+      b2.toDF("doc_id", "text"))
     val q = StreamingWinnow.start(spark, stream, "doc_id", "text",
       s"$dir/index", s"$dir/pairs", s"$dir/cp",
       k = 8, window = 4, minShared = 2)
@@ -766,13 +759,9 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(
       (21L, "the first unique document about engines and the data we keep", "en"),
       (22L, "the second unique document and the words it is made of", "en"))
-    b1.toDF("doc_id", "text", "lang").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text", "lang").coalesce(1)
-      .write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text", "lang"),
+      b2.toDF("doc_id", "text", "lang"))
     // quality/repetition thresholds opened wide: this test pins the
     // language gate, the decon drop and the dedup ORDER contract — the
     // quality formula itself is oracle-gated by t02/c01/e05
@@ -943,10 +932,9 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(
       (102L, "completely different content about distributed query engines and exchanges"),
       (103L, "the quick brown fox jumps over the lazy dog again and again tonight!"))
-    b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text"),
+      b2.toDF("doc_id", "text"))
     val q = StreamingNearDup.start(spark, stream, "doc_id", "text",
       s"$dir/index", s"$dir/docs", s"$dir/pairs", s"$dir/cp",
       threshold = 0.5)
@@ -1013,12 +1001,9 @@ class StreamingSpec extends SparkTestBase {
     // batch 2: a copy of batch 1's novel vector (cross-batch pair) and
     // a copy of corpus 11
     val b2 = Seq((1900L, vec(900)), (111L, vec(11)))
-    b1.toDF("vec_id", "embedding").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("vec_id", "embedding").coalesce(1)
-      .write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("vec_id", "embedding"),
+      b2.toDF("vec_id", "embedding"))
     val q = StreamingSemanticScreen.start(spark, stream,
       "vec_id", "embedding", s"$dir/index", s"$dir/vecs", s"$dir/pairs",
       s"$dir/cp", threshold = 0.999)
@@ -1063,12 +1048,9 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(
       (21L, "the first unique document about engines and the data we keep", "en"),
       (22L, "the second unique document about layouts and the state we fold", "en"))
-    b1.toDF("doc_id", "text", "lang").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text", "lang").coalesce(1)
-      .write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text", "lang"),
+      b2.toDF("doc_id", "text", "lang"))
     val q = StreamingCuration.start(spark, stream, evalDocs,
       "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp",
       minQuality = 0.0, maxDupBigramFrac = 1.0)
@@ -1118,12 +1100,8 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq((1L, "u2", 12.0, 7L, 102L, "U"), (2L, "stale", 99.0, 3L, 103L, "U"),
       (4L, "new", 40.0, 6L, 104L, "U"))
     val cols = Seq("k", "name", "bal", "ver", "eid", "op")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
     StreamingCdcMerge.seedState(seed, s"$dir/state")
-    val stream = spark.readStream
-      .schema("k BIGINT, name STRING, bal DOUBLE, ver BIGINT, eid BIGINT, op STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingCdcMerge.start(spark, stream, Seq("k"), "ver", "op",
       s"$dir/state", s"$dir/cp", tieBreak = Seq("eid"))
     StreamHarness.drain("scdc", q)
@@ -1167,12 +1145,8 @@ class StreamingSpec extends SparkTestBase {
     val cols = Seq("k", "name", "bal", "ver", "eid", "op")
     val b1 = Seq((1L, "u1", 11.0, 5L, 100L, "U"), (1L, "u0", 9.0, 4L, 99L, "U"))
     val b2 = Seq((2L, "new", 20.0, 6L, 101L, "U"))
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
     StreamingCdcMerge.seedState(seed, s"$dir/state")
-    val stream = spark.readStream
-      .schema("k BIGINT, name STRING, bal DOUBLE, ver BIGINT, eid BIGINT, op STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingCdcMerge.start(spark, stream, Seq("k"), "ver", "op",
       s"$dir/state", s"$dir/cp", tieBreak = Seq("eid"))
     StreamHarness.drain("scdc_replay", q)
@@ -1236,12 +1210,9 @@ class StreamingSpec extends SparkTestBase {
       StreamingCuration.seedFingerprints(
         Seq((0L, seedText)).toDF("doc_id", "text"), "text", s"$dir/fp",
         partitionedBase = true)
-      b1.toDF("doc_id", "text", "lang").coalesce(1).write.parquet(s"$dir/src")
-      b2.toDF("doc_id", "text", "lang").coalesce(1)
-        .write.mode("append").parquet(s"$dir/src")
-      val stream = spark.readStream
-        .schema("doc_id BIGINT, text STRING, lang STRING")
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+      val stream = StreamHarness.feed(dir,
+        b1.toDF("doc_id", "text", "lang"),
+        b2.toDF("doc_id", "text", "lang"))
       val q =
         if (viaConfig) StreamingCuration.startFromConfig(spark, stream,
           curationCfg(), Map("benchmark" -> evalDocs),
@@ -1269,14 +1240,11 @@ class StreamingSpec extends SparkTestBase {
     StreamingCuration.seedFingerprints(
       Seq((0L, "seed")).toDF("doc_id", "text"), "text", s"$dir/fp",
       partitionedBase = true)
-    Seq((1L, "a doc", "en")).toDF("doc_id", "text", "lang")
-      .write.parquet(s"$dir/src")
-    def stream() = spark.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      Seq((1L, "a doc", "en")).toDF("doc_id", "text", "lang"))
     val typod = PipelineConfig("p", List(StageDef("qualityGrate", Map.empty)))
     val e1 = intercept[graft.pipeline.StagePipeline.StageError] {
-      StreamingCuration.startFromConfig(spark, stream(), typod, Map.empty,
+      StreamingCuration.startFromConfig(spark, stream, typod, Map.empty,
         "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp")
     }
     assert(e1.getMessage.contains("unknown stage"))
@@ -1284,7 +1252,7 @@ class StreamingSpec extends SparkTestBase {
     // stage resolves fine, but the compiled output has no 'quality'
     val noQuality = PipelineConfig("p", List(StageDef("limit", Map("n" -> "5"))))
     val e2 = intercept[IllegalArgumentException] {
-      StreamingCuration.startFromConfig(spark, stream(), noQuality, Map.empty,
+      StreamingCuration.startFromConfig(spark, stream, noQuality, Map.empty,
         "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp")
     }
     assert(e2.getMessage.contains("quality"))
@@ -1309,12 +1277,9 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(
       (21L, "the first unique document about engines and the data we keep", "en"),
       (22L, "the second unique document about layouts and the state we fold", "en"))
-    b1.toDF("doc_id", "text", "lang").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text", "lang").coalesce(1)
-      .write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text", "lang"),
+      b2.toDF("doc_id", "text", "lang"))
     val q = StreamingCuration.startFromConfig(spark, stream,
       curationCfg(), Map("benchmark" -> evalDocs),
       "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp")
@@ -1397,10 +1362,9 @@ class StreamingSpec extends SparkTestBase {
       (101L, "the quick brown fox jumps over the lazy dog again and again tonight"))
     val b2 = Seq(
       (103L, "the quick brown fox jumps over the lazy dog again and again tonight!"))
-    b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text"),
+      b2.toDF("doc_id", "text"))
     val q = StreamingNearDup.start(spark, stream, "doc_id", "text",
       s"$dir/index", s"$dir/docs", s"$dir/pairs", s"$dir/cp", threshold = 0.5)
     StreamHarness.drain("legacy-layout", q)
@@ -1543,10 +1507,7 @@ class StreamingSpec extends SparkTestBase {
     // stream skews high: batch 1 mid values, batch 2 top-bucket heavy
     val b1 = (1 to 50).map(i => (i % 5) / 10.0 + 0.05)
     val b2 = (1 to 50).map(_ => 0.95)
-    b1.toDF("v").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("v").coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema("v DOUBLE")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF("v"), b2.toDF("v"))
     val q = StreamingDrift.start(spark, stream, ref, "v",
       s"$dir/counts", s"$dir/psi", s"$dir/cp")
     // the d09 rule: a timed-out stream must FAIL, not fall through to
@@ -1563,9 +1524,7 @@ class StreamingSpec extends SparkTestBase {
     // replay idempotence: re-merging batch id 1's delta replaces, never
     // adds — simulate by re-running the same stream over a fresh
     // checkpoint but the SAME countsDir (every batch id replays)
-    val q2 = StreamingDrift.start(spark,
-      spark.readStream.schema("v DOUBLE")
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/src"),
+    val q2 = StreamingDrift.start(spark, stream,
       ref, "v", s"$dir/counts", s"$dir/psi", s"$dir/cp2")
     StreamHarness.drain("drift replay", q2)
     val replayed = spark.read.parquet(s"$dir/psi")
@@ -1627,11 +1586,9 @@ class StreamingSpec extends SparkTestBase {
     val dir = tempDir("stream_hh")
     val b1 = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"))
     val b2 = Seq((3L, "alpha delta delta beta"))
-    b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text"), b2.toDF("doc_id", "text"))
     def run(cp: String): Unit = {
-      val stream = spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
       val q = StreamingHeavyHitters.start(spark, stream, "text",
         s"$dir/counts", s"$dir/top", s"$dir/$cp", k = 3)
       StreamHarness.drain("heavy-hitter", q)
@@ -2201,13 +2158,63 @@ class StreamingSpec extends SparkTestBase {
     LsmParquetState.compact(spark, s"$dir/s", layout)
     assert(LsmParquetState.snapshot(spark, s"$dir/s", layout)
       .as[(Long, String)].collect().toSet == Set((1L, "a")))
-    // withPendingOwners releases its claims when start fails
-    intercept[RuntimeException] {
-      LsmParquetState.withPendingOwners(Seq(s"$dir/s")) {
-        throw new RuntimeException("start failed")
-      }
+    // startOwning releases its claims when start fails: a batch frame
+    // makes writeStream throw after the claim is taken
+    intercept[org.apache.spark.sql.AnalysisException] {
+      LsmParquetState.startOwning(Seq((2L, "b")).toDF("id", "v"),
+        s"$dir/cp", Seq(s"$dir/s"))((_, _) => ())
     }
     LsmParquetState.compact(spark, s"$dir/s", layout)
+  }
+
+  test("startOwning runs every micro-batch under its claims, takes them " +
+      "all before the query starts, and releases them on failure") {
+    val dir = tempDir("lsm_start_owning")
+    val src = StreamHarness.feed(dir, Seq((1L, "a")).toDF("id", "v"),
+      Seq((2L, "b")).toDF("id", "v"))
+    val claimed = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
+    val q = LsmParquetState.startOwning(src, s"$dir/cp", Seq(s"$dir/s")) {
+      (_, _) => claimed.add(
+        scala.util.Try(LsmParquetState.guardNotStreaming(s"$dir/s")).isFailure)
+    }
+    StreamHarness.drain("start_owning", q)
+    assert(claimed.toArray.toSeq == Seq(true, true),
+      "every micro-batch must see its state dir claimed")
+    // the query has stopped: its claim lapses
+    LsmParquetState.guardNotStreaming(s"$dir/s")
+    // a dir another owner holds fails the claim before anything starts,
+    // and the claims taken before it are released
+    val other = LsmParquetState.registerPending(s"$dir/b")
+    intercept[IllegalStateException] {
+      LsmParquetState.startOwning(src, s"$dir/cp2",
+        Seq(s"$dir/s", s"$dir/b"))((_, _) => ())
+    }
+    assert(!new java.io.File(s"$dir/cp2").exists(), "no query may start")
+    LsmParquetState.guardNotStreaming(s"$dir/s")
+    other.cancel()
+  }
+
+  test("StreamHarness.feed streams each frame as one micro-batch, in " +
+      "order, and rejects frames whose schemas differ") {
+    val dir = tempDir("feed")
+    val frames = Seq(Seq(11, 12, 13), Seq(21, 22, 23, 24, 25), Seq(31, 32))
+    val src = StreamHarness.feed(dir, frames.map(_.toDF("v")): _*)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]
+    val q = LsmParquetState.startOwning(src, s"$dir/cp", Nil) {
+      (batch, _) => seen.add(batch.as[Int].collect().toSeq.sorted)
+    }
+    StreamHarness.drain("feed", q)
+    assert(seen.toArray.toSeq == frames)
+    assert(q.recentProgress.map(_.numInputRows).toSeq == Seq(3L, 5L, 2L))
+    // a renamed or retyped column is rejected before anything is written
+    val bad = tempDir("feed_bad")
+    intercept[IllegalArgumentException] {
+      StreamHarness.feed(bad, Seq(1).toDF("v"), Seq(2).toDF("w"))
+    }
+    intercept[IllegalArgumentException] {
+      StreamHarness.feed(bad, Seq(1).toDF("v"), Seq(2L).toDF("v"))
+    }
+    assert(!new java.io.File(s"$bad/stream").exists())
   }
 
   test("streaming KS drift: additive histogram state reproduces the " +
@@ -2216,11 +2223,9 @@ class StreamingSpec extends SparkTestBase {
     val dir = tempDir("stream_ks")
     val ref = (1 to 60).map(i => (i % 10).toLong).toDF("v")
     val streamed = (1 to 40).map(i => (i % 10 + 3).toLong).toDF("v")
-    streamed.filter($"v" % 2 === 0).coalesce(1).write.parquet(s"$dir/in/b1")
-    streamed.filter($"v" % 2 === 1).coalesce(1).write.mode("append")
-      .parquet(s"$dir/in/b2")
-    val stream = spark.readStream.schema(streamed.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in/*")
+    val stream = StreamHarness.feed(dir,
+      streamed.filter($"v" % 2 === 0),
+      streamed.filter($"v" % 2 === 1))
     val q = StreamingKsDrift.start(spark, stream, "v",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("stream_ks", q)
@@ -2252,11 +2257,9 @@ class StreamingSpec extends SparkTestBase {
       (2L, 80L, 10.0), (3L, 10L, 0.5))
       .toDF("user_id", "ts", "value")
     // batch 0: the LATER events; batch 1: the earlier ones
-    ev.filter($"ts" >= 100L).coalesce(1).write.parquet(s"$dir/in/b1")
-    ev.filter($"ts" < 100L).coalesce(1).write.mode("append")
-      .parquet(s"$dir/in/b2")
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in/*")
+    val stream = StreamHarness.feed(dir,
+      ev.filter($"ts" >= 100L),
+      ev.filter($"ts" < 100L))
     val q = StreamingRfm.start(spark, stream, "user_id", "ts", "value",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("stream_rfm", q)
@@ -2295,11 +2298,9 @@ class StreamingSpec extends SparkTestBase {
       .toDF("doc_id", "text", "lang")
     val bench = Seq((100L, mk("alpha"))).toDF("doc_id", "text")
     // two micro-batches
-    docs.filter($"doc_id" <= 2).coalesce(1).write.parquet(s"$dir/in/b1")
-    docs.filter($"doc_id" > 2).coalesce(1).write.mode("append")
-      .parquet(s"$dir/in/b2")
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in/*")
+    val stream = StreamHarness.feed(dir,
+      docs.filter($"doc_id" <= 2),
+      docs.filter($"doc_id" > 2))
     val q = StreamingFuzzyDecontaminate.start(spark, stream, bench,
       "doc_id", "text", s"$dir/kept", s"$dir/cp", threshold = 0.6)
     StreamHarness.drain("stream_fuzzy", q)
@@ -2985,10 +2986,7 @@ class StreamingSpec extends SparkTestBase {
     val b1 = Seq(("spam", "buy now buy"), ("ham", "hello there"))
     val b2 = Seq(("spam", "buy cheap"), ("ham", "hello friend"))
     val cols = Seq("label", "text")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema("label STRING, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingNbTrain.start(spark, stream, "text", "label",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("snb", q)
@@ -3018,10 +3016,7 @@ class StreamingSpec extends SparkTestBase {
     val b1 = Seq(("spam", "buy now"), ("ham", "hello"))
     val b2 = Seq(("spam", "buy"))
     val cols = Seq("label", "text")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema("label STRING, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingNbTrain.start(spark, stream, "text", "label",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("snb_replay", q)
@@ -3048,10 +3043,7 @@ class StreamingSpec extends SparkTestBase {
     val b1 = Seq(("a", "a"), ("a", "b"), ("b", "b"))
     val b2 = Seq(("a", "a"), ("b", "c"), ("c", "c"))
     val cols = Seq("truth", "pred")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema("truth STRING, pred STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingClassifierEval.start(spark, stream, "truth", "pred",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("sceval", q)
@@ -3088,10 +3080,7 @@ class StreamingSpec extends SparkTestBase {
     val b1 = Seq((1L, 1, "ppp aa bb"), (2L, 0, "nnn aa cc"))
     val b2 = Seq((3L, 1, "ppp cc"), (4L, 0, "nnn bb"))
     val cols = Seq("doc_id", "y", "text")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema("doc_id BIGINT, y INT, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingLrTrain.start(spark, stream, "doc_id", "text", col("y"),
       dim = 32, s"$dir/state", s"$dir/cp")
     StreamHarness.drain("slr", q)
@@ -3123,10 +3112,7 @@ class StreamingSpec extends SparkTestBase {
     val b1 = Seq((1L, 1, "ppp aa"), (2L, 0, "nnn bb"))
     val b2 = Seq((3L, 1, "ppp cc"))
     val cols = Seq("doc_id", "y", "text")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema("doc_id BIGINT, y INT, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingLrTrain.start(spark, stream, "doc_id", "text", col("y"),
       dim = 32, s"$dir/state", s"$dir/cp")
     StreamHarness.drain("slr_replay", q)
@@ -3154,11 +3140,7 @@ class StreamingSpec extends SparkTestBase {
     val b1 = Seq((1L, 10L, 1), (1L, 99L, 2), (2L, 98L, 1))
     val b2 = Seq((3L, 97L, 1), (3L, 30L, 2))
     val cols = Seq("query_id", "doc_id", "rank")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema("query_id BIGINT, doc_id BIGINT, rank INT")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("sre", q)
@@ -3186,11 +3168,7 @@ class StreamingSpec extends SparkTestBase {
     val b1 = Seq((1L, 10L, 1))
     val b2 = Seq((2L, 20L, 1))
     val cols = Seq("query_id", "doc_id", "rank")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema("query_id BIGINT, doc_id BIGINT, rank INT")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("sre_replay", q)
@@ -3213,10 +3191,7 @@ class StreamingSpec extends SparkTestBase {
     val b1 = Seq(("x", "b a a c"), ("y", "a q"))
     val b2 = Seq(("x", "a zz"), ("x", "a b"))
     val cols = Seq("label", "text")
-    b1.toDF(cols: _*).coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream.schema("label STRING, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
     val q = StreamingDpNbRelease.start(spark, stream, "text", "label",
       maxTokensPerDoc = 2, s"$dir/state", s"$dir/cp")
     StreamHarness.drain("sdp", q)
@@ -3277,12 +3252,9 @@ class StreamingSpec extends SparkTestBase {
     StreamingCuration.seedFingerprints(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", s"$dir/fp",
       partitionedBase = true)
-    b1.toDF("doc_id", "text", "lang").coalesce(1).write.parquet(s"$dir/src")
-    b2.toDF("doc_id", "text", "lang").coalesce(1)
-      .write.mode("append").parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      b1.toDF("doc_id", "text", "lang"),
+      b2.toDF("doc_id", "text", "lang"))
     val q = StreamingCuration.startFromConfig(spark, stream, cfg,
       Map("labeled" -> train), "doc_id", "text", "lang",
       s"$dir/fp", s"$dir/kept", s"$dir/cp")
@@ -3435,11 +3407,8 @@ class StreamingSpec extends SparkTestBase {
     val qrels = Seq((1L, 10L, 1), (9L, 90L, 1))
       .toDF("query_id", "doc_id", "grade")
     val runs = Seq((1L, 10L, 1))
-    runs.toDF("query_id", "doc_id", "rank").coalesce(1)
-      .write.parquet(s"$dir/src")
-    val stream = spark.readStream
-      .schema("query_id BIGINT, doc_id BIGINT, rank INT")
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/src")
+    val stream = StreamHarness.feed(dir,
+      runs.toDF("query_id", "doc_id", "rank"))
     val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("srz", q)
