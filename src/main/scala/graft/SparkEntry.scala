@@ -916,7 +916,7 @@ object SparkEntry {
       val src = StreamHarness.feed(tmp,
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1))
-      val q = StreamingHeavyHitters.start(s, src, "text",
+      val q = StreamingHeavyHitters.start(src, "text",
         s"$tmp/counts", s"$tmp/top", s"$tmp/cp")
       StreamHarness.drain("e08", q)
       s.read.parquet(s"$tmp/top").select("rank", "token", "n")
@@ -968,7 +968,7 @@ object SparkEntry {
           .unionByName(
             emb.filter(col("vec_id") >= 100 && col("vec_id") % 40 === 20)
               .select((col("vec_id") + 2000000).as("vec_id"), col("embedding"))))
-      val q = StreamingSemanticScreen.start(s, src, "vec_id", "embedding",
+      val q = StreamingSemanticScreen.start(src, "vec_id", "embedding",
         s"$tmp/index", s"$tmp/vecs", s"$tmp/pairs", s"$tmp/cp",
         threshold = 0.999)
       StreamHarness.drain("e10", q)
@@ -989,7 +989,7 @@ object SparkEntry {
       val src = StreamHarness.feed(tmp,
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2))
-      val q = graft.streaming.StreamingVocabNovelty.start(s, src, "text",
+      val q = graft.streaming.StreamingVocabNovelty.start(src, "text",
         s"$tmp/tokens", s"$tmp/report", s"$tmp/cp")
       StreamHarness.drain("e13", q)
       graft.streaming.StreamingVocabNovelty.report(s, s"$tmp/report")
@@ -1011,7 +1011,7 @@ object SparkEntry {
       val src = StreamHarness.feed(tmp,
         li.filter(col("l_orderkey") % 2 === 0),
         li.filter(col("l_orderkey") % 2 === 1))
-      val q = graft.streaming.StreamingDqMonitor.start(s, src, "lineitem",
+      val q = graft.streaming.StreamingDqMonitor.start(src, "lineitem",
         Map("part" -> t(s, dir, "part")),
         Seq(
           NotNull("qty_nn", "lineitem", "l_quantity"),
@@ -1040,7 +1040,7 @@ object SparkEntry {
       }
       val src = StreamHarness.feed(tmp,
         ev.filter(col("ts") < mid), ev.filter(col("ts") >= mid))
-      val q = graft.streaming.StreamingFunnel.start(s, src, "user_id",
+      val q = graft.streaming.StreamingFunnel.start(src, "user_id",
         "event_type", "ts", Seq("view", "click", "purchase"),
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e14", q)
@@ -1059,7 +1059,7 @@ object SparkEntry {
       val src = StreamHarness.feed(tmp,
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1))
-      val q = graft.streaming.StreamingSubstringIndex.start(s, src,
+      val q = graft.streaming.StreamingSubstringIndex.start(src,
         "doc_id", "text", s"$tmp/index", s"$tmp/docs", s"$tmp/cp")
       StreamHarness.drain("e15", q)
       val p1 = docs.filter(col("doc_id") === 1)
@@ -1081,7 +1081,7 @@ object SparkEntry {
       val src = StreamHarness.feed(tmp,
         parts.filter(col("p_partkey") < mid),
         parts.filter(col("p_partkey") >= mid))
-      val q = StreamingEntityResolution.start(s, src, "p_partkey", "p_name",
+      val q = StreamingEntityResolution.start(src, "p_partkey", "p_name",
         s"$tmp/names", s"$tmp/map", s"$tmp/cp", maxDist = 1)
       StreamHarness.drain("e11", q)
       parts
@@ -1454,7 +1454,7 @@ StreamHarness.drain("d09", q)
       val src = StreamHarness.feed(tmp,
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2))
-      val q = StreamingCuration.start(s, src, evalDocs, "doc_id", "text",
+      val q = StreamingCuration.start(src, evalDocs, "doc_id", "text",
         "lang", s"$tmp/fp", s"$tmp/kept", s"$tmp/cp")
 StreamHarness.drain("e05", q)
       s.read.parquet(s"$tmp/kept").select("doc_id", "lang", "quality")
@@ -2898,7 +2898,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
           .select("lang", "text")): _*)
-      val q = StreamingDpNbRelease.start(s, src, "text", "lang",
+      val q = StreamingDpNbRelease.start(src, "text", "lang",
         maxTokensPerDoc = 30, s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e42", q)
       StreamingDpNbRelease.currentRelease(s, s"$tmp/state", "lang",
@@ -2917,7 +2917,7 @@ StreamHarness.drain("e05", q)
         encode(col("text"), "UTF-8").as("content"))
       val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         media.filter(pmod(col("media_id"), lit(3)) === r)): _*)
-      val q = StreamingSceneSegments.start(s, src, "media_id", "content",
+      val q = StreamingSceneSegments.start(src, "media_id", "content",
         s"$tmp/scenes", s"$tmp/cp", windowBytes = 16, cutThreshold = 120)
       StreamHarness.drain("e43", q)
       StreamingSceneSegments.scenes(s, s"$tmp/scenes")
@@ -3732,7 +3732,7 @@ StreamHarness.drain("e05", q)
         col("source"))
       val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
         pages.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
-      val q = StreamingSiteTemplate.start(s, src, "doc_id", "html",
+      val q = StreamingSiteTemplate.start(src, "doc_id", "html",
         "source", s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e47", q)
       StreamingSiteTemplate.currentExtract(s, s"$tmp/state", "doc_id",
@@ -3754,7 +3754,7 @@ StreamHarness.drain("e05", q)
           col("doc_id").cast("string")).as("base_uri"))
       val src = StreamHarness.feed(tmp, (0 until 2).map(r =>
         pages.filter(pmod(col("doc_id"), lit(2)) === r)): _*)
-      val q = StreamingWebGraph.start(s, src, "doc_id", "html",
+      val q = StreamingWebGraph.start(src, "doc_id", "html",
         "base_uri", s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e49", q)
       StreamingWebGraph.currentRank(s, s"$tmp/state", "doc_id",
@@ -4151,7 +4151,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         scored.filter(col("doc_id") % 2 === 0).select("quality", "y"),
         scored.filter(col("doc_id") % 2 === 1).select("quality", "y"))
-      val q = graft.streaming.StreamingPrDrift.start(s, src, "quality", "y",
+      val q = graft.streaming.StreamingPrDrift.start(src, "quality", "y",
         s"$tmp/state", s"$tmp/report", s"$tmp/cp")
       StreamHarness.drain("e25", q)
       graft.streaming.StreamingPrDrift.calibrationReport(s, s"$tmp/report")
@@ -4173,7 +4173,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         ev.filter(col("ts_us") % 2 === 0),
         ev.filter(col("ts_us") % 2 === 1))
-      val q = graft.streaming.StreamingSurvival.start(s, src, "user_id",
+      val q = graft.streaming.StreamingSurvival.start(src, "user_id",
         "ts_us", s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e26", q)
       graft.streaming.StreamingSurvival.report(s, s"$tmp/state",
@@ -4231,7 +4231,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1))
-      val q = graft.streaming.StreamingDistinctiveTerms.start(s, src,
+      val q = graft.streaming.StreamingDistinctiveTerms.start(src,
         "text", s"$tmp/state", s"$tmp/report", s"$tmp/cp", minCount = 5L)
       StreamHarness.drain("e29", q)
       val rep = graft.streaming.StreamingDistinctiveTerms
@@ -4262,7 +4262,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1))
-      val q = graft.streaming.StreamingBm25.start(s, src, "doc_id", "text",
+      val q = graft.streaming.StreamingBm25.start(src, "doc_id", "text",
         queries, "query_id", "qtext", s"$tmp/state", s"$tmp/report",
         s"$tmp/cp", k = 5, maxDfFrac = 0.5)
       StreamHarness.drain("e27", q)
@@ -4328,7 +4328,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         streamed.filter(col("doc_id") % 2 === 0),
         streamed.filter(col("doc_id") % 2 === 1))
-      val q = graft.streaming.StreamingKsDrift.start(s, src, "n_chars",
+      val q = graft.streaming.StreamingKsDrift.start(src, "n_chars",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e18", q)
       graft.streaming.StreamingKsDrift.report(s, s"$tmp/state", ref, "n_chars")
@@ -4344,7 +4344,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         ev.filter(col("event_id") % 2 === 0),
         ev.filter(col("event_id") % 2 === 1))
-      val q = graft.streaming.StreamingRfm.start(s, src, "user_id", "ts",
+      val q = graft.streaming.StreamingRfm.start(src, "user_id", "ts",
         "value", s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e17", q)
       graft.streaming.StreamingRfm.report(s, s"$tmp/state", "user_id")
@@ -4368,7 +4368,7 @@ StreamHarness.drain("e05", q)
       val mangled = docs.select((col("doc_id") + 1000000).as("doc_id"),
         regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
       val src = StreamHarness.feed(tmp, docs, mangled)
-      val q = StreamingWinnow.start(s, src, "doc_id", "text",
+      val q = StreamingWinnow.start(src, "doc_id", "text",
         s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         k = 16, window = 16, minShared = 14)
       StreamHarness.drain("e20", q)
@@ -4386,7 +4386,7 @@ StreamHarness.drain("e05", q)
         docs.filter(col("doc_id") <= half),
         docs.filter(col("doc_id") > half))
       val q = graft.streaming.StreamingFuzzyDecontaminate.start(
-        s, src, bench, "doc_id", "text", s"$tmp/kept", s"$tmp/cp",
+        src, bench, "doc_id", "text", s"$tmp/kept", s"$tmp/cp",
         threshold = 0.7)
       StreamHarness.drain("e16", q)
       graft.streaming.StreamingFuzzyDecontaminate.kept(s, s"$tmp/kept")
@@ -4840,7 +4840,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         changes.filter(pmod(col("event_id"), lit(2)) === 0),
         changes.filter(pmod(col("event_id"), lit(2)) === 1))
-      val q = StreamingCdcMerge.start(s, src, Seq("c_custkey"), "ver", "op",
+      val q = StreamingCdcMerge.start(src, Seq("c_custkey"), "ver", "op",
         s"$tmp/state", s"$tmp/cp", tieBreak = Seq("event_id"))
       StreamHarness.drain("e36", q)
       StreamingCdcMerge.currentSnapshot(s, s"$tmp/state", Seq("c_custkey"),
@@ -4860,7 +4860,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
           .select("lang", "text")): _*)
-      val q = StreamingNbTrain.start(s, src, "text", "lang",
+      val q = StreamingNbTrain.start(src, "text", "lang",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e38", q)
       StreamingNbTrain.currentModel(s, s"$tmp/state", "lang")
@@ -4885,7 +4885,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         pairs.filter(pmod(col("doc_id"), lit(3)) === r)
           .select(col("lang"), col("predicted"))): _*)
-      val q = StreamingClassifierEval.start(s, src, "lang", "predicted",
+      val q = StreamingClassifierEval.start(src, "lang", "predicted",
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e39", q)
       StreamingClassifierEval.currentEval(s, s"$tmp/state")
@@ -4904,7 +4904,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         docs.filter(pmod(col("doc_id"), lit(3)) === r)
           .select("doc_id", "lang", "text")): _*)
-      val q = StreamingLrTrain.start(s, src, "doc_id", "text",
+      val q = StreamingLrTrain.start(src, "doc_id", "text",
         (col("lang") === "en").cast("int"), dim = 64,
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e40", q)
@@ -5111,7 +5111,7 @@ StreamHarness.drain("e05", q)
           when(col("doc_id") === col("query_id"), 2).otherwise(1).as("grade"))
       val src = StreamHarness.feed(tmp, (0 until 3).map(r =>
         runs.filter(pmod(col("query_id"), lit(3)) === r)): _*)
-      val q = StreamingRetrievalEval.start(s, src, qrels, k = 10,
+      val q = StreamingRetrievalEval.start(src, qrels, k = 10,
         s"$tmp/state", s"$tmp/cp")
       StreamHarness.drain("e41", q)
       StreamingRetrievalEval.currentEval(s, s"$tmp/state", qrels)
@@ -5272,7 +5272,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         base.unionByName(variants.filter(col("doc_id") % 10 === 3)),
         variants.filter(col("doc_id") % 10 === 8))
-      val q = graft.streaming.StreamingPHashDedup.start(s, src, "doc_id",
+      val q = graft.streaming.StreamingPHashDedup.start(src, "doc_id",
         "pixels", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         maxHamming = 12, maxBucketSize = 10000)
       StreamHarness.drain("e33", q)
@@ -5295,7 +5295,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         base.unionByName(variants.filter(col("media_id") % 50 === 0)),
         variants.filter(col("media_id") % 50 === 25))
-      val q = graft.streaming.StreamingAudioFingerprint.start(s, src,
+      val q = graft.streaming.StreamingAudioFingerprint.start(src,
         "media_id", "content", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         windowBytes = 16, fanout = 3, zone = 16, minAligned = 3,
         maxHashGroup = 10000)
@@ -5322,7 +5322,7 @@ StreamHarness.drain("e05", q)
       val src = StreamHarness.feed(tmp,
         base.unionByName(clips.filter(col("media_id") % 50 === 0)),
         clips.filter(col("media_id") % 50 === 25))
-      val q = graft.streaming.StreamingClipAlign.start(s, src,
+      val q = graft.streaming.StreamingClipAlign.start(src,
         "media_id", "content", s"$tmp/index", s"$tmp/pairs", s"$tmp/cp",
         frameBytes = 16, minAligned = 3, maxDigestGroup = 10000)
       StreamHarness.drain("e37", q)

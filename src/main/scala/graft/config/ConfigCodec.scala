@@ -9,7 +9,9 @@ import graft.model._
  * mirror the reference's where the concept survives
  * (TableMigrationDefinition.java:17-139); unrecognized keys (e.g. the
  * reference's thread/timeout knobs, which have no Spark counterpart) are
- * reported on stderr rather than silently ignored.
+ * reported on stderr rather than silently ignored. [[Yaml]] reads the text
+ * with SnakeYAML into maps, lists and source-string scalars; every type
+ * (numbers, booleans, enums) and range is checked here.
  */
 object ConfigCodec {
 
@@ -51,9 +53,7 @@ object ConfigCodec {
     TableRef(
       format = str(m, "format", "parquet"),
       path = str(m, "path", ""),
-      options = m.get("options").map(asMap(_, "options").map {
-        case (k, v) => k -> v.toString
-      }).getOrElse(Map.empty))
+      options = strMap(m, "options"))
   }
 
   private val knownTableKeys = Set(
@@ -101,9 +101,10 @@ object ConfigCodec {
       },
       simulateOnly = bool(m, "simulateOnly", default = true),
       continueOnRowError = m.get("continueOnRowError").map(v => parseBool(v, "continueOnRowError")),
-      pageSize = m.get("pageSize").map(v => parseLong(v, "pageSize").toInt),
-      pauseMillisBetweenPages =
-        m.get("pauseMillisBetweenPages").map(v => parseLong(v, "pauseMillisBetweenPages")),
+      // checked here, not once a stream starts (or never, in batch mode)
+      pageSize = m.get("pageSize").map(v => parseLongIn(v, "pageSize", 1, Int.MaxValue).toInt),
+      pauseMillisBetweenPages = m.get("pauseMillisBetweenPages")
+        .map(v => parseLongIn(v, "pauseMillisBetweenPages", 0, Long.MaxValue)),
       patchNullsFromTarget = bool(m, "patchNullsFromTarget", default = false),
       orderingColumns = strList(m, "orderingColumns"))
   }
@@ -120,9 +121,7 @@ object ConfigCodec {
         // reference plugin contract: a fully-qualified class name, loaded
         // reflectively (TableDataFilterDefinition.java:53-71); options map
         // passes through to the stage
-        PluginFilter(cls, m.get("options").map(asMap(_, "options").map {
-          case (k, vv) => k -> vv.toString
-        }).getOrElse(Map.empty))
+        PluginFilter(cls, strMap(m, "options"))
       case other => throw ConfigError(
         s"unknown filter type '$other' (built-ins: FieldValueFilter, " +
           "IfNotExistFilter; or a fully-qualified graft.plugin.GraftStage class)")
@@ -167,9 +166,7 @@ object ConfigCodec {
       }
       StageDef(
         stage = required(sm, "stage", "pipeline stage"),
-        options = sm.get("options").map(asMap(_, "options").map {
-          case (k, v) => k -> v.toString
-        }).getOrElse(Map.empty),
+        options = strMap(sm, "options"),
         materialize = bool(sm, "materialize", default = false))
     }
     if (stages.isEmpty) throw ConfigError(
@@ -193,6 +190,8 @@ object ConfigCodec {
       throw ConfigError(s"$what missing required key '$key'"))
   private def str(m: Map[String, Any], key: String, default: String): String =
     m.get(key).map(_.toString).getOrElse(default)
+  private def strMap(m: Map[String, Any], key: String): Map[String, String] =
+    m.get(key).map(asMap(_, key).map { case (k, v) => k -> v.toString }).getOrElse(Map.empty)
   private def strList(m: Map[String, Any], key: String): Seq[String] =
     m.get(key).map(asList(_, key).map(_.toString)).getOrElse(Nil)
   private def bool(m: Map[String, Any], key: String, default: Boolean): Boolean =
@@ -206,4 +205,7 @@ object ConfigCodec {
     try v.toString.toLong
     catch { case _: NumberFormatException =>
       throw ConfigError(s"expected number for $what, got '$v'") }
+  private def parseLongIn(v: Any, what: String, min: Long, max: Long): Long =
+    Some(parseLong(v, what)).filter(n => n >= min && n <= max).getOrElse(
+      throw ConfigError(s"$what must be in [$min, $max], got '$v'"))
 }

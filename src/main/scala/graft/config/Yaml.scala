@@ -1,200 +1,44 @@
 package graft.config
 
+import org.yaml.snakeyaml.{DumperOptions, LoaderOptions, Yaml => SnakeYaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.error.YAMLException
+import org.yaml.snakeyaml.nodes.Tag
+import org.yaml.snakeyaml.representer.Representer
+import org.yaml.snakeyaml.resolver.Resolver
+import scala.jdk.CollectionConverters._
+
 /**
- * Minimal YAML-subset parser — enough for migration configs shaped like the
- * reference's `config/migration-config.example.yaml` (nested maps, block
- * lists of maps, inline `[a, b]` lists, quoted/plain scalars, `#` comments),
- * plus anchors (`&name`), aliases (`*name`) and merge keys (`<<: *name`),
- * which the reference gets for free from Jackson's YAML support
- * (reference: config/Config.java:15-19) and real-world migration configs
- * lean on to share table-definition boilerplate. No multi-doc/flow-maps;
- * zero dependencies by design (the build is offline — build.sbt pins the
- * dependency set).
- *
+ * Config YAML through the SnakeYAML that ships in Spark's jars (the reference
+ * reads the same files with Jackson's YAML support — config/Config.java:15-19).
+ * Every plain scalar stays its source string (`k: 1` is "1", `empty:` is "",
+ * `yes` and `~` are unchanged); [[ConfigCodec]] does the typing.
+ * `SafeConstructor` builds no classes, and the default `LoaderOptions` cap
+ * aliases to collections (50), nesting depth (50) and document size (3 MB).
  * Result tree: `Map[String, Any]` | `List[Any]` | `String`.
  */
 object Yaml {
 
   final case class YamlError(msg: String) extends RuntimeException(msg)
 
-  private final case class Line(indent: Int, text: String)
-
-  /** Document-scoped anchor table: YAML aliases refer to anchors defined
-    * earlier in the same document (parse-time resolution, like Jackson).
-    */
-  private type Anchors = scala.collection.mutable.Map[String, Any]
-
   def parse(yaml: String): Any = {
-    val lines = yaml.linesIterator.zipWithIndex
-      .map { case (raw, i) => (stripComment(raw), i) }
-      .filter { case (l, _) => l.trim.nonEmpty }
-      .map { case (l, _) => Line(l.takeWhile(_ == ' ').length, l.trim) }
-      .toList
-    val anchors: Anchors = scala.collection.mutable.Map.empty
-    val (value, rest) =
-      parseBlock(lines, if (lines.isEmpty) 0 else lines.head.indent, anchors)
-    if (rest.nonEmpty) throw YamlError(s"trailing content at '${rest.head.text}'")
-    value
+    val (opts, dump) = (new LoaderOptions, new DumperOptions)
+    val loader = new SnakeYaml(new SafeConstructor(opts), new Representer(dump), dump, opts,
+      new Resolver { // `<<` is the only implicitly resolved tag
+        override protected def addImplicitResolvers(): Unit =
+          addImplicitResolver(Tag.MERGE, Resolver.MERGE, "<")
+      })
+    try tree(loader.load[AnyRef](yaml), Nil)
+    catch { case e: YAMLException => throw YamlError(e.getMessage) }
   }
 
-  /** Strip a trailing comment, respecting quoted strings. */
-  private def stripComment(l: String): String = {
-    var inStr: Char = 0
-    var i = 0
-    while (i < l.length) {
-      val c = l.charAt(i)
-      if (inStr != 0) { if (c == inStr) inStr = 0 }
-      else if (c == '\'' || c == '"') inStr = c
-      else if (c == '#' && (i == 0 || l.charAt(i - 1).isWhitespace)) return l.substring(0, i)
-      i += 1
-    }
-    l
+  /** `open` holds the enclosing collections: an alias to one is a cycle. */
+  private def tree(v: Any, open: List[AnyRef]): Any = v match {
+    case null => ""
+    case c: AnyRef if open.exists(_ eq c) => throw YamlError("recursive alias")
+    case m: java.util.Map[_, _] =>
+      m.asScala.map { case (k, x) => tree(k, open).toString -> tree(x, m :: open) }.toMap
+    case l: java.util.List[_] => l.asScala.map(tree(_, l :: open)).toList
+    case s => s.toString
   }
-
-  private def parseBlock(lines: List[Line], indent: Int, anchors: Anchors): (Any, List[Line]) =
-    lines match {
-      case Nil => ("", Nil)
-      case first :: _ if first.text.startsWith("- ") || first.text == "-" =>
-        parseList(lines, indent, anchors)
-      case _ => parseMap(lines, indent, anchors)
-    }
-
-  /** `&name rest` → (Some(name), "rest"); quoted scalars are never anchors. */
-  private def splitAnchor(s: String): (Option[String], String) =
-    if (s.startsWith("&") && !isQuotedScalar(s)) {
-      val name = s.drop(1).takeWhile(c => !c.isWhitespace)
-      if (name.isEmpty) throw YamlError(s"empty anchor name at '$s'")
-      (Some(name), s.drop(1 + name.length).trim)
-    } else (None, s)
-
-  private def resolveAlias(ref: String, anchors: Anchors): Any = {
-    // the alias is ONE token; trailing content after it is malformed YAML
-    // and should say so, not report a garbled "undefined alias 'a extra'"
-    val name = ref.takeWhile(c => !c.isWhitespace)
-    if (name.length != ref.trim.length || name != ref)
-      throw YamlError(s"content after alias '*$name': '${ref.drop(name.length).trim}'")
-    anchors.getOrElse(name, throw YamlError(s"undefined alias '*$name'"))
-  }
-
-  private def parseList(lines0: List[Line], indent: Int, anchors: Anchors): (List[Any], List[Line]) = {
-    var lines = lines0
-    val out = List.newBuilder[Any]
-    while (lines.nonEmpty && lines.head.indent == indent &&
-        (lines.head.text.startsWith("- ") || lines.head.text == "-")) {
-      val head = lines.head
-      val (anchor, inline) = splitAnchor(head.text.stripPrefix("-").trim)
-      def keep(v: Any): Unit = {
-        anchor.foreach(a => anchors(a) = v)
-        out += v
-      }
-      lines = lines.tail
-      if (inline.isEmpty) {
-        // nested block item: its content must be MORE indented than the
-        // dash; a following line at the same indent is the next item
-        if (lines.nonEmpty && lines.head.indent > indent) {
-          val (block, rest) = lines.span(_.indent > indent)
-          val (v, leftover) = parseBlock(block, block.head.indent, anchors)
-          if (leftover.nonEmpty) throw YamlError("bad block under '-'")
-          keep(v)
-          lines = rest
-        } else keep("")
-      } else if (inline.startsWith("*") && !isQuotedScalar(inline)) {
-        keep(resolveAlias(inline.drop(1), anchors))
-      } else if (inline.contains(":") && !isQuotedScalar(inline)) {
-        // "- key: value" starts an inline map item; its continuation lines
-        // are keys aligned with the first key (dash prefix may have any
-        // number of spaces)
-        val itemIndent = head.indent + (head.text.length - inline.length)
-        val (cont, rest) = lines.span(_.indent >= itemIndent)
-        val (v, leftover) = parseMap(Line(itemIndent, inline) :: cont, itemIndent, anchors)
-        if (leftover.nonEmpty) throw YamlError(s"bad list item near '${inline}'")
-        keep(v)
-        lines = rest
-      } else {
-        keep(scalar(inline, anchors))
-      }
-    }
-    (out.result(), lines)
-  }
-
-  private def parseMap(lines0: List[Line], indent: Int, anchors: Anchors): (Map[String, Any], List[Line]) = {
-    var lines = lines0
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    // `<<:` merge sources — applied at map end with YAML merge semantics:
-    // the map's EXPLICIT keys always win, regardless of line order
-    val merges = List.newBuilder[Map[String, Any]]
-    def mergeSource(v: Any): Map[String, Any] = v match {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-      case other => throw YamlError(s"'<<' merge source is not a map: $other")
-    }
-    while (lines.nonEmpty && lines.head.indent == indent && !lines.head.text.startsWith("- ")) {
-      val Line(_, text) = lines.head
-      val ci = colonIndex(text)
-      if (ci < 0) throw YamlError(s"expected 'key: value' at '$text'")
-      val key = unquote(text.substring(0, ci).trim)
-      val (anchor, value) = splitAnchor(text.substring(ci + 1).trim)
-      def keep(v: Any): Unit = {
-        anchor.foreach(a => anchors(a) = v)
-        if (key == "<<") v match {
-          case vs: List[_] => vs.foreach(m => merges += mergeSource(m))
-          case m => merges += mergeSource(m)
-        } else out += key -> v
-      }
-      lines = lines.tail
-      if (value.nonEmpty) {
-        if (value.startsWith("*") && !isQuotedScalar(value))
-          keep(resolveAlias(value.drop(1), anchors))
-        else keep(scalar(value, anchors))
-      } else {
-        // block value: everything more-indented, plus the common YAML style
-        // of a list at the SAME indent as its key ("key:\n- item")
-        val (block, rest) =
-          if (lines.nonEmpty && lines.head.indent == indent &&
-              (lines.head.text.startsWith("- ") || lines.head.text == "-"))
-            lines.span(l => l.indent > indent ||
-              (l.indent == indent && (l.text.startsWith("- ") || l.text == "-")))
-          else lines.span(_.indent > indent)
-        if (block.isEmpty) keep("")
-        else {
-          val (v, leftover) = parseBlock(block, block.head.indent, anchors)
-          if (leftover.nonEmpty) throw YamlError(s"bad block under '$key'")
-          keep(v)
-        }
-        lines = rest
-      }
-    }
-    // YAML merge-key precedence: earlier sources in `<<: [*a, *b]` win
-    // over later ones; the map's own keys win over all of them
-    val merged = merges.result().foldLeft(Map.empty[String, Any])((acc, m) => m ++ acc)
-    (merged ++ out.toMap, lines)
-  }
-
-  private def colonIndex(text: String): Int = {
-    var inStr: Char = 0
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr != 0) { if (c == inStr) inStr = 0 }
-      else if (c == '\'' || c == '"') inStr = c
-      else if (c == ':' && (i + 1 >= text.length || text.charAt(i + 1) == ' ')) return i
-      i += 1
-    }
-    -1
-  }
-
-  private def isQuotedScalar(s: String): Boolean =
-    (s.startsWith("'") && s.endsWith("'")) || (s.startsWith("\"") && s.endsWith("\""))
-
-  private def scalar(v: String, anchors: Anchors): Any =
-    if (v.startsWith("[") && v.endsWith("]")) {
-      val inner = v.substring(1, v.length - 1).trim
-      if (inner.isEmpty) Nil
-      else inner.split(",").map(_.trim).map { s =>
-        if (s.startsWith("*") && !isQuotedScalar(s)) resolveAlias(s.drop(1), anchors)
-        else unquote(s)
-      }.toList
-    } else unquote(v)
-
-  private def unquote(s: String): String =
-    if (isQuotedScalar(s) && s.length >= 2) s.substring(1, s.length - 1) else s
 }

@@ -64,7 +64,7 @@ object StreamingAudioFingerprint {
   def pairs(spark: SparkSession, pairsDir: String): DataFrame =
     LandmarkAlign.pairs(spark, pairsDir, "t_offset")
 
-  def start(spark: SparkSession, source: DataFrame,
+  def start(source: DataFrame,
       idCol: String, payloadCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       windowBytes: Int = 16, fanout: Int = 3, zone: Int = 16,

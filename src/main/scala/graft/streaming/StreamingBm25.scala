@@ -103,7 +103,7 @@ object StreamingBm25 {
       .drop("batch")
   }
 
-  def start(spark: SparkSession, source: DataFrame, idCol: String,
+  def start(source: DataFrame, idCol: String,
       textCol: String, queries: DataFrame, queryIdCol: String,
       queryTextCol: String, stateDir: String, reportDir: String,
       checkpointDir: String, k: Int = 5,

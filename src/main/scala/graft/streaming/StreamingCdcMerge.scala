@@ -67,7 +67,7 @@ object StreamingCdcMerge {
     * the key columns, every non-key seed column, `versionCol`, `opCol`
     * and any `tieBreak` columns — the [[Cdc.applyCdc]] contract.
     */
-  def start(spark: SparkSession, source: DataFrame, keyCols: Seq[String],
+  def start(source: DataFrame, keyCols: Seq[String],
       versionCol: String, opCol: String, stateDir: String,
       checkpointDir: String, tieBreak: Seq[String] = Nil): StreamingQuery = {
     require(keyCols.nonEmpty, "need at least one key column")

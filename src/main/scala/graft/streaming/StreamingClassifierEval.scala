@@ -44,7 +44,7 @@ object StreamingClassifierEval {
   /** Start folding the labeled-pair stream into the confusion store.
     * `source` must carry `truthCol` and `predCol`.
     */
-  def start(spark: SparkSession, source: DataFrame, truthCol: String,
+  def start(source: DataFrame, truthCol: String,
       predCol: String, stateDir: String,
       checkpointDir: String): StreamingQuery = {
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {

@@ -51,7 +51,7 @@ object StreamingClipAlign {
   def pairs(spark: SparkSession, pairsDir: String): DataFrame =
     LandmarkAlign.pairs(spark, pairsDir, "f_offset")
 
-  def start(spark: SparkSession, source: DataFrame,
+  def start(source: DataFrame,
       idCol: String, payloadCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       frameBytes: Int = 16, minAligned: Int = 3,

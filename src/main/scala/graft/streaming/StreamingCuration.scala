@@ -114,7 +114,7 @@ object StreamingCuration {
     * `maxOffsetsPerTrigger`), the [[StreamingNearDup]] convention.
     * Survivors land in `keptDir` as (idCol, langCol, quality).
     */
-  def start(spark: SparkSession, source: DataFrame, evalDocs: DataFrame,
+  def start(source: DataFrame, evalDocs: DataFrame,
       idCol: String, textCol: String, langCol: String,
       fpDir: String, keptDir: String, checkpointDir: String,
       lang: String = "en", minQuality: Double = 0.9,

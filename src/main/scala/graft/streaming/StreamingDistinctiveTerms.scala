@@ -72,7 +72,7 @@ object StreamingDistinctiveTerms {
         .filter(col("__nt") > 0)))
   }
 
-  def start(spark: SparkSession, source: DataFrame, textCol: String,
+  def start(source: DataFrame, textCol: String,
       stateDir: String, reportDir: String, checkpointDir: String,
       minCount: Long = 5L): StreamingQuery =
     LsmParquetState.startOwning(source, checkpointDir,

@@ -45,7 +45,7 @@ object StreamingDpNbRelease {
   /** Start folding the document stream into the bounded-count store.
     * `source` must carry `textCol` and `labelCol`.
     */
-  def start(spark: SparkSession, source: DataFrame, textCol: String,
+  def start(source: DataFrame, textCol: String,
       labelCol: String, maxTokensPerDoc: Int, stateDir: String,
       checkpointDir: String): StreamingQuery = {
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {

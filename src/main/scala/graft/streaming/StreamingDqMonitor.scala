@@ -77,7 +77,7 @@ object StreamingDqMonitor {
         keysLayout(r.columns))
     }
 
-  def start(spark: SparkSession, source: DataFrame, tableName: String,
+  def start(source: DataFrame, tableName: String,
       refTables: Map[String, DataFrame], rules: Seq[DqRule],
       countsDir: String, checkpointDir: String): StreamingQuery = {
     require(rules.nonEmpty, "no rules to audit")

@@ -194,7 +194,7 @@ object StreamingEntityResolution {
       before: Long): Option[Long] =
     BatchMarker.readLatest(s, maxIdDirFor(namesDir), before)
 
-  def start(spark: SparkSession, source: DataFrame,
+  def start(source: DataFrame,
       idCol: String, strCol: String,
       namesDir: String, mapDir: String, checkpointDir: String,
       maxDist: Int = 1,

@@ -90,7 +90,7 @@ object StreamingFunnel {
       .unionByName(latest)
   }
 
-  def start(spark: SparkSession, source: DataFrame,
+  def start(source: DataFrame,
       userCol: String, typeCol: String, tsCol: String,
       stages: Seq[String], stateDir: String,
       checkpointDir: String): StreamingQuery = {

@@ -29,7 +29,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  */
 object StreamingFuzzyDecontaminate {
 
-  def start(spark: SparkSession, source: DataFrame, bench: DataFrame,
+  def start(source: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, keptDir: String, checkpointDir: String,
       threshold: Double = 0.8, shingleK: Int = 5, bands: Int = 16,
       rowsPerBand: Int = 4, maxBucketSize: Int = 1000): StreamingQuery = {

@@ -36,7 +36,7 @@ object StreamingHeavyHitters {
   /** Start the monitor over a streaming frame bearing `textCol`. Top-k
     * rows land in `outDir` (overwritten each batch: rank, token, n).
     */
-  def start(spark: SparkSession, source: DataFrame, textCol: String,
+  def start(source: DataFrame, textCol: String,
       countsDir: String, outDir: String, checkpointDir: String,
       k: Int = 20): StreamingQuery = {
     LsmParquetState.startOwning(source, checkpointDir, Seq(countsDir)) {

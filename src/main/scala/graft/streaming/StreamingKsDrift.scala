@@ -67,7 +67,7 @@ object StreamingKsDrift {
       resolve = Some(tagged => tagged.groupBy("__v")
         .agg(max_by(col("n"), col("__tail_batch")).as("n"))))
 
-  def start(spark: SparkSession, source: DataFrame, valueCol: String,
+  def start(source: DataFrame, valueCol: String,
       stateDir: String, checkpointDir: String): StreamingQuery =
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
       (batch, batchId) =>

@@ -52,7 +52,7 @@ object StreamingLrTrain {
   /** Start banking the document stream's hashed features. `source` must
     * carry `idCol`, `textCol` and the columns `yCol` reads.
     */
-  def start(spark: SparkSession, source: DataFrame, idCol: String,
+  def start(source: DataFrame, idCol: String,
       textCol: String, yCol: Column, dim: Int, stateDir: String,
       checkpointDir: String): StreamingQuery = {
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {

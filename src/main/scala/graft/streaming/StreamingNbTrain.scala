@@ -51,7 +51,7 @@ object StreamingNbTrain {
   /** Start folding the document stream into the count store. `source`
     * must carry `textCol` and `labelCol`.
     */
-  def start(spark: SparkSession, source: DataFrame, textCol: String,
+  def start(source: DataFrame, textCol: String,
       labelCol: String, stateDir: String,
       checkpointDir: String): StreamingQuery = {
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {

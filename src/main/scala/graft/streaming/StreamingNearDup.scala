@@ -233,7 +233,8 @@ object StreamingNearDup {
     * Ids must be unique across the corpus and the stream. Rate limiting
     * belongs on the caller's source (`maxFilesPerTrigger` /
     * `maxOffsetsPerTrigger` on the readStream) — this method takes the
-    * frame as-is.
+    * frame as-is. `spark` is unused; it stays because the perfbench
+    * harness's `neardup-stream` workload passes it.
     */
   def start(spark: SparkSession, source: DataFrame,
       idCol: String, textCol: String,

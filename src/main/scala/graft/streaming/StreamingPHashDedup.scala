@@ -82,7 +82,7 @@ object StreamingPHashDedup {
   def pairs(spark: SparkSession, pairsDir: String): DataFrame =
     spark.read.parquet(pairsDir).select("idA", "idB", "hamming")
 
-  def start(spark: SparkSession, source: DataFrame,
+  def start(source: DataFrame,
       idCol: String, pixelsCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       maxHamming: Int = 10, maxBucketSize: Int = 10000): StreamingQuery = {

@@ -78,7 +78,7 @@ object StreamingPrDrift {
       .select("bin", "n", "sum_pred", "n_pos", "frac_pos")
   }
 
-  def start(spark: SparkSession, source: DataFrame, scoreCol: String,
+  def start(source: DataFrame, scoreCol: String,
       labelCol: String, stateDir: String, reportDir: String,
       checkpointDir: String, bins: Int = 10): StreamingQuery =
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {

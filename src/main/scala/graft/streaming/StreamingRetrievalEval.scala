@@ -49,7 +49,7 @@ object StreamingRetrievalEval {
     * carry (query_id, doc_id, rank); `qrels` is the static
     * (query_id, doc_id, grade) assessment frame.
     */
-  def start(spark: SparkSession, source: DataFrame, qrels: DataFrame,
+  def start(source: DataFrame, qrels: DataFrame,
       k: Int, stateDir: String, checkpointDir: String): StreamingQuery = {
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
       (batch, batchId) =>

@@ -77,7 +77,7 @@ object StreamingRfm {
         .select(col(userCol) +: cols.map(c => col(s"__s.$c").as(c)): _*)))
   }
 
-  def start(spark: SparkSession, source: DataFrame, userCol: String,
+  def start(source: DataFrame, userCol: String,
       tsCol: String, valueCol: String, stateDir: String,
       checkpointDir: String): StreamingQuery =
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {

@@ -31,7 +31,7 @@ object StreamingSceneSegments {
     * `scenesDir/batch=<id>` as (media_id, scene_no, start_w, n_windows,
     * peak_w, peak_energy).
     */
-  def start(spark: SparkSession, source: DataFrame, idCol: String,
+  def start(source: DataFrame, idCol: String,
       payloadCol: String, scenesDir: String, checkpointDir: String,
       windowBytes: Int = 16, cutThreshold: Long = 120,
       decoder: Option[MediaDecoder] = None): StreamingQuery =

@@ -116,7 +116,7 @@ object StreamingSemanticScreen {
     * `(idA, idB, cosine)` pairs — idA stored, idB streamed — into
     * batch-keyed partitions of `pairsDir`.
     */
-  def start(spark: SparkSession, source: DataFrame,
+  def start(source: DataFrame,
       idCol: String, vecCol: String,
       indexDir: String, vecsDir: String, pairsDir: String,
       checkpointDir: String,

@@ -41,7 +41,7 @@ object StreamingSiteTemplate {
   /** Start banking the page stream's block evidence. `source` carries
     * (idCol, htmlCol, hostCol) rows; ids unique across the stream.
     */
-  def start(spark: SparkSession, source: DataFrame, idCol: String,
+  def start(source: DataFrame, idCol: String,
       htmlCol: String, hostCol: String, stateDir: String,
       checkpointDir: String, minWords: Int = 5): StreamingQuery =
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {

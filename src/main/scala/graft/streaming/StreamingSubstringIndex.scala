@@ -62,7 +62,7 @@ object StreamingSubstringIndex {
     LsmParquetState.compact(spark, docsDir, docsLayout(idCol))
   }
 
-  def start(spark: SparkSession, source: DataFrame,
+  def start(source: DataFrame,
       idCol: String, textCol: String,
       indexDir: String, docsDir: String, checkpointDir: String,
       q: Int = 3): StreamingQuery = {

@@ -60,7 +60,7 @@ object StreamingSurvival {
           col("t1").as("__t1")),
       censorHorizon)
 
-  def start(spark: SparkSession, source: DataFrame, keyCol: String,
+  def start(source: DataFrame, keyCol: String,
       tsCol: String, stateDir: String, checkpointDir: String): StreamingQuery =
     LsmParquetState.startOwning(source, checkpointDir, Seq(stateDir)) {
       (batch, batchId) =>

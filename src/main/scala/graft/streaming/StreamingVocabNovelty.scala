@@ -74,7 +74,7 @@ object StreamingVocabNovelty {
   def compactState(spark: SparkSession, tokensDir: String): Unit =
     LsmParquetState.compact(spark, tokensDir, layout)
 
-  def start(spark: SparkSession, source: DataFrame, textCol: String,
+  def start(source: DataFrame, textCol: String,
       tokensDir: String, reportDir: String,
       checkpointDir: String): StreamingQuery = {
     LsmParquetState.startOwning(source, checkpointDir, Seq(tokensDir)) {

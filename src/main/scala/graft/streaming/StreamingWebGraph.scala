@@ -39,7 +39,7 @@ object StreamingWebGraph {
   /** Start banking the page stream's edge evidence. `source` carries
     * (idCol, htmlCol, baseUriCol) rows; ids unique across the stream.
     */
-  def start(spark: SparkSession, source: DataFrame, idCol: String,
+  def start(source: DataFrame, idCol: String,
       htmlCol: String, baseUriCol: String, stateDir: String,
       checkpointDir: String,
       idPattern: String = "/doc/([0-9]+)"): StreamingQuery =

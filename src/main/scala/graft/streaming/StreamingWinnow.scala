@@ -71,7 +71,7 @@ object StreamingWinnow {
   def compactState(spark: SparkSession, indexDir: String): Unit =
     LsmParquetState.compact(spark, indexDir, idxLayout)
 
-  def start(spark: SparkSession, source: DataFrame,
+  def start(source: DataFrame,
       idCol: String, textCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       k: Int = 16, window: Int = 16, minShared: Long = 2,

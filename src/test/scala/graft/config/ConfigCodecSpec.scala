@@ -81,6 +81,58 @@ class ConfigCodecSpec extends AnyFunSuite {
       yaml.replace("maxWriteRowCount: 2000", "maxWriteRowCount: many")))
   }
 
+  test("block scalars carry multi-line whereClause and calculated-column expressions") {
+    val cfg = ConfigCodec.fromYaml(
+      """sourceDB:
+        |  path: /data/src
+        |targetDB:
+        |  path: /data/tgt
+        |tableMigrations:
+        |  - tableName: t
+        |    whereClause: |
+        |      part_key_col_1 = 'abcd'
+        |      AND clust_key_col_2 >= 3000
+        |    calculatedColumns:
+        |      - targetColumn: bucket
+        |        expression: >-
+        |          (short)(abs(row.my_col.hashCode())
+        |          % 32)
+        |""".stripMargin)
+    val t = cfg.tables.head
+    assert(t.whereClause === Some("part_key_col_1 = 'abcd'\nAND clust_key_col_2 >= 3000\n"))
+    assert(t.calculatedColumns ===
+      Seq(CalculatedColumn("bucket", "(short)(abs(row.my_col.hashCode()) % 32)")))
+  }
+
+  test("pageSize outside [1, Int.MaxValue] fails when the config is parsed") {
+    for (bad <- Seq("0", "-5", "3000000000")) {
+      val e = intercept[ConfigCodec.ConfigError](ConfigCodec.fromYaml(
+        yaml.replace("maxWriteRowCount: 2000", s"pageSize: $bad")))
+      assert(e.msg.contains("pageSize"), e.msg)
+    }
+    assert(ConfigCodec.fromYaml(yaml.replace("maxWriteRowCount: 2000",
+      s"pageSize: ${Int.MaxValue}")).tables.head.pageSize === Some(Int.MaxValue))
+  }
+
+  test("a negative pauseMillisBetweenPages fails when the config is parsed") {
+    val e = intercept[ConfigCodec.ConfigError](ConfigCodec.fromYaml(
+      yaml.replace("maxWriteRowCount: 2000", "pauseMillisBetweenPages: -1")))
+    assert(e.msg.contains("pauseMillisBetweenPages"), e.msg)
+    assert(ConfigCodec.fromYaml(yaml.replace("maxWriteRowCount: 2000",
+      "pauseMillisBetweenPages: 0")).tables.head.pauseMillisBetweenPages === Some(0L))
+  }
+
+  test("the shipped example config parses with its declared tables") {
+    val cfg = ConfigCodec.fromYamlFile("config/migration-example.yaml")
+    assert(cfg.tables.map(t => (t.tableName, t.targetTableName, t.writeMode)) === Seq(
+      ("lineitem", None, Upsert),
+      ("orders", Some("orders_bucketed"), Upsert),
+      ("events", Some("events_counters"), CounterIncrement)))
+    assert(cfg.statusIntervalMillis === Some(2000L))
+    assert(cfg.tables.head.filters ===
+      Seq(FieldValueFilter("row.l_quantity >= 30 && row.l_discount < 0.05")))
+  }
+
   test("a config without tableMigrations fails instead of silently doing nothing") {
     // reference-style 'tables:' root key (ADVICE r2): must not parse as an
     // empty migration that "succeeds"

